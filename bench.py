@@ -50,7 +50,7 @@ def main() -> int:
     from __spark_entry__ import queries
     from research_index_backend_spark.session import get_spark
 
-    spark = get_spark(cpus=os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    spark = get_spark()
     qs = queries()
 
     def run(fn):

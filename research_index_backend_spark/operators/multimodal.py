@@ -2,8 +2,7 @@
 
 Beyond the reference (it is text-only), a training-data pipeline carries
 media as `binary` columns with a metadata struct, and runs decode /
-feature-extract / resize / frame-sample as Arrow-batched functions over
-`mapInPandas`. The Spark-side plumbing here — schemas, batch iteration,
+feature-extract as Arrow-batched functions over `mapInPandas`. The Spark-side plumbing here — schemas, batch iteration,
 partition sizing — is real and tested; the actual codec calls are STUBBED
 (image/audio libraries are not in this environment) behind
 `decoder=` hooks with a deterministic fake used in tests.
@@ -16,8 +15,6 @@ Scale design:
 - mapInPandas streams Arrow batches — peak executor memory is
   O(batch payload), tuned via spark.sql.execution.arrow.maxRecordsPerBatch
   (set this low, e.g. 64, for multi-MB media rows).
-- Frame sampling emits 1->N rows; doing it in mapInPandas (an iterator of
-  DataFrames) avoids materializing all frames for a partition at once.
 """
 
 from __future__ import annotations
@@ -51,19 +48,6 @@ FEATURE_SCHEMA = StructType([
     StructField("height", IntegerType()),
     StructField("n_channels", IntegerType()),
     StructField("mean_intensity", DoubleType()),
-])
-
-FRAME_SCHEMA = StructType([
-    StructField("media_id", LongType()),
-    StructField("frame_idx", IntegerType()),
-    StructField("frame_payload", BinaryType()),
-])
-
-RESIZED_SCHEMA = StructType([
-    StructField("media_id", LongType()),
-    StructField("payload", BinaryType()),
-    StructField("width", IntegerType()),
-    StructField("height", IntegerType()),
 ])
 
 
@@ -125,62 +109,3 @@ def extract_features(df: DataFrame,
             yield out
 
     return df.select(id_col, payload_col).mapInPandas(run, FEATURE_SCHEMA)
-
-
-def resize_images(df: DataFrame, width: int, height: int,
-                  resizer: Callable[[bytes, int, int], bytes] | None = None,
-                  payload_col: str = "payload",
-                  id_col: str = "media_id") -> DataFrame:
-    """Resize media payloads to (width, height) via mapInPandas (1 row ->
-    1 row, payload transformed).
-
-    resizer(payload, width, height) -> resized payload bytes; STUB like
-    extract_features (a real implementation wraps PIL/opencv). The output
-    carries the new dimensions as typed metadata so downstream scans can
-    verify/prune without decoding. Arrow batch sizing note: payload rows
-    are large — cap spark.sql.execution.arrow.maxRecordsPerBatch (e.g. 64)
-    so a batch holds O(batch * payload) not O(partition * payload).
-    """
-    _require_decoder(resizer)
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame({
-                "media_id": pdf[id_col].values,
-                "payload": [resizer(p, width, height)
-                            for p in pdf[payload_col]],
-                "width": pd.array([width] * len(pdf), dtype="int32"),
-                "height": pd.array([height] * len(pdf), dtype="int32"),
-            })
-
-    return df.select(id_col, payload_col).mapInPandas(run, RESIZED_SCHEMA)
-
-
-def sample_frames(df: DataFrame, every_n: int = 2, max_frames: int = 4,
-                  splitter: Callable[[bytes], list[bytes]] | None = None,
-                  payload_col: str = "payload",
-                  id_col: str = "media_id") -> DataFrame:
-    """Frame sampling (1 row -> N rows) via mapInPandas.
-
-    splitter(payload) -> list of frame payloads; STUB like extract_features
-    (a real implementation would wrap libav). Sampling keeps every
-    `every_n`-th frame up to `max_frames`.
-    """
-    _require_decoder(splitter)
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, idxs, payloads = [], [], []
-            for mid, payload in zip(pdf[id_col], pdf[payload_col]):
-                frames = splitter(payload)[::every_n][:max_frames]
-                for i, fr in enumerate(frames):
-                    ids.append(mid)
-                    idxs.append(i)
-                    payloads.append(fr)
-            yield pd.DataFrame({
-                "media_id": ids,
-                "frame_idx": pd.array(idxs, dtype="int32"),
-                "frame_payload": payloads,
-            })
-
-    return df.select(id_col, payload_col).mapInPandas(run, FRAME_SCHEMA)

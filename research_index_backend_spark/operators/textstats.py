@@ -24,10 +24,6 @@ def whitespace_tokens(text: Column | str) -> Column:
     return F.filter(F.split(c, r"\s+"), lambda t: t != "")
 
 
-def token_count(text: Column | str) -> Column:
-    return F.size(whitespace_tokens(text))
-
-
 def word_tokens(text: Column | str) -> Column:
     """Word tokenization: alnum/apostrophe runs, lowercased."""
     c = F.col(text) if isinstance(text, str) else text

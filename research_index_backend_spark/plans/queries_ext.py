@@ -179,11 +179,7 @@ def q_graph_pagerank(spark, sf_dir):
     ~1e-12 of a 0.5*1e-4 rounding boundary to flip — astronomically less
     likely than at e6, and ranks have no reason to cluster on boundaries.
 
-    Perf shape: rank frame is |V| rows (tiny vs |E|) -> broadcast_ranks
-    turns the per-iteration edge join into a map-side broadcast join, and
-    checkpoint_every=2 measured fastest at sf0.1 (4.1s vs 5.2s at 3,
-    4.5s at end-only; broadcast build off a shorter lineage wins over
-    fewer eager jobs)."""
+    Perf shape: see the rank-loop policy note in graph.analytics."""
     # BIGINT node ids internally (supplier 2k, part 2k+1; the r10
     # narrowing — see queries_ext5._sym_supplier_edges_i), labels
     # decoded only in the output projection; rank values depend on
@@ -197,8 +193,7 @@ def q_graph_pagerank(spark, sf_dir):
                                     F.col("src").alias("dst")))
     # symmetrized graph -> every node has out-edges -> no dangling mass ->
     # no per-iteration driver round trip
-    pr = pagerank(edges, n_iter=5, handle_dangling=False,
-                  checkpoint_every=2, broadcast_ranks=True)
+    pr = pagerank(edges, n_iter=5, handle_dangling=False)
     return pr.select(
         _decode_node(F.col("id"), "p").alias("id"),
         F.round(F.col("rank") * 1e4).cast("bigint").alias("rank_e4"))
@@ -691,8 +686,7 @@ def q_graph_pagerank_dangling(spark, sf_dir):
     edges = li.select(
         (F.col("l_suppkey").cast("bigint") * 2).alias("src"),
         (F.col("l_partkey").cast("bigint") * 2 + 1).alias("dst"))
-    pr = pagerank(edges, n_iter=5, handle_dangling=True,
-                  checkpoint_every=2, broadcast_ranks=True)
+    pr = pagerank(edges, n_iter=5, handle_dangling=True)
     return pr.select(
         _decode_node(F.col("id"), "p").alias("id"),
         F.round(F.col("rank") * 1e4).cast("bigint").alias("rank_e4"))

@@ -81,7 +81,7 @@ def q_hits_hubs_authorities(spark: SparkSession,
     for it in range(_HITS_ITER):
         # explicit broadcast: the score frame is |V|-row (narrow) and
         # the hint measured 26.7s vs 89.2s AQE sort-merge at the 10x
-        # probe — the pagerank broadcast_ranks tuning; at frame sizes
+        # probe — the pagerank rank-broadcast tuning; at frame sizes
         # past executor memory the hint must come off (documented)
         a = (li.join(F.broadcast(h), "l_suppkey")
              .groupBy("l_partkey").agg(F.sum("h").alias("a")))

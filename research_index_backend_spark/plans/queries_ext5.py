@@ -1719,7 +1719,7 @@ def q_graph_ppr(spark: SparkSession, sf_dir: str) -> DataFrame:
              .filter(F.col("l_suppkey") % 10 == 0)
              .select((F.col("l_suppkey").cast("bigint") * 2).alias("id")))
     pr = personalized_pagerank(edges, seeds, n_iter=_PPR_ITERS,
-                               damping=_PPR_DAMPING, broadcast_ranks=True)
+                               damping=_PPR_DAMPING)
     return pr.select(
         _decode_node(F.col("id"), "p").alias("id"),
         F.round(F.col("rank") * 1e4).cast("bigint").alias("rank_e4"))

@@ -472,6 +472,22 @@ _PQ_K = 5
 _PQ_NQ = 5
 
 
+def _pq_dist_sql(cv: list, s: int) -> str:
+    """Squared distance of the ``__e{i}`` columns of subspace ``s`` to the
+    centroid ``cv``, as one left-fold SQL double expression."""
+    terms = []
+    for j in range(_PQ_SUBDIM):
+        i = s * _PQ_SUBDIM + j + 1
+        v = cv[i - 1]
+        if not math.isfinite(v):    # repr(nan) + "D" is not valid SQL
+            raise ValueError(f"ann_pq_topk: codebook value {v!r} at "
+                             f"dimension {i} is not finite")
+        lit = repr(v) + "D"         # shortest round-trip repr is
+        terms.append(               # parsed back to the same double
+            f"((__e{i} - {lit}) * (__e{i} - {lit}))")
+    return " + ".join(terms)
+
+
 def q_ann_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Product-quantization ANN: vectors compress to 8 one-byte codes
     (one per 8-dim subspace, 16-entry codebook each) and queries rank
@@ -523,7 +539,7 @@ def q_ann_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit(1).cast("bigint").alias("rnk")).limit(0))
 
     def _subdist_py(qv: list, cv: list, s: int) -> float:
-        # same binary64 ops in the same left-fold order as _dist_sql
+        # same binary64 ops in the same left-fold order as _pq_dist_sql
         acc = None
         for j in range(_PQ_SUBDIM):
             i = s * _PQ_SUBDIM + j
@@ -542,17 +558,8 @@ def q_ann_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         f"CAST(element_at(embedding, {i}) AS DOUBLE) AS __e{i}"
         for i in range(1, ndim + 1)])
 
-    def _dist_sql(cv: list, s: int) -> str:
-        terms = []
-        for j in range(_PQ_SUBDIM):
-            i = s * _PQ_SUBDIM + j + 1
-            lit = repr(cv[i - 1]) + "D"    # shortest round-trip repr is
-            terms.append(                  # parsed back to the same double
-                f"((__e{i} - {lit}) * (__e{i} - {lit}))")
-        return " + ".join(terms)
-
     dcols = dims.selectExpr("vec_id", *[
-        f"CAST(FLOOR(({_dist_sql(vecs[c], s)}) * 1.0E6D) AS BIGINT)"
+        f"CAST(FLOOR(({_pq_dist_sql(vecs[c], s)}) * 1.0E6D) AS BIGINT)"
         f" AS __d_{s}_{k}"
         for s in range(_PQ_SUBS) for k, c in enumerate(code_ids)])
     mins = dcols.selectExpr("*", *[

@@ -18,7 +18,8 @@ import os
 
 from pyspark.sql import SparkSession
 
-DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
+# Core count of local[N] sessions: $SPARK_GRAFT_CPUS, else this host's.
+DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS") or str(os.cpu_count() or 1)
 
 
 def get_spark(app_name: str = "research_index_backend_spark",

@@ -75,13 +75,6 @@ def work_url(doi: str) -> str:
     return f"{CROSSREF_API}/works/{quote(doi, safe='')}"
 
 
-def orcid_works_url(orcid: str) -> str:
-    """crossref.ipynb cell 2: works listed by author ORCID."""
-    from urllib.parse import quote
-    return (f"{CROSSREF_API}/works?filter=orcid:{quote(orcid, safe='')}"
-            "&select=DOI,title,prefix,published")
-
-
 def _agency_id(text: str) -> str | None:
     try:
         return json.loads(text)["message"]["agency"]["id"]

@@ -11,7 +11,6 @@ import pytest
 from research_index_backend_spark.sources.crossref import (
     agency_url,
     fetch_crossref,
-    orcid_works_url,
     titles_licenses,
     work_url,
 )
@@ -116,5 +115,3 @@ def test_url_builders():
         "https://api.crossref.org/works/10.1%2Fx/agency"
     assert work_url("10.1/a#b") == \
         "https://api.crossref.org/works/10.1%2Fa%23b"
-    assert orcid_works_url("0000-0002-3363-8620").startswith(
-        "https://api.crossref.org/works?filter=orcid:0000-0002-3363-8620")

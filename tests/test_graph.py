@@ -63,9 +63,9 @@ class TestPageRank:
         """handle_dangling=True on a directed graph WITH sinks: the
         in-plan (crossJoin-broadcast) dangling path must reproduce the
         textbook per-round recurrence exactly (Python reference below)
-        and conserve total rank mass. Sparse checkpoints (cadence 3)
-        must not change the numbers — the old collect()-based path
-        forced cadence 1."""
+        and conserve total rank mass. Sparse checkpoints (cadence
+        CHECKPOINT_EVERY) must not change the numbers — the old
+        collect()-based path forced cadence 1."""
         # 1->2->3 chain plus 4->3: node 3 is a sink holding mass
         edges = spark.createDataFrame(
             [(1, 2), (2, 3), (4, 3)], ["src", "dst"])
@@ -82,8 +82,8 @@ class TestPageRank:
                    for i in ref}
 
         got = {r["id"]: r["rank"] for r in
-               pagerank(edges, n_iter=n_iter, handle_dangling=True,
-                        checkpoint_every=3).collect()}
+               pagerank(edges, n_iter=n_iter,
+                        handle_dangling=True).collect()}
         for i in ref:
             assert got[i] == pytest.approx(ref[i], rel=1e-12), i
         assert sum(got.values()) == pytest.approx(1.0, abs=1e-9)

@@ -1,5 +1,5 @@
 """Multimodal binary-column plumbing: metadata extraction is JVM-real;
-decode/frame-split run through mapInPandas with injected deterministic
+decode runs through mapInPandas with injected deterministic
 fakes (codecs are stubbed in this environment by design)."""
 
 from __future__ import annotations
@@ -13,7 +13,6 @@ from pyspark.sql.types import BinaryType, LongType, StructField, StructType
 from research_index_backend_spark.operators.multimodal import (
     attach_binary_metadata,
     extract_features,
-    sample_frames,
 )
 
 SCHEMA = StructType([
@@ -48,46 +47,6 @@ def test_extract_features_fake_decoder(spark, media):
     assert got[3]["n_channels"] == 3
 
 
-def test_sample_frames_one_to_n(spark, media):
-    def fake_splitter(payload: bytes) -> list[bytes]:
-        # one "frame" per byte
-        return [payload[i:i + 1] for i in range(len(payload))]
-
-    out = sample_frames(media, every_n=2, max_frames=3,
-                        splitter=fake_splitter)
-    rows = out.filter(F.col("media_id") == 0).orderBy("frame_idx").collect()
-    # 8 bytes -> frames 0,2,4,6 -> capped at 3
-    assert [r["frame_idx"] for r in rows] == [0, 1, 2]
-    assert rows[1]["frame_payload"] == bytes([0])
-
-
 def test_stubbed_decode_raises(spark, media):
     with pytest.raises(NotImplementedError):
         extract_features(media, decoder=None)
-    with pytest.raises(NotImplementedError):
-        sample_frames(media, splitter=None)
-
-
-def test_resize_images_fake_resizer(spark, media):
-    def fake_resizer(payload: bytes, w: int, h: int) -> bytes:
-        # deterministic fake: truncate/pad payload to w*h bytes
-        return (payload * (w * h))[: w * h]
-
-    from research_index_backend_spark.operators.multimodal import (
-        resize_images,
-    )
-    rows = resize_images(media, 4, 3, resizer=fake_resizer).collect()
-    assert len(rows) == media.count()
-    for r in rows:
-        assert len(r["payload"]) == 12
-        assert (r["width"], r["height"]) == (4, 3)
-
-
-def test_resize_stub_raises(spark, media):
-    import pytest as _pytest
-
-    from research_index_backend_spark.operators.multimodal import (
-        resize_images,
-    )
-    with _pytest.raises(NotImplementedError):
-        resize_images(media, 4, 3, resizer=None)

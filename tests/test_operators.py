@@ -506,73 +506,6 @@ class TestCosineBackends:
         assert both.filter(F.col("fold") != F.col("np")).isEmpty()
 
 
-class TestCompaction:
-    def test_compact_preserves_content_and_reduces_files(self, spark,
-                                                         tmp_path):
-        from research_index_backend_spark.operators.compact import (
-            compact_parquet)
-        src = spark.read.parquet("/root/testdata/sf0.001/orders.parquet")
-        tdir = tmp_path / "orders"
-        # fragment: 40 tiny files
-        src.repartition(40).write.parquet(str(tdir))
-        before = sorted(map(tuple, spark.read.parquet(str(tdir)).collect()))
-        n_before = len(list(tdir.glob("*.parquet")))
-        assert n_before >= 40
-        compact_parquet(spark, str(tdir), target_mb=128)
-        files = list(tdir.glob("*.parquet"))
-        assert len(files) == 1  # tiny table -> one target-sized file
-        after = sorted(map(tuple, spark.read.parquet(str(tdir)).collect()))
-        assert after == before
-        assert not (tmp_path / "orders.old").exists()
-        assert not (tmp_path / "orders.new").exists()
-
-    def test_compact_sort_clusters_rows(self, spark, tmp_path):
-        """sort_cols must cluster rows inside the output file so row-group
-        min/max pruning has something to prune on."""
-        from research_index_backend_spark.operators.compact import (
-            compact_parquet)
-        src = spark.read.parquet("/root/testdata/sf0.001/orders.parquet")
-        tdir = tmp_path / "orders"
-        src.repartition(8).write.parquet(str(tdir))
-        compact_parquet(spark, str(tdir), target_mb=128,
-                        sort_cols=["o_orderkey"])
-        import pyarrow.parquet as pq
-        f = list(tdir.glob("*.parquet"))[0]
-        keys = pq.read_table(f, columns=["o_orderkey"])["o_orderkey"] \
-            .to_pylist()
-        assert keys == sorted(keys)
-
-    def test_compact_preserves_partition_layout(self, spark, tmp_path):
-        """Compacting a partitionBy-written dataset must keep the
-        key=value directory scheme (and so PartitionFilters pruning),
-        not flatten partition columns into data columns (round-4
-        ADVICE)."""
-        from research_index_backend_spark.operators.compact import (
-            compact_parquet)
-        src = spark.read.parquet("/root/testdata/sf0.001/orders.parquet")
-        tdir = tmp_path / "orders_part"
-        (src.repartition(10).write.partitionBy("o_orderpriority")
-         .parquet(str(tdir)))
-        before = sorted(map(tuple, spark.read.parquet(str(tdir))
-                            .select("o_orderkey", "o_orderpriority")
-                            .collect()))
-        n_before = len(list(tdir.rglob("*.parquet")))
-        compact_parquet(spark, str(tdir), target_mb=128)
-        # layout survives: key=value dirs still present, fewer files
-        part_dirs = [d.name for d in tdir.iterdir() if d.is_dir()]
-        assert all("=" in d for d in part_dirs) and part_dirs
-        assert len(list(tdir.rglob("*.parquet"))) < n_before
-        after = sorted(map(tuple, spark.read.parquet(str(tdir))
-                           .select("o_orderkey", "o_orderpriority")
-                           .collect()))
-        assert after == before
-        # pruning still works: a partition filter reaches the scan
-        plan = (spark.read.parquet(str(tdir))
-                .filter(F.col("o_orderpriority") == "1-URGENT")
-                ._jdf.queryExecution().executedPlan().toString())
-        assert "PartitionFilters: [" in plan and "o_orderpriority" in plan
-
-
 class TestBucketedJoin:
     def test_bucketed_join_has_no_shuffle(self, spark):
         """The point of bucketing: joining two tables bucketed on the

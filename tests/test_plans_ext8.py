@@ -7,6 +7,7 @@ from __future__ import annotations
 import contextlib
 import io
 
+import pytest
 from pyspark.sql import functions as F
 
 from research_index_backend_spark.plans import queries_ext8 as Q8
@@ -86,6 +87,14 @@ class TestPQ:
         p = plan_of(Q8.q_ann_pq_topk(spark, SF))
         assert "CartesianProduct" not in p
         assert "Join" not in p
+
+    @pytest.mark.parametrize("bad", [float("nan"), float("inf")])
+    def test_pq_dist_sql_rejects_non_finite(self, bad):
+        cv = [0.5] * (Q8._PQ_SUBS * Q8._PQ_SUBDIM)
+        assert "0.5D" in Q8._pq_dist_sql(cv, 0)
+        cv[3] = bad
+        with pytest.raises(ValueError, match=f"{bad!r} at dimension 4"):
+            Q8._pq_dist_sql(cv, 0)
 
     def test_pq_topk_shape_and_selfexclusion(self, spark):
         rows = Q8.q_ann_pq_topk(spark, SF).collect()

@@ -81,7 +81,7 @@ def main() -> int:
     from research_index_backend_spark.session import get_spark
 
     names = sys.argv[1:] or list(queries().keys())
-    spark = get_spark(cpus=os.environ.get("SPARK_GRAFT_CPUS", "8"))
+    spark = get_spark()
 
     con = duckdb.connect()
     for t in TABLES:

@@ -44,7 +44,7 @@ def main(names: list[str]) -> int:
     from __spark_entry__ import oracle_sql, queries
 
     from research_index_backend_spark.session import get_spark
-    spark = get_spark(cpus=os.environ.get("SPARK_GRAFT_CPUS", "8"))
+    spark = get_spark()
     con = duckdb.connect()
     for t in TABLES:
         con.execute(

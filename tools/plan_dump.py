@@ -35,7 +35,7 @@ def main() -> int:
     from research_index_backend_spark.session import get_spark  # noqa: E402
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    spark = get_spark(cpus=os.environ.get("SPARK_GRAFT_CPUS", "8"))
+    spark = get_spark()
     os.makedirs(out_dir, exist_ok=True)
     mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
         "formatted")

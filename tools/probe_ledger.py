@@ -109,7 +109,7 @@ def main(argv: list[str]) -> None:
 
     x10, x100 = load(x10_files), load(x100_files)
 
-    spark = get_spark(cpus=os.environ.get("SPARK_GRAFT_CPUS", "8"))
+    spark = get_spark()
     qs = queries()
     info = classify(spark, qs, "/root/testdata/sf0.01")
 

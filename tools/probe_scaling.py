@@ -114,7 +114,8 @@ def main() -> int:
     print(f"wrote {path}")
     for name, d in sorted(per_query.items(),
                           key=lambda kv: -(kv[1]["low_over_high"] or 0)):
-        print(f"{name:32s} c32={d['c32_sec']:8.2f} c8={d['c8_sec']:8.2f} "
+        hi, lo = d[f"c{CPUS_HIGH}_sec"], d[f"c{CPUS_LOW}_sec"]
+        print(f"{name:32s} c{CPUS_HIGH}={hi:8.2f} c{CPUS_LOW}={lo:8.2f} "
               f"ratio={d['low_over_high']}")
     return 0
 

@@ -28,7 +28,6 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
 
 
 def main() -> None:
@@ -43,7 +42,7 @@ def main() -> None:
         read_events_stream,
     )
 
-    spark = get_spark(cpus=CPUS)
+    spark = get_spark()
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
 
     work = tempfile.mkdtemp(prefix="stream_bench_")

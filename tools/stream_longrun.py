@@ -155,8 +155,7 @@ def main(target_batches: int = 2000,
          out_path: str = "BENCH_STREAM_LONGRUN.json") -> None:
     from research_index_backend_spark.session import get_spark
 
-    spark = get_spark(app_name="rib-stream-longrun",
-                      cpus=os.environ.get("SPARK_GRAFT_CPUS", "8"))
+    spark = get_spark(app_name="rib-stream-longrun")
     # small shuffle width (default 2): per-batch overhead of the Python
     # state workers scales with partitions; narrow keeps micro-batches
     # fast so thousands fit the drive window (state semantics are

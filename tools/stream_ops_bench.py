@@ -33,7 +33,7 @@ def main(n_batches: int = 8) -> None:
         topk_monitor_stream,
     )
 
-    spark = get_spark(cpus=os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    spark = get_spark()
     e = _t(spark, SF_DIR, "events").select(
         "event_id", "user_id", "event_type", "ts_ns",
         F.expr("CAST(round(value * 100) AS BIGINT)").alias("v_e2"))

@@ -231,7 +231,7 @@ def main() -> None:
 
     out_json = sys.argv[1] if len(sys.argv) > 1 else \
         "BENCH_STREAM_RECOVERY.json"
-    spark = get_spark(cpus=os.environ.get("SPARK_GRAFT_CPUS", "8"))
+    spark = get_spark()
     work = tempfile.mkdtemp(prefix="stream_recovery_")
     try:
         src = os.path.join(work, "events_src")
