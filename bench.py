@@ -8,8 +8,10 @@ The stdout line is kept under 1900 characters (the recording harness
 retains only the last 2000 chars of stdout): queries are listed slowest
 first and the fastest entries are dropped once the line would overflow,
 with the dropped remainder summarized in queries_omitted/omitted_sec.
-Full per-query timings are always written to BENCH_FULL.json alongside
-this script.
+Full per-query timings are always written alongside this script to
+the record named by record_path(): BENCH_FULL_c{cpus}.json at sf0.1,
+BENCH_FULL_sf{sf}_c{cpus}.json otherwise, so a run on one core count
+never overwrites another's record.
 
 Each query executes fully through the noop sink (format("noop")) — the
 whole plan runs, nothing is collected to the driver, so timings measure
@@ -46,11 +48,20 @@ def _sf_from_dir(d: str) -> float:
     return float(m.group(1)) if m else -1.0
 
 
+def record_path(sf: float, cpus: str) -> str:
+    """Full-record file for a bench at scale factor `sf` on `cpus` cores."""
+    name = (f"BENCH_FULL_c{cpus}.json" if sf == 0.1
+            else f"BENCH_FULL_sf{sf}_c{cpus}.json")
+    return os.path.join(os.path.dirname(os.path.abspath(__file__)), name)
+
+
 def main() -> int:
     from __spark_entry__ import queries
-    from research_index_backend_spark.session import get_spark
+    from research_index_backend_spark.session import DEFAULT_CPUS, get_spark
 
     spark = get_spark()
+    sf = _sf_from_dir(SF_DIR)
+    full_path = record_path(sf, DEFAULT_CPUS)
     qs = queries()
 
     def run(fn):
@@ -113,16 +124,15 @@ def main() -> int:
     # GC/codegen-cache pressure and min-of-2 still reported bigram_topk
     # at 1.82s in r6 when its isolated steady state is 0.92s. A query is
     # suspect when its current best is >1.4x its own previous-run record
-    # (BENCH_FULL.json from the last bench, read before we overwrite it)
-    # — the one signal that catches BOTH samples being inflated.
-    # Re-timing just the suspects (capped) buys min-of-3 where it
-    # matters for ~1/10 the extra wall time of a full third pass.
+    # (this SF and core count's record from the last bench, read before
+    # we overwrite it) — the one signal that catches BOTH samples being
+    # inflated. Re-timing just the suspects (capped) buys min-of-3 where
+    # it matters for ~1/10 the extra wall time of a full third pass.
     prior: dict[str, float] = {}
     try:
-        with open(os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                               "BENCH_FULL.json")) as fh:
+        with open(full_path) as fh:
             prev = json.load(fh)
-        if prev.get("sf") == _sf_from_dir(SF_DIR):
+        if prev.get("sf") == sf:
             prior = {n: t for n, t in prev.get("queries", {}).items()
                      if isinstance(t, (int, float)) and t > 0}
     except (OSError, ValueError):
@@ -141,19 +151,13 @@ def main() -> int:
             pass
 
     total = round(sum(t for t in timings.values() if t >= 0), 3)
-    sf = _sf_from_dir(SF_DIR)
 
-    # Full per-query detail, for humans and BENCH_HISTORY.md. The bare
-    # BENCH_FULL.json name is the sf0.1 RECORD (probe_10x and the
-    # noise-suspect pass read it as the steady-state prior); a bench at
-    # any other SF writes a suffixed file so a quick sf0.001 smoke run
-    # can't clobber the record.
+    # Full per-query detail, for humans and BENCH_HISTORY.md. The sf0.1
+    # record of each core count is what probe_10x and the noise-suspect
+    # pass read as the steady-state prior; a bench at any other SF writes
+    # an sf-suffixed file so a quick sf0.001 smoke run can't clobber it.
     full = {"metric": "total_query_sec", "value": total, "unit": "sec",
-            "queries": timings, "sf": sf}
-    full_name = ("BENCH_FULL.json" if sf == 0.1
-                 else f"BENCH_FULL_sf{sf}.json")
-    full_path = os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                             full_name)
+            "queries": timings, "sf": sf, "cpus": int(DEFAULT_CPUS)}
     try:
         with open(full_path, "w") as fh:
             json.dump(full, fh, indent=1, sort_keys=True)
@@ -174,7 +178,7 @@ def main() -> int:
         return json.dumps({
             "metric": "total_query_sec", "value": total, "unit": "sec",
             "queries": {n: round(timings[n], 2) for n in keep},
-            "sf": sf, "n_queries": len(timings),
+            "sf": sf, "cpus": int(DEFAULT_CPUS), "n_queries": len(timings),
             "queries_omitted": len(omit),
             "omitted_sec": round(
                 sum(timings[n] for n in omit if timings[n] >= 0), 2),

@@ -6,39 +6,111 @@ iterative algorithms. PySpark has no GraphX bindings, so these are
 Pregel-style DataFrame iterations — the idiomatic Python equivalent
 (SURVEY.md §1 note).
 
-Scale design:
-- Each iteration is one shuffle (join on the edge src). localCheckpoint()
-  after every round truncates the lineage — without it the plan doubles
-  per iteration and the driver OOMs on plan size long before data size.
-- Convergence is detected with a count() of changed labels — a tiny
-  aggregate, but a full pass; at 100 TB run a fixed iteration budget with
-  a periodic convergence probe instead (max_iter caps it here).
-- Label propagation converges in O(graph diameter) rounds. Near-clique
-  dedup graphs converge in 2-3; long chains are the worst case — the
-  alternating large-star/small-star variant (Kiveris et al., "Connected
-  Components in MapReduce and Beyond") halves rounds; noted as the upgrade
-  path, not needed at current scale.
+Scale design: every vertex-centric loop (PageRank and its personalized /
+weighted variants, min-label components, label propagation, HITS, BFS
+and shortest paths) runs through superstep(), the Pregelix shape (VLDB
+2014): vertex state joined with messages over an edge relation stored
+once, then a combinable group-by. Label propagation for components
+converges in O(graph diameter) rounds; the alternating large-star /
+small-star variant below (Kiveris et al.) needs O(log n) rounds on long
+chains.
 """
 
 from __future__ import annotations
 
+import warnings
+from collections.abc import Callable
+
 from pyspark import StorageLevel
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-# Rank-loop policy of pagerank() and personalized_pagerank():
-# - localCheckpoint the pagerank() rank frame every CHECKPOINT_EVERY rounds
-#   (and after the last) instead of every round. Each checkpoint is an
-#   eager job; between checkpoints lineage grows by k cheap stages. k=2
-#   measured fastest for graph_pagerank at sf0.1 (4.1s vs 5.2s at 3, 4.5s
-#   at end-only): the broadcast build off a shorter lineage wins over fewer
-#   eager jobs.
-# - hash-broadcast the rank frame (and the per-round contributions) into
-#   the joins. They are |V| rows vs the edge list's |E|; while |V| fits in
-#   a broadcast (<10M rows usually does, <100M does not), the
-#   per-iteration edges-shuffle becomes a map-side broadcast join and the
-#   only shuffle left is the (small) groupBy(dst) aggregate.
-CHECKPOINT_EVERY = 2
+# Superstep policy, owned here so no caller picks its own:
+# - edges: stored once per loop, DISK_ONLY — |E|-scale, written once and
+#   re-read sequentially each round, so the OS page cache keeps it hot
+#   off-heap; the default on-heap cache OOM'd the 16g local harness at
+#   the r10 100x probe. States use the same level for the same reason.
+# - messages: the sending vertex state is broadcast-hinted into the edge
+#   join. It is |V| rows against the edge list's |E|, so the per-round
+#   edge shuffle becomes a map-side broadcast join and the only shuffle
+#   left is the combinable per-destination aggregate (HITS measured
+#   26.7s vs 89.2s sort-merge at the 10x probe).
+# - cadence: the state is checkpointed on entry, every CHECKPOINT_EVERY
+#   rounds and after the last round. A loop with an active set
+#   (frontier, changed vertices) stops once it is empty, tested on
+#   checkpoint rounds only. 1 beat 2 on 9 of the 10 ported rows at
+#   sf0.1 (4 cores, interleaved min-of-5, sum of mins 45.9s vs 51.7s):
+#   an uncheckpointed state is read by both the broadcast sender side
+#   and the update, so it is computed twice. Fully lazy state measured
+#   1.4-2.5x more CPU per query.
+CHECKPOINT_EVERY = 1
+
+
+def superstep(edges: DataFrame, init: Callable[[DataFrame], DataFrame],
+              key: list[str], message: Column,
+              combine: Callable[[Column], Column],
+              update: Callable[[DataFrame, DataFrame], DataFrame],
+              rounds: int, active: str | None = None) -> DataFrame:
+    """Run up to `rounds` Pregel supersteps and return the final state.
+
+    edges:   (src, dst, *attrs); stored once, attrs readable by `message`.
+    init:    stored edges -> initial vertex state.
+    key:     the state's vertex key columns. The last one is matched to
+             edges.src and receives edges.dst; the others ride along
+             with each message (a per-seed (seed, id) state).
+    message: Column over a (sender state x out-edge) row.
+    combine: aggregate function folding one destination's messages,
+             e.g. F.sum or F.min.
+    update:  (state, msgs) -> next state; msgs holds the key columns and
+             the combined "msg".
+    active:  name of a boolean state column marking the vertices that
+             send next round; without it every vertex sends and the loop
+             runs all `rounds`.
+    """
+    *ride, node = key
+    edges = edges.localCheckpoint(storageLevel=StorageLevel.DISK_ONLY)
+    state = init(edges).localCheckpoint(storageLevel=StorageLevel.DISK_ONLY)
+    for i in range(rounds):
+        senders = state if active is None else state.filter(F.col(active))
+        msgs = (edges.join(F.broadcast(senders), F.col("src") == F.col(node))
+                .groupBy(*ride, F.col("dst").alias(node))
+                .agg(combine(message).alias("msg")))
+        state = update(state, msgs)
+        last = i == rounds - 1
+        if (i + 1) % CHECKPOINT_EVERY == 0 or last:
+            state = state.localCheckpoint(
+                storageLevel=StorageLevel.DISK_ONLY)
+            if (active is not None and not last
+                    and state.filter(F.col(active)).isEmpty()):
+                break
+    return state
+
+
+def relax(state: DataFrame, msgs: DataFrame) -> DataFrame:
+    """superstep() update for (*key, d, active) states that keep the
+    least value offered: Bellman-Ford min-plus relaxation, and min-label
+    propagation. A vertex is active when this round reached or lowered
+    it, so only those send next round — the rows equal sending from every
+    vertex, whose unchanged values were already absorbed the round
+    before."""
+    key = [c for c in state.columns if c not in ("d", "active")]
+    return (state.join(msgs, key, "full_outer")
+            .select(*key, F.least("d", "msg").alias("d"),
+                    F.coalesce(F.col("msg") < F.col("d"),
+                               F.col("d").isNull()).alias("active")))
+
+
+def symmetrize(edges: DataFrame, src: str, dst: str) -> DataFrame:
+    """(src, dst, *attrs) rows in both orientations, every other column
+    of `edges` carried as an edge attribute. ONE pass over `edges`
+    (explode, not a self-union): the upstream plan that produced them
+    (e.g. the whole MinHash-LSH pipeline) then runs once, inside the
+    superstep's edge checkpoint."""
+    attrs = [c for c in edges.columns if c not in (src, dst)]
+    both = F.array(
+        F.struct(F.col(src).alias("src"), F.col(dst).alias("dst"), *attrs),
+        F.struct(F.col(dst).alias("src"), F.col(src).alias("dst"), *attrs))
+    return edges.select(F.explode(both).alias("e")).select("e.*")
 
 
 def degrees(edges: DataFrame, src: str = "src", dst: str = "dst") -> DataFrame:
@@ -47,6 +119,13 @@ def degrees(edges: DataFrame, src: str = "src", dst: str = "dst") -> DataFrame:
     sym = edges.select(F.col(src).alias("id")).unionAll(
         edges.select(F.col(dst).alias("id")))
     return sym.groupBy("id").agg(F.count(F.lit(1)).alias("degree"))
+
+
+def _nonconverged(on_nonconverged: str, msg: str) -> None:
+    if on_nonconverged == "raise":
+        raise RuntimeError(msg)
+    if on_nonconverged == "warn":
+        warnings.warn(msg, RuntimeWarning, stacklevel=3)
 
 
 def connected_components(edges: DataFrame, nodes: DataFrame | None = None,
@@ -65,55 +144,21 @@ def connected_components(edges: DataFrame, nodes: DataFrame | None = None,
 
     Returns (id, component).
     """
-    # Materialize the edge list ONCE: without this the upstream plan that
-    # produced the edges (e.g. the whole MinHash-LSH pipeline) re-executes
-    # on every iteration — the difference between O(iters * upstream) and
-    # O(upstream + iters * join). Two checkpoints on purpose: the
-    # symmetrize union references `edges` TWICE, so the upstream pipeline
-    # would run twice inside the sym job without the first one.
-    edges = edges.select(src, dst).localCheckpoint()
-    sym = (
-        edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-        .unionAll(edges.select(F.col(dst).alias("a"), F.col(src).alias("b")))
-        .distinct()
-    ).localCheckpoint()
-    if nodes is None:
-        node_ids = sym.select(F.col("a").alias("id")).distinct()
-    else:
-        node_ids = nodes.select(F.col(nodes.columns[0]).alias("id")).distinct()
+    def init(e: DataFrame) -> DataFrame:
+        ids = (e.select(F.col("src").alias("id")) if nodes is None
+               else nodes.select(F.col(nodes.columns[0]).alias("id")))
+        return ids.distinct().select("id", F.col("id").alias("d"),
+                                     F.lit(True).alias("active"))
 
-    comp = node_ids.withColumn("component", F.col("id")).localCheckpoint()
-    converged = False
-    for _ in range(max_iter):
-        nbr_min = (
-            sym.join(comp, sym.b == comp.id)
-            .groupBy("a").agg(F.min("component").alias("nbr_min"))
-        )
-        nxt = (
-            comp.join(nbr_min, comp.id == nbr_min.a, "left")
-            .select(
-                "id",
-                F.least(F.col("component"),
-                        F.coalesce("nbr_min", F.col("component")))
-                .alias("component"),
-                F.col("component").alias("__prev"),
-            )
-        ).localCheckpoint()  # truncate lineage BEFORE the convergence count
-        changed = nxt.filter(F.col("component") != F.col("__prev")).count()
-        comp = nxt.drop("__prev")
-        if changed == 0:
-            converged = True
-            break
-    if not converged:
-        msg = (f"connected_components did not converge within {max_iter} "
-               f"iterations (graph diameter exceeds the budget); labels "
-               f"are TRUNCATED, not final")
-        if on_nonconverged == "raise":
-            raise RuntimeError(msg)
-        if on_nonconverged == "warn":
-            import warnings
-            warnings.warn(msg, RuntimeWarning, stacklevel=2)
-    return comp
+    # min-label propagation is relax() with a zero-weight message
+    comp = superstep(symmetrize(edges, src, dst).distinct(), init, ["id"],
+                     F.col("d"), F.min, relax, max_iter, active="active")
+    if not comp.filter("active").isEmpty():
+        _nonconverged(on_nonconverged,
+                      f"connected_components did not converge within "
+                      f"{max_iter} iterations (graph diameter exceeds the "
+                      f"budget); labels are TRUNCATED, not final")
+    return comp.select("id", F.col("d").alias("component"))
 
 
 def connected_components_star(edges: DataFrame,
@@ -192,13 +237,9 @@ def connected_components_star(edges: DataFrame,
             converged = True
             break
     if not converged:
-        msg = (f"connected_components_star did not converge within "
-               f"{max_iter} rounds; labels are TRUNCATED, not final")
-        if on_nonconverged == "raise":
-            raise RuntimeError(msg)
-        if on_nonconverged == "warn":
-            import warnings
-            warnings.warn(msg, RuntimeWarning, stacklevel=2)
+        _nonconverged(on_nonconverged,
+                      f"connected_components_star did not converge within "
+                      f"{max_iter} rounds; labels are TRUNCATED, not final")
     # fixpoint edges are (member, component-min) stars; roots and
     # isolated nodes map to themselves
     return (all_nodes.join(e.select(F.col("u").alias("id"),
@@ -208,131 +249,61 @@ def connected_components_star(edges: DataFrame,
                     .alias("component")))
 
 
-def pagerank(edges: DataFrame, src: str = "src", dst: str = "dst",
-             n_iter: int = 10, damping: float = 0.85,
-             handle_dangling: bool = True) -> DataFrame:
-    """Fixed-iteration PageRank on a directed edge list. Returns (id, rank).
 
-    Fixed iterations, not convergence-tested — the usual choice at scale
-    (each round is one shuffle on src). Dangling mass (rank sitting on
-    sink nodes) is redistributed uniformly each round, IN-PLAN: a 1-row
-    aggregate of sink-node rank is crossJoin-broadcast into the rank
-    update, so the loop is pure lazy shuffles with no driver round-trip
-    and no eager job per round (round-4 VERDICT: the old collect()-based
-    path forced a checkpoint every round). Pass handle_dangling=False when
-    every node is known to have out-edges (e.g. a symmetrized graph) to
-    skip the extra aggregate entirely.
 
-    Perf shape: see the rank-loop policy note above CHECKPOINT_EVERY.
+def pagerank(edges: DataFrame, n_iter: int = 10, damping: float = 0.85,
+             seeds: DataFrame | None = None,
+             share: Column | None = None) -> DataFrame:
+    """Fixed-iteration PageRank on a directed (src, dst, *attrs) edge
+    list. Returns (id, rank).
+
+    seeds: optional 1-column frame of node ids. The restart vector is
+        w / z with w = 1 per node (uniform) or w = is_seed (personalized:
+        "rank nodes near THESE nodes"), and z = sum(w).
+    share: what a node sends along one out-edge; the default
+        rank / out_deg splits rank evenly, a weighted graph passes e.g.
+        rank * p for an edge attribute p.
+
+    Fixed iterations, not convergence-tested — the usual choice at scale.
+    Rank sitting on sink nodes (dangling mass) goes where the restart
+    mass goes, IN-PLAN: a 1-row aggregate crossJoin-broadcast into the
+    update, no driver round-trip. On a graph where every node has
+    out-edges it is exactly 0.0 and leaves the ranks unchanged. w and z
+    ride in the state, so the restart term is (1-d) * w / z in the same
+    IEEE operation order as the oracles' (1-d)/n and (1-d)*is_seed/|S|.
     """
-    # Materialize edges+degrees once — every iteration joins them, and
-    # without the checkpoint the upstream edge derivation re-executes per
-    # round (see connected_components note). out_deg rides along in the
-    # base frame so each iteration is ONE join with ranks, not two.
-    # DISK_ONLY: |E|-scale, written once and re-read sequentially per
-    # iteration — OS page cache keeps it RAM-hot off-heap; the default
-    # on-heap cache OOM'd the 16g local harness at the r10 100x probe.
-    edges = edges.select(src, dst).localCheckpoint(
-        storageLevel=StorageLevel.DISK_ONLY)
-    nodes = (edges.select(F.col(src).alias("id"))
-             .unionAll(edges.select(F.col(dst).alias("id")))
-             .distinct())
-    out_deg = edges.groupBy(F.col(src).alias("id")).agg(
-        F.count(F.lit(1)).alias("out_deg"))
-    base = (nodes.join(out_deg, "id", "left")
-            .select("id", F.coalesce("out_deg", F.lit(0)).alias("out_deg"))
-            ).localCheckpoint()
-    n = base.count()
-    ranks = base.withColumn("rank", F.lit(1.0 / n))
-    for i in range(n_iter):
-        shares = (ranks.filter(F.col("out_deg") > 0)
-                  .select("id", (F.col("rank") / F.col("out_deg"))
-                          .alias("share")))
-        contrib = (
-            edges.join(F.broadcast(shares), edges[src] == F.col("id"))
-            .groupBy(F.col(dst).alias("id")).agg(F.sum("share").alias("in_sum"))
-        )
-        nxt = base.join(F.broadcast(contrib), "id", "left")
-        if handle_dangling:
-            # sink-node rank mass as a 1-row aggregate folded in-plan via
-            # a broadcast cross join — NOT a collect(): the loop stays
-            # lazy, no per-round driver sync or eager job. The dangling
-            # branch reads `ranks` a second time (shares is the first),
-            # which is why the checkpoint cadence matters more here —
-            # between checkpoints the uncheckpointed plan is walked by
-            # both consumers.
-            dang = (ranks.filter(F.col("out_deg") == 0)
+    def init(e: DataFrame) -> DataFrame:
+        nodes = (e.select(F.col("src").alias("id"))
+                 .unionAll(e.select(F.col("dst").alias("id"))).distinct())
+        out_deg = e.groupBy(F.col("src").alias("id")).agg(
+            F.count(F.lit(1)).alias("out_deg"))
+        base = nodes.join(out_deg, "id", "left")
+        w = F.lit(1)
+        if seeds is not None:
+            base = base.join(seeds.toDF("id").withColumn("__seed", F.lit(1)),
+                             "id", "left")
+            w = F.coalesce("__seed", F.lit(0))
+        base = base.select("id", F.coalesce("out_deg", F.lit(0))
+                           .alias("out_deg"), w.alias("w"))
+        return (base.crossJoin(F.broadcast(base.agg(F.sum("w").alias("z"))))
+                .withColumn("rank",
+                            F.col("w").cast("double") / F.col("z")))
+
+    def update(state: DataFrame, msgs: DataFrame) -> DataFrame:
+        dangling = (state.filter(F.col("out_deg") == 0)
                     .agg(F.coalesce(F.sum("rank"), F.lit(0.0))
                          .alias("__dangling")))
-            ranks = (
-                nxt.crossJoin(F.broadcast(dang))
-                .select("id", "out_deg",
-                        (F.lit((1 - damping) / n)
+        w, z = F.col("w"), F.col("z")
+        return (state.join(F.broadcast(msgs), "id", "left")
+                .crossJoin(F.broadcast(dangling))
+                .select("id", "out_deg", "w", "z",
+                        (F.lit(1.0 - damping) * w / z
                          + F.lit(damping)
-                         * (F.coalesce("in_sum", F.lit(0.0))
-                            + F.col("__dangling") / F.lit(float(n))))
-                        .alias("rank"))
-            )
-        else:
-            ranks = nxt.select(
-                "id", "out_deg",
-                (F.lit((1 - damping) / n)
-                 + F.lit(damping) * F.coalesce("in_sum", F.lit(0.0)))
-                .alias("rank"))
-        if (i + 1) % CHECKPOINT_EVERY == 0 or i == n_iter - 1:
-            ranks = ranks.localCheckpoint()
-    return ranks.select("id", "rank")
+                         * (F.coalesce("msg", F.lit(0.0))
+                            + F.col("__dangling") * w / z))
+                        .alias("rank")))
 
-
-def personalized_pagerank(edges: DataFrame, seeds: DataFrame,
-                          src: str = "src", dst: str = "dst",
-                          n_iter: int = 3,
-                          damping: float = 0.85) -> DataFrame:
-    """Personalized (topic-sensitive) PageRank: the restart vector is
-    concentrated on `seeds` (a 1-column DataFrame of node ids) instead
-    of uniform — the recommendation/similarity variant ("rank nodes
-    near THESE nodes"). Returns (id, rank).
-
-    Same per-iteration shape as pagerank(): one join of the edge list
-    with the rank shares, one groupBy(dst) aggregate. The restart term
-    is (1-d)/|S| on seed nodes and 0 elsewhere — the seed flag rides in
-    the checkpointed base frame, so personalization costs nothing per
-    round. Expects a graph where every node has out-edges (symmetrize
-    first), as with handle_dangling=False.
-    """
-    # DISK_ONLY: |E|-scale, written once and re-read sequentially per
-    # iteration — OS page cache keeps it RAM-hot off-heap; the default
-    # on-heap cache OOM'd the 16g local harness at the r10 100x probe.
-    edges = edges.select(src, dst).localCheckpoint(
-        storageLevel=StorageLevel.DISK_ONLY)
-    nodes = (edges.select(F.col(src).alias("id"))
-             .unionAll(edges.select(F.col(dst).alias("id")))
-             .distinct())
-    out_deg = edges.groupBy(F.col(src).alias("id")).agg(
-        F.count(F.lit(1)).alias("out_deg"))
-    seed_ids = seeds.toDF("id")
-    base = (nodes.join(out_deg, "id", "left")
-            .join(seed_ids.withColumn("__seed", F.lit(1)), "id", "left")
-            .select("id", F.coalesce("out_deg", F.lit(0)).alias("out_deg"),
-                    F.coalesce("__seed", F.lit(0)).alias("is_seed"))
-            ).localCheckpoint()
-    n_seeds = base.agg(F.sum("is_seed")).collect()[0][0]
-    restart = (F.lit(1.0 - damping) * F.col("is_seed")
-               / F.lit(float(n_seeds)))
-    ranks = base.withColumn(
-        "rank", F.col("is_seed").cast("double") / F.lit(float(n_seeds)))
-    for i in range(n_iter):
-        shares = (ranks.filter(F.col("out_deg") > 0)
-                  .select("id", (F.col("rank") / F.col("out_deg"))
-                          .alias("share")))
-        contrib = (
-            edges.join(F.broadcast(shares), edges[src] == F.col("id"))
-            .groupBy(F.col(dst).alias("id"))
-            .agg(F.sum("share").alias("in_sum")))
-        ranks = (base.join(F.broadcast(contrib), "id", "left")
-                 .select("id", "out_deg", "is_seed",
-                         (restart + F.lit(damping)
-                          * F.coalesce("in_sum", F.lit(0.0)))
-                         .alias("rank"))
-                 ).localCheckpoint()
+    if share is None:
+        share = F.col("rank") / F.col("out_deg")
+    ranks = superstep(edges, init, ["id"], share, F.sum, update, n_iter)
     return ranks.select("id", "rank")

@@ -184,16 +184,11 @@ def q_graph_pagerank(spark, sf_dir):
     # narrowing — see queries_ext5._sym_supplier_edges_i), labels
     # decoded only in the output projection; rank values depend on
     # graph structure alone, so the oracle's string encoding stays.
-    from .queries_ext5 import _decode_node
-    li = _t(spark, sf_dir, "lineitem").select("l_partkey", "l_suppkey").distinct()
-    fwd = li.select(
-        (F.col("l_suppkey").cast("bigint") * 2).alias("src"),
-        (F.col("l_partkey").cast("bigint") * 2 + 1).alias("dst"))
-    edges = fwd.unionAll(fwd.select(F.col("dst").alias("src"),
-                                    F.col("src").alias("dst")))
-    # symmetrized graph -> every node has out-edges -> no dangling mass ->
-    # no per-iteration driver round trip
-    pr = pagerank(edges, n_iter=5, handle_dangling=False)
+    # Symmetrized: every node has out-edges, so the dangling mass is
+    # exactly 0.0 and the oracle needs no dangling term.
+    from .queries_ext5 import _decode_node, _sym_supplier_edges_i
+    li = _t(spark, sf_dir, "lineitem").select("l_suppkey", "l_partkey").distinct()
+    pr = pagerank(_sym_supplier_edges_i(li), n_iter=5)
     return pr.select(
         _decode_node(F.col("id"), "p").alias("id"),
         F.round(F.col("rank") * 1e4).cast("bigint").alias("rank_e4"))
@@ -686,7 +681,7 @@ def q_graph_pagerank_dangling(spark, sf_dir):
     edges = li.select(
         (F.col("l_suppkey").cast("bigint") * 2).alias("src"),
         (F.col("l_partkey").cast("bigint") * 2 + 1).alias("dst"))
-    pr = pagerank(edges, n_iter=5, handle_dangling=True)
+    pr = pagerank(edges, n_iter=5)
     return pr.select(
         _decode_node(F.col("id"), "p").alias("id"),
         F.round(F.col("rank") * 1e4).cast("bigint").alias("rank_e4"))

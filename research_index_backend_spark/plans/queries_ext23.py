@@ -304,12 +304,12 @@ def q_harmonic_centrality_seeds(spark: SparkSession,
     state here is PER-SEED (seed, node, d) — the multi-landmark BFS
     every distance-sketch / closeness estimator runs.
 
-    Scale shape: per-seed frontier-only expansion — round r joins only
-    the previous frontier against the checkpointed edge list and
-    anti-joins the per-seed reached set on (seed, id); rounds are a
-    fixed constant; seeds are a {_HC_SEEDS}-row TakeOrdered. The
-    DuckDB twin is a recursive CTE over (seed, id, d) states with
-    min-depth dedup.
+    Scale shape: per-seed frontier-only expansion on the shared
+    superstep operator, keyed on (seed, id): round r sends d + 1 only
+    from the (seed, id) pairs reached in round r-1 and keeps the min
+    per pair; rounds are a fixed constant; seeds are a {_HC_SEEDS}-row
+    TakeOrdered. The DuckDB twin is a recursive CTE over
+    (seed, id, d) states with min-depth dedup.
 
     Node ids are NARROWED to BIGINT internally (supplier 2k, part
     2k+1; the r4 fingerprint-narrowing class) and the seed label
@@ -321,37 +321,23 @@ def q_harmonic_centrality_seeds(spark: SparkSession,
     encoding survives only in the oracle, whose states never leave
     DuckDB.
     """
-    from pyspark import StorageLevel
+    from ..graph.analytics import relax, superstep
+    from .queries_ext5 import _sym_supplier_edges_i
     li = (_t(spark, sf_dir, "lineitem")
           .select("l_suppkey", "l_partkey").distinct())
-    fwd = li.select(
-        (F.col("l_suppkey").cast("bigint") * 2).alias("src"),
-        (F.col("l_partkey").cast("bigint") * 2 + 1).alias("dst"))
-    # DISK_ONLY: the default deserialized MEMORY_AND_DISK cache of the
-    # |E|-scale edge list + per-round reached states is what OOM'd the
-    # 16g local harness at the 100x probe — these frames are written
-    # once and re-read sequentially, exactly the disk-cache shape.
-    edges = (fwd.unionAll(fwd.select(F.col("dst").alias("src"),
-                                     F.col("src").alias("dst")))
-             .localCheckpoint(storageLevel=StorageLevel.DISK_ONLY))
     seeds = (li.groupBy("l_suppkey")
              .agg(F.count(F.lit(1)).alias("deg"))
              .orderBy(F.col("deg").desc(), "l_suppkey")
              .limit(_HC_SEEDS)
              .select((F.col("l_suppkey").cast("bigint") * 2)
                      .alias("seed")))
-    dist = seeds.select("seed", F.col("seed").alias("id"),
-                        F.lit(0).cast("int").alias("d")).localCheckpoint()
-    frontier = dist
-    for r in range(1, _HC_DEPTH + 1):
-        nxt = (frontier.join(edges, frontier["id"] == edges["src"])
-               .select("seed", F.col("dst").alias("id"),
-                       F.lit(r).cast("int").alias("d"))
-               .distinct())
-        new = (nxt.join(dist, ["seed", "id"], "left_anti")
-               .localCheckpoint(storageLevel=StorageLevel.DISK_ONLY))
-        dist = dist.unionAll(new)
-        frontier = new
+    dist = superstep(
+        _sym_supplier_edges_i(li),
+        lambda e: seeds.select("seed", F.col("seed").alias("id"),
+                               F.lit(0).cast("int").alias("d"),
+                               F.lit(True).alias("active")),
+        ["seed", "id"], F.col("d") + 1, F.min, relax, _HC_DEPTH,
+        active="active")
     reached = dist.filter(F.col("d") > 0)
     return (reached.groupBy("seed")
             .agg(*[F.sum(F.when(F.col("d") == r, 1).otherwise(0))

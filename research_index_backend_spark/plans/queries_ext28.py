@@ -34,6 +34,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..graph.analytics import pagerank, superstep
 from .queries import _t
 
 QUERIES_EXT28: dict = {}
@@ -66,45 +67,44 @@ def q_hits_hubs_authorities(spark: SparkSession,
     Unnormalized growth is bounded by (max_deg)^{2 * _HITS_ITER},
     astronomically inside double range for any real degree.
 
-    Scale shape: each half-step is ONE shuffle (edge join on the
-    broadcast |V|-row score frame + combinable re-aggregation); the
-    final norm + role count is a 1-row broadcast aggregate folded
-    into the output projection (the pagerank dangling-mass shape, no
-    driver round-trip). Lineage checkpoints every 2 iterations.
+    Scale shape: each half-step is one superstep over the
+    symmetrized supplier-part edge set (supplier 2k, part 2k+1): the
+    side updated last round is broadcast onto the edges and its scores
+    sum per destination. The state keeps the previous side as
+    inactive rows, so after 2 * {_HITS_ITER} rounds it holds the final
+    hub AND authority scores. The final norm + role count is a
+    per-role aggregate broadcast back onto the scores (no driver
+    round-trip).
     """
+    from .queries_ext5 import _sym_supplier_edges_i
     li = (_t(spark, sf_dir, "lineitem")
-          .select("l_suppkey", "l_partkey").distinct()
-          .localCheckpoint())
-    h = (li.select("l_suppkey").distinct()
-         .select("l_suppkey", F.lit(1.0).cast("double").alias("h")))
-    a = None
-    for it in range(_HITS_ITER):
-        # explicit broadcast: the score frame is |V|-row (narrow) and
-        # the hint measured 26.7s vs 89.2s AQE sort-merge at the 10x
-        # probe — the pagerank rank-broadcast tuning; at frame sizes
-        # past executor memory the hint must come off (documented)
-        a = (li.join(F.broadcast(h), "l_suppkey")
-             .groupBy("l_partkey").agg(F.sum("h").alias("a")))
-        h = (li.join(F.broadcast(a), "l_partkey")
-             .groupBy("l_suppkey").agg(F.sum("a").alias("h")))
-        if it % 2 == 1:
-            h = h.localCheckpoint()
-            a = a.localCheckpoint()
-    hn = h.agg(F.sum("h").alias("z"),
-               F.count(F.lit(1)).alias("n"))
-    an = a.agg(F.sum("a").alias("z"),
-               F.count(F.lit(1)).alias("n"))
-    hubs = (h.join(F.broadcast(hn))
-            .select(F.lit("hub").alias("role"),
-                    F.col("l_suppkey").cast("bigint").alias("id"),
-                    F.round(F.col("h") * F.col("n") / F.col("z") * 1e4)
-                    .cast("bigint").alias("score_rel_e4")))
-    auths = (a.join(F.broadcast(an))
-             .select(F.lit("auth").alias("role"),
-                     F.col("l_partkey").cast("bigint").alias("id"),
-                     F.round(F.col("a") * F.col("n") / F.col("z") * 1e4)
-                     .cast("bigint").alias("score_rel_e4")))
-    return hubs.unionByName(auths).orderBy("role", "id")
+          .select("l_suppkey", "l_partkey").distinct())
+
+    def init(e: DataFrame) -> DataFrame:
+        return (e.filter(F.col("src") % 2 == 0)
+                .select(F.col("src").alias("id")).distinct()
+                .select("id", F.lit(1.0).alias("score"),
+                        F.lit(True).alias("active")))
+
+    def half_step(state: DataFrame, msgs: DataFrame) -> DataFrame:
+        return (msgs.select("id", F.col("msg").alias("score"),
+                            F.lit(True).alias("active"))
+                .unionByName(state.filter("active").select(
+                    "id", "score", F.lit(False).alias("active"))))
+
+    scores = (superstep(_sym_supplier_edges_i(li), init, ["id"],
+                        F.col("score"), F.sum, half_step, 2 * _HITS_ITER,
+                        active="active")
+              .select(F.when(F.col("id") % 2 == 0, "hub")
+                      .otherwise("auth").alias("role"),
+                      F.shiftright("id", 1).alias("id"), "score"))
+    norm = scores.groupBy("role").agg(F.sum("score").alias("z"),
+                                      F.count(F.lit(1)).alias("n"))
+    return (scores.join(F.broadcast(norm), "role")
+            .select("role", "id",
+                    F.round(F.col("score") * F.col("n") / F.col("z") * 1e4)
+                    .cast("bigint").alias("score_rel_e4"))
+            .orderBy("role", "id"))
 
 
 def _oracle_hits(n_iter: int = _HITS_ITER) -> str:
@@ -194,31 +194,11 @@ def q_textrank_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
              .localCheckpoint())
     wdeg = edges.groupBy("w1").agg(F.sum("wt").alias("wdeg"))
     ew = edges.join(wdeg, "w1").select(
-        "w1", "w2", (F.col("wt").cast("double") / F.col("wdeg"))
-        .alias("p")).localCheckpoint()
-    nodes = edges.select(F.col("w1").alias("word")).distinct() \
-        .localCheckpoint()
-    n = nodes.count()
-    r = nodes.select("word",
-                     (F.lit(1.0) / F.lit(float(n))).alias("rank"))
-    dmp = F.lit(0.85).cast("double")
-    for it in range(_TR_ITER):
-        contrib = (ew.join(F.broadcast(
-            r.select(F.col("word").alias("w1"), "rank")), "w1")
-            .groupBy("w2").agg(F.sum(F.col("rank") * F.col("p"))
-                               .alias("in_sum")))
-        r = (nodes.join(F.broadcast(
-            contrib.select(F.col("w2").alias("word"), "in_sum")),
-            "word", "left")
-            .select("word",
-                    ((F.lit(1.0).cast("double") - dmp)
-                     / F.lit(float(n))
-                     + dmp * F.coalesce(F.col("in_sum"),
-                                        F.lit(0.0).cast("double")))
-                    .alias("rank")))
-        if it % 2 == 1:
-            r = r.localCheckpoint()
-    return (r.select("word",
+        F.col("w1").alias("src"), F.col("w2").alias("dst"),
+        (F.col("wt").cast("double") / F.col("wdeg")).alias("p"))
+    r = pagerank(ew, n_iter=_TR_ITER, share=F.col("rank") * F.col("p"))
+    n = r.count()
+    return (r.select(F.col("id").alias("word"),
                      F.round(F.col("rank") * n * 1e4).cast("bigint")
                      .alias("rank_rel_e4"))
             .orderBy(F.desc("rank_rel_e4"), "word")

@@ -1014,58 +1014,33 @@ def q_graph_bfs_depth(spark: SparkSession, sf_dir: str) -> DataFrame:
     seeded at suppliers with suppkey % 10 == 0 — the Cypher
     shortestPath / variable-length-path surface ((a)-[*..4]->(b)).
 
-    Frontier expansion: each round joins ONLY the previous frontier
-    (not the full reached set) against the edge list, anti-joins what's
-    already reached, and unions into the distance table — so round r
-    touches O(frontier_r * avg_degree) rows, the textbook Pregel shape.
-    Depth is exact-by-construction (first reach = min hops). The edge
-    list localCheckpoints once and every round reuses it; rounds are a
-    fixed constant, so lineage stays flat. The DuckDB twin is a
-    recursive CTE over DISTINCT (node, depth) states with the same
+    Frontier expansion on the shared superstep operator: each round
+    sends d + 1 from the previous round's newly reached vertices only
+    and keeps the min per vertex (unit-weight relax), so round r
+    touches O(frontier_r * avg_degree) rows — the textbook Pregel
+    shape. Depth is exact-by-construction (first reach = min hops), and
+    the loop stops once a round reaches nothing new. The DuckDB twin is
+    a recursive CTE over DISTINCT (node, depth) states with the same
     depth cap.
 
     Node ids are BIGINT internally (supplier 2k, part 2k+1) and the
-    's'/'p' labels decoded only in the output projection; iterative
-    state checkpoints are DISK_ONLY — the r10 100x probe caught the
-    string-id / deserialized-cache variant OOMing the 16g local
-    harness (same fix as harmonic_centrality_seeds, ext23).
+    's'/'p' labels decoded only in the output projection (the r10 100x
+    probe caught the string-id variant OOMing the 16g local harness;
+    same fix as harmonic_centrality_seeds, ext23).
     """
-    from pyspark import StorageLevel
+    from ..graph.analytics import relax, superstep
     l = _t(spark, sf_dir, "lineitem")
     li = l.select("l_suppkey", "l_partkey").distinct()
-    fwd = li.select(
-        (F.col("l_suppkey").cast("bigint") * 2).alias("src"),
-        (F.col("l_partkey").cast("bigint") * 2 + 1).alias("dst"))
-    edges = (fwd.unionAll(fwd.select(F.col("dst").alias("src"),
-                                     F.col("src").alias("dst")))
-             .localCheckpoint(storageLevel=StorageLevel.DISK_ONLY))
     seeds = (li.select("l_suppkey").distinct()
              .filter(F.col("l_suppkey") % _BFS_SEED_MOD == 0)
              .select((F.col("l_suppkey").cast("bigint") * 2).alias("id"),
-                     F.lit(0).cast("int").alias("d")))
-    # Only each round's FRONTIER materializes (localCheckpoint); the
-    # reached set is a union of already-checkpointed frontiers, so
-    # checkpointing it again would double every round's work.
-    dist = seeds.localCheckpoint(storageLevel=StorageLevel.DISK_ONLY)
-    frontier = dist
-    for r in range(1, _BFS_MAX_DEPTH + 1):
-        nxt = (frontier.join(edges, frontier["id"] == edges["src"])
-               .select(F.col("dst").alias("id"),
-                       F.lit(r).cast("int").alias("d"))
-               .distinct())
-        new = (nxt.join(dist, "id", "left_anti")
-               .localCheckpoint(storageLevel=StorageLevel.DISK_ONLY))
-        if not new.take(1):   # frontier exhausted -> all later rounds empty
-            break
-        dist = dist.unionAll(new)
-        frontier = new
-    return dist.select(
-        F.when(F.col("id") % 2 == 0,
-               F.concat(F.lit("s"), F.expr("id div 2").cast("string")))
-        .otherwise(
-            F.concat(F.lit("p"), F.expr("(id - 1) div 2").cast("string")))
-        .alias("node_id"),
-        F.col("d").alias("depth"))
+                     F.lit(0).cast("int").alias("d"),
+                     F.lit(True).alias("active")))
+    dist = superstep(_sym_supplier_edges_i(li), lambda e: seeds, ["id"],
+                     F.col("d") + 1, F.min, relax, _BFS_MAX_DEPTH,
+                     active="active")
+    return dist.select(_decode_node(F.col("id"), "p").alias("node_id"),
+                       F.col("d").alias("depth"))
 
 
 ORACLE_BFS = f"""
@@ -1708,18 +1683,17 @@ def q_graph_ppr(spark: SparkSession, sf_dir: str) -> DataFrame:
     the result is e4-quantized for the same summation-order reason
     documented on the pagerank oracle.
     """
-    from ..graph.analytics import personalized_pagerank
+    from ..graph.analytics import pagerank
     l = _t(spark, sf_dir, "lineitem")
     li = l.select("l_suppkey", "l_partkey").distinct()
     # BIGINT ids + output-only label decode (the r10 100x-probe OOM
     # fix — see _sym_supplier_edges_i); the analytics operator is
-    # id-type-agnostic.
-    edges = _sym_supplier_edges_i(li)
+    # id-type-agnostic. Symmetrized, so the dangling mass is 0.0.
     seeds = (li.select("l_suppkey").distinct()
              .filter(F.col("l_suppkey") % 10 == 0)
              .select((F.col("l_suppkey").cast("bigint") * 2).alias("id")))
-    pr = personalized_pagerank(edges, seeds, n_iter=_PPR_ITERS,
-                               damping=_PPR_DAMPING)
+    pr = pagerank(_sym_supplier_edges_i(li), n_iter=_PPR_ITERS,
+                  damping=_PPR_DAMPING, seeds=seeds)
     return pr.select(
         _decode_node(F.col("id"), "p").alias("id"),
         F.round(F.col("rank") * 1e4).cast("bigint").alias("rank_e4"))

@@ -1363,30 +1363,24 @@ def q_label_prop_communities(spark: SparkSession, sf_dir: str) -> DataFrame:
     Deterministic by construction: the argmax is a total order
     (count desc, label asc) and rounds are synchronous, so the
     trajectory is engine-independent — the oracle replays the same 3
-    rounds as unrolled CTEs. Each round is one (edge x label) hash
-    join + grouped count + per-node row_number: 2 shuffles/round on
-    narrow int keys, edges checkpointed once. Fixed rounds (not
-    convergence) keep the plan finite; real deployments iterate the
-    same round body.
+    rounds as unrolled CTEs. Each round is one superstep: neighbor
+    labels broadcast-joined onto the edge list and folded per node by
+    mode(deterministic=True), which is exactly that argmax (the most
+    frequent label, ties to the smallest) in one combinable aggregate.
+    Fixed rounds (not convergence) keep the plan finite; real
+    deployments iterate the same round body.
 
     Output: community-size histogram (size -> how many communities).
     """
+    from ..graph.analytics import superstep, symmetrize
     from .queries import q_dedup_lsh_pairs
-    e = q_dedup_lsh_pairs(spark, sf_dir)
-    edges = (e.select(F.col("id_a").alias("u"), F.col("id_b").alias("v"))
-             .unionAll(e.select(F.col("id_b").alias("u"),
-                                F.col("id_a").alias("v")))
-             .localCheckpoint())
-    labels = (edges.select(F.col("u").alias("id")).distinct()
-              .select("id", F.col("id").alias("lbl")))
-    wpick = Window.partitionBy("id").orderBy(F.col("c").desc(), "lbl")
-    for _ in range(_LP_ROUNDS):
-        nbr = (edges.join(labels.select(F.col("id").alias("v"), "lbl"), "v")
-               .select(F.col("u").alias("id"), "lbl"))
-        cnt = nbr.groupBy("id", "lbl").agg(F.count(F.lit(1)).alias("c"))
-        labels = (cnt.select("id", "lbl",
-                             F.row_number().over(wpick).alias("rn"))
-                  .filter(F.col("rn") == 1).select("id", "lbl"))
+    labels = superstep(
+        symmetrize(q_dedup_lsh_pairs(spark, sf_dir), "id_a", "id_b"),
+        lambda ed: (ed.select(F.col("src").alias("id")).distinct()
+                    .select("id", F.col("id").alias("lbl"))),
+        ["id"], F.col("lbl"), lambda m: F.mode(m, deterministic=True),
+        lambda state, msgs: msgs.select("id", F.col("msg").alias("lbl")),
+        _LP_ROUNDS)
     sizes = labels.groupBy("lbl").agg(F.count(F.lit(1)).alias("sz"))
     return (sizes.groupBy("sz")
             .agg(F.count(F.lit(1)).alias("n_communities"))

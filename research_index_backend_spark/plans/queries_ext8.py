@@ -2736,36 +2736,28 @@ def q_graph_sssp(spark: SparkSession, sf_dir: str) -> DataFrame:
     pagerank, BFS depth, k-core, label prop) with the WEIGHTED case.
     Output: the 20 nearest nodes by (distance, node id).
 
-    Scale shape: each round is ONE hash join (frontier x edges on the
-    source endpoint) + a map-side-combinable min — the frontier table
-    holds only reached nodes, never |V| rows; localCheckpoint per
-    round keeps round r from replaying rounds 1..r-1 (the kmeans/BPE
-    discipline). Fixed round count bounds the lineage; at 100 TB the
-    same loop runs until a convergence check (count of improved rows
-    == 0, one extra action per round).
+    Scale shape: each round is one superstep — the vertices whose
+    distance improved last round are broadcast onto the edge list and
+    their relaxations fold in a map-side-combinable min. Relaxing only
+    from improved vertices gives the same rows as relaxing from every
+    reached one (an unchanged vertex's relaxations were absorbed the
+    round before), and the loop stops as soon as no vertex improves.
     """
+    from ..graph.analytics import relax, superstep, symmetrize
     li = _t(spark, sf_dir, "lineitem")
     w = F.round(F.col("l_extendedprice") * 100).cast("bigint")
     pairs = (li.groupBy("l_suppkey", "l_partkey")
-             .agg(F.min(w).alias("w")))
-    s_node = F.col("l_suppkey")
-    p_node = F.col("l_partkey") + F.lit(_SSSP_PART_NS)
-    edges = (pairs.select(s_node.alias("src"), p_node.alias("dst"), "w")
-             .unionByName(
-                 pairs.select(p_node.alias("src"), s_node.alias("dst"),
-                              "w"))
-             .localCheckpoint())
-    dist = spark.createDataFrame(
-        [(int(_SSSP_SRC), 0)], "node bigint, d bigint")
-    for _ in range(_SSSP_ROUNDS):
-        relaxed = (dist.join(edges, dist.node == edges.src)
-                   .select(F.col("dst").alias("node"),
-                           (F.col("d") + F.col("w")).alias("d")))
-        dist = (dist.unionByName(relaxed)
-                .groupBy("node").agg(F.min("d").alias("d"))
-                .localCheckpoint())
-    return (dist.orderBy("d", "node").limit(_SSSP_TOPK)
-            .select("node", F.col("d").alias("dist_cents")))
+             .agg(F.min(w).alias("w"))
+             .select("l_suppkey",
+                     (F.col("l_partkey") + F.lit(_SSSP_PART_NS)).alias("p"),
+                     "w"))
+    edges = symmetrize(pairs, "l_suppkey", "p")
+    source = spark.createDataFrame(
+        [(int(_SSSP_SRC), 0, True)], "id bigint, d bigint, active boolean")
+    dist = superstep(edges, lambda e: source, ["id"], F.col("d") + F.col("w"),
+                     F.min, relax, _SSSP_ROUNDS, active="active")
+    return (dist.orderBy("d", "id").limit(_SSSP_TOPK)
+            .select(F.col("id").alias("node"), F.col("d").alias("dist_cents")))
 
 
 def _oracle_sssp() -> str:

@@ -60,12 +60,11 @@ class TestPageRank:
         assert ranks[1] == max(ranks.values())
 
     def test_dangling_in_plan_matches_reference(self, spark):
-        """handle_dangling=True on a directed graph WITH sinks: the
-        in-plan (crossJoin-broadcast) dangling path must reproduce the
-        textbook per-round recurrence exactly (Python reference below)
-        and conserve total rank mass. Sparse checkpoints (cadence
-        CHECKPOINT_EVERY) must not change the numbers — the old
-        collect()-based path forced cadence 1."""
+        """A directed graph WITH sinks: the in-plan (crossJoin-broadcast)
+        dangling path must reproduce the textbook per-round recurrence
+        exactly (Python reference below) and conserve total rank mass.
+        Sparse checkpoints (cadence CHECKPOINT_EVERY) must not change the
+        numbers — the old collect()-based path forced cadence 1."""
         # 1->2->3 chain plus 4->3: node 3 is a sink holding mass
         edges = spark.createDataFrame(
             [(1, 2), (2, 3), (4, 3)], ["src", "dst"])
@@ -82,11 +81,73 @@ class TestPageRank:
                    for i in ref}
 
         got = {r["id"]: r["rank"] for r in
-               pagerank(edges, n_iter=n_iter,
-                        handle_dangling=True).collect()}
+               pagerank(edges, n_iter=n_iter).collect()}
         for i in ref:
             assert got[i] == pytest.approx(ref[i], rel=1e-12), i
         assert sum(got.values()) == pytest.approx(1.0, abs=1e-9)
+
+
+class TestSuperstep:
+    """The shared superstep operator on a hand-built weighted path
+    1-2-3-4 (weight 1 per hop) with a heavy chord 1-4 (weight 10),
+    plus the isolated vertex 5 (no edges)."""
+
+    PATH = [(1, 2, 1), (2, 3, 1), (3, 4, 1), (1, 4, 10)]
+
+    def _edges(self, spark):
+        rows = self.PATH + [(b, a, w) for a, b, w in self.PATH]
+        return spark.createDataFrame(rows, "src long, dst long, w long")
+
+    def _distances(self, spark, sources, message, rounds=10):
+        from research_index_backend_spark.graph.analytics import (
+            relax, superstep)
+        calls = []
+
+        def update(state, msgs):
+            calls.append(1)
+            return relax(state, msgs)
+
+        init = spark.createDataFrame(
+            [(v, 0, True) for v in sources],
+            "id long, d long, active boolean")
+        dist = superstep(self._edges(spark), lambda e: init, ["id"],
+                         message, F.min, update, rounds, active="active")
+        return {r["id"]: r["d"] for r in dist.collect()}, len(calls)
+
+    def test_bfs_stops_once_frontier_is_empty(self, spark):
+        """Seeds 1 and 5: the frontier is {2, 4}, then {3}, then empty
+        after round 3, so a 10-round budget stops at the first
+        checkpoint round from 3 on. The isolated seed keeps depth 0."""
+        from research_index_backend_spark.graph.analytics import (
+            CHECKPOINT_EVERY)
+        got, rounds = self._distances(spark, [1, 5], F.col("d") + 1)
+        assert got == {1: 0, 2: 1, 4: 1, 3: 2, 5: 0}
+        assert rounds == -(-3 // CHECKPOINT_EVERY) * CHECKPOINT_EVERY < 10
+
+    def test_sssp_later_round_improves_earlier_reach(self, spark):
+        """Round 1 reaches 4 over the chord at 10; round 3 improves it
+        to 3 along the path. Only improved vertices send, and the
+        unreached isolated vertex 5 never appears."""
+        got, _ = self._distances(spark, [1], F.col("d") + F.col("w"))
+        assert got == {1: 0, 2: 1, 3: 2, 4: 3}
+        capped, _ = self._distances(spark, [1], F.col("d") + F.col("w"),
+                                    rounds=1)
+        assert capped == {1: 0, 2: 1, 4: 10}
+
+    @pytest.mark.parametrize("seeds", [None, [1, 5]])
+    def test_pagerank_mass_sums_to_one(self, spark, seeds):
+        """Directed path with the chord: 4 is a sink, so dangling mass
+        is live and goes where the restart mass goes (uniform, or the
+        seeds). Seed 5 is not a node of the graph, so the restart vector
+        is 1 on seed 1 alone."""
+        edges = spark.createDataFrame(
+            [(a, b) for a, b, _ in self.PATH], "src long, dst long")
+        seed_df = (None if seeds is None else
+                   spark.createDataFrame([(s,) for s in seeds], "id long"))
+        ranks = {r["id"]: r["rank"] for r in
+                 pagerank(edges, n_iter=7, seeds=seed_df).collect()}
+        assert set(ranks) == {1, 2, 3, 4}
+        assert sum(ranks.values()) == pytest.approx(1.0, abs=1e-9)
 
 
 class TestResolveCascade:

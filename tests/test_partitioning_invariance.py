@@ -100,6 +100,10 @@ SENSITIVE = [
     # decrements; rounds and final degrees must not depend on how the
     # pre-partitioned edge checkpoint is split)
     "kcore_decompose",
+    # the superstep family (sum/min combines over broadcast vertex
+    # state; rounds and early exits must not depend on partitioning)
+    "hits_hubs_authorities", "graph_pagerank", "graph_pagerank_dangling",
+    "graph_ppr", "graph_bfs_depth", "textrank_keywords",
 ]
 
 

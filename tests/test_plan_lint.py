@@ -69,9 +69,6 @@ BNLJ_ALLOWED = {
     # 1-row (min, max) timeline-bounds aggregate broadcast onto the
     # train/test split scan (the snapshot_asof shape)
     "conformal_coverage_audit",
-    # final-norm 1-row (sum, count) aggregates crossed onto the
-    # score frames (the pagerank dangling-mass shape)
-    "hits_hubs_authorities",
     # 1-row pool-array x 1-row sims-array cross for the in-row greedy
     # fold (both sides are single-row collected aggregates)
     "mmr_diversify",
@@ -365,12 +362,28 @@ DRIVER_COUNT_ALLOWED = {
     "sources/stats.py": 1,
     # (b) iterative derived-frame counts
     "plans/queries_ext5.py": 1,   # k-core peel fixpoint early-exit
-    "plans/queries_ext28.py": 1,  # textrank |V| (distinct-word frame)
-    "graph/analytics.py": 4,      # CC + edge-fixpoint convergence, PR |V|
+    "plans/queries_ext28.py": 1,  # textrank |V| (checkpointed rank frame)
+    "graph/analytics.py": 2,      # star-components edge-fixpoint test
+}
+
+# Driver-side df.collect() sites in package source. Each pulls a frame
+# whose size is capped by a limit() or by a contract bound, never one
+# that grows with the corpus. A new .collect() is a lint failure: add it
+# here only with the limit or bound that caps it.
+DRIVER_COLLECT_ALLOWED = {
+    # the 1-row ingest scorecard; the per-DOI details are bounded by
+    # the --limit-capped DOI list the driver read
+    "cli.py": 2,
+    # PQ codebook rows (vec_id < _PQ_CODES); 1-row corpus stats;
+    # limit(_PRF_FB_DOCS) feedback docs; limit(_PRF_EXP_TERMS) terms
+    "plans/queries_ext8.py": 4,
+    # assert_unique's limit(1) probe; bucket ids (at most n_buckets)
+    "operators/upsert.py": 2,
 }
 
 
-def test_driver_side_counts_are_pinned():
+def _driver_side_calls(method: str) -> dict[str, int]:
+    """Per-file count of `.<method>()` calls in package source."""
     import os
     import tokenize
 
@@ -389,7 +402,7 @@ def test_driver_side_counts_are_pinned():
             # a .count() call = NAME 'count' preceded by OP '.' and
             # followed by OP '(' OP ')' — strings/comments never match
             for i, t in enumerate(toks):
-                if (t.type == tokenize.NAME and t.string == "count"
+                if (t.type == tokenize.NAME and t.string == method
                         and i >= 1 and toks[i - 1].string == "."
                         and i + 2 < len(toks)
                         and toks[i + 1].string == "("
@@ -397,9 +410,21 @@ def test_driver_side_counts_are_pinned():
                     n += 1
             if n:
                 found[rel] = n
+    return found
+
+
+def test_driver_side_counts_are_pinned():
+    found = _driver_side_calls("count")
     assert found == DRIVER_COUNT_ALLOWED, (
         f"driver-side .count() drift: found {found}, "
         f"allowed {DRIVER_COUNT_ALLOWED}")
+
+
+def test_driver_side_collects_are_pinned():
+    found = _driver_side_calls("collect")
+    assert found == DRIVER_COLLECT_ALLOWED, (
+        f"driver-side .collect() drift: found {found}, "
+        f"allowed {DRIVER_COLLECT_ALLOWED}")
 
 
 # Fact-table scan fan-out. A frame consumed by N downstream branches

@@ -6,13 +6,32 @@ Usage:
 Builds each query from <repo_root>'s __spark_entry__.queries() against
 $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) and writes the
 formatted physical plan to <out_dir>/<query>_<suffix>.txt. Run once at
-HEAD (suffix "after") and once from a worktree of the pre-change commit
+HEAD (suffix "after") and once from a checkout of the pre-change commit
 (suffix "before") to produce the plan-diff evidence pair.
+
+Plans are written normalized: expression ids (#n), plan_id= counters,
+RDD ids and localCheckpoint call sites are session-local counters, not
+plan shape, so they are masked and a before/after pair diffs clean with
+plain `diff` unless the physical plan really changed.
 """
 from __future__ import annotations
 
 import os
+import re
 import sys
+
+_VOLATILE = [
+    (re.compile(r"#\d+"), "#n"),
+    (re.compile(r"plan_id=\d+"), "plan_id=n"),
+    (re.compile(r"RDD\[\d+\]"), "RDD[n]"),
+    (re.compile(r"(localCheckpoint) at [^,\]\s]+"), r"\1"),
+]
+
+
+def normalize(plan: str) -> str:
+    for pattern, repl in _VOLATILE:
+        plan = pattern.sub(repl, plan)
+    return plan
 
 
 def main() -> int:
@@ -42,7 +61,7 @@ def main() -> int:
     for n in names:
         spark.sparkContext.setJobDescription(f"plan_dump: {n}")
         df = qs[n](spark, sf_dir)
-        plan = df._jdf.queryExecution().explainString(mode)
+        plan = normalize(df._jdf.queryExecution().explainString(mode))
         path = os.path.join(out_dir, f"{n}_{suffix}.txt")
         with open(path, "w") as fh:
             fh.write(plan)

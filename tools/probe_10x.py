@@ -1,6 +1,7 @@
 """Scaling probe: time catalog queries at /tmp/sf1 (10x, from
-tools/gen_10x.py) against their BENCH_FULL.json sf0.1 records and flag
-superlinear scalers (ratio > 10 for 10x data).
+tools/gen_10x.py) against their sf0.1 records on the same core count
+(bench.record_path: BENCH_FULL_c{cpus}.json) and flag superlinear
+scalers (ratio > 10 for 10x data).
 
 Only queries whose PRIMARY inputs were scaled are probed — ratios for
 dim-driven queries would be flat and meaningless. Findings land in
@@ -163,12 +164,12 @@ SCALED_TAIL = [
 
 def main(names: list[str]) -> None:
     from __spark_entry__ import queries
+    from bench import record_path
 
-    from research_index_backend_spark.session import get_spark
-    with open(os.path.join(os.path.dirname(os.path.dirname(
-            os.path.abspath(__file__))), "BENCH_FULL.json")) as fh:
+    from research_index_backend_spark.session import DEFAULT_CPUS, get_spark
+    with open(record_path(0.1, DEFAULT_CPUS)) as fh:
         prior = json.load(fh)["queries"]
-    spark = get_spark(cpus="32")
+    spark = get_spark(cpus=DEFAULT_CPUS)
     qs = queries()
 
     def run(name, sf_dir):

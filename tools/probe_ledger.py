@@ -11,7 +11,8 @@ Every catalog query gets exactly one classified row:
                     flat by construction and not probe-meaningful.
 
 plus its measured 10x and 100x wall-clock ratios vs the committed
-sf0.1 record (BENCH_FULL.json) where probed, from the probe JSONs
+sf0.1 record of the same core count (BENCH_FULL_c{cpus}.json, see
+bench.record_path) where probed, from the probe JSONs
 produced by ``RIB_PROBE_OUT=... python tools/probe_10x.py``.
 
 Input-table attribution comes from DataFrame.inputFiles() on each
@@ -91,7 +92,8 @@ def classify(spark, qs, sf_dir: str) -> dict[str, dict]:
 def main(argv: list[str]) -> None:
     from __spark_entry__ import queries
 
-    from research_index_backend_spark.session import get_spark
+    from bench import record_path
+    from research_index_backend_spark.session import DEFAULT_CPUS, get_spark
     from tools.probe_10x import SCALED, SCALED_TAIL
 
     if "--x100" in argv:
@@ -155,11 +157,13 @@ def main(argv: list[str]) -> None:
             "# Scaling-probe ledger (r13, regenerable via "
             "tools/probe_ledger.py)\n\n"
             "Every catalog query, classified, with measured wall-clock "
-            "ratios vs the\ncommitted sf0.1 record (BENCH_FULL.json): "
+            "ratios vs the\ncommitted sf0.1 record "
+            f"({os.path.basename(record_path(0.1, DEFAULT_CPUS))}): "
             "10x = /tmp/sf1 (6M lineitem /\n1M events / 50k docs), "
             "100x = /tmp/sf10 (60M lineitem / 10M events /\n500k docs "
             "/ 2M parts), both corpora from tools/gen_10x.py. "
-            "Ratios are\nmin-of-2 in a shared local[32] 16g session "
+            "Ratios are\nmin-of-2 in a shared "
+            f"local[{DEFAULT_CPUS}] 16g session "
             "(tools/probe_10x.py); the\nregression gate remains the "
             "driver bench — this ledger is coverage, the\nclassification "
             "is the contract.\n\n"
