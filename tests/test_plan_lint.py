@@ -640,30 +640,16 @@ def test_no_split_expression_referenced_inside_hof_lambdas():
         f"per element — stage it to a named column first): {bad}")
 
 
-def test_probe_lists_partition_catalog():
-    """r12 VERDICT item 4: the scaling-probe ledger must classify
-    EVERY catalog query — SCALED + SCALED_TAIL + the dim-bound trio
-    partition the catalog exactly (disjoint, exhaustive), so a new
-    query cannot land without choosing a probe class. Input-table
-    correctness of each class is checked by tools/probe_ledger.py
-    (exits nonzero on misclassification)."""
-    import os as _os
-    import sys as _sys
-    _sys.path.insert(0, _os.path.join(
-        _os.path.dirname(_os.path.dirname(_os.path.abspath(__file__))),
-        "tools"))
-    try:
-        from probe_10x import SCALED, SCALED_TAIL
-    finally:
-        _sys.path.pop(0)
-    from __spark_entry__ import queries
-    catalog = set(queries())
-    s, t = set(SCALED), set(SCALED_TAIL)
-    dim_bound = {"graph_motif_path", "mint_ids", "slug_latlng"}
-    assert len(s) == len(SCALED) and len(t) == len(SCALED_TAIL), \
-        "duplicate names inside a probe list"
-    assert not (s & t) and not (s & dim_bound) and not (t & dim_bound)
-    missing = catalog - s - t - dim_bound
-    extra = (s | t | dim_bound) - catalog
-    assert not missing, f"queries without a probe class: {sorted(missing)}"
-    assert not extra, f"probe-listed but not in catalog: {sorted(extra)}"
+def test_probe_class_is_derived_from_inputs(spark):
+    """The scaling-probe ledger derives each row's class from its own
+    inputs (inputFiles(), else its source tables): rows reading only the
+    unscaled dimension tables are dim-bound, a row reading a scaled
+    table is scaled."""
+    from tools.probe_ledger import classify
+    dim_bound = ("graph_motif_path", "mint_ids", "slug_latlng")
+    qs = E.queries()
+    info = classify(spark, {n: qs[n] for n in
+                            dim_bound + ("flagship_contains_tag",)}, SF)
+    assert {n: info[n]["class"] for n in info} == {
+        **{n: "dim-bound" for n in dim_bound},
+        "flagship_contains_tag": "scaled"}

@@ -49,7 +49,7 @@ def compare(spark_pdf: pd.DataFrame, oracle_pdf: pd.DataFrame) -> tuple[bool, st
         # values, different repr/hash (the r6 bool_agg_report failure
         # class). Width differences within a kind (int32 vs int64) repr
         # identically and pass; int-vs-float and timestamp-resolution
-        # differences fail. tools/dtype_audit.py sweeps the catalog.
+        # differences fail. A full run is the catalog's dtype audit.
         ka, kb = a[c].dtype.kind, b[c].dtype.kind
         ka = "i" if ka == "u" else ka
         kb = "i" if kb == "u" else kb

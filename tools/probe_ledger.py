@@ -1,19 +1,15 @@
-"""Assemble PROBE_LEDGER.md — the exact per-query scaling-probe ledger
-(r12 VERDICT next-round item 4).
+"""Assemble PROBE_LEDGER.md — the per-query scaling-probe ledger.
 
-Every catalog query gets exactly one classified row:
+Every catalog query gets exactly one class, derived from its own inputs:
 
-- ``scaled``      — in probe_10x.SCALED (the long-standing probe set);
-- ``scaled-tail`` — in probe_10x.SCALED_TAIL (scaled primary inputs,
-                    formalized r13 from per-plan inputFiles());
-- ``dim-bound``   — primary inputs are the unscaled dimension tables
-                    (region/nation/supplier), so a scaling ratio is
-                    flat by construction and not probe-meaningful.
+- ``scaled``    — reads at least one table tools/gen_10x.py scales;
+- ``dim-bound`` — reads only the unscaled dimension tables
+                  (region/nation/supplier), or no table, so a scaling
+                  ratio is flat by construction and not probe-meaningful.
 
-plus its measured 10x and 100x wall-clock ratios vs the committed
-sf0.1 record of the same core count (BENCH_FULL_c{cpus}.json, see
-bench.record_path) where probed, from the probe JSONs
-produced by ``RIB_PROBE_OUT=... python tools/probe_10x.py``.
+plus its measured wall-clock ratio in each probe record: the row's time
+in a bench record made on a larger corpus divided by its time in the
+sf0.1 base record of the same core count (see bench.record_path).
 
 Input-table attribution comes from DataFrame.inputFiles() on each
 built plan; the handful of checkpoint-opaque plans (localCheckpoint
@@ -21,16 +17,17 @@ breaks lineage before any file scan is materialized) are attributed
 from their documented source tables and marked.
 
 Usage:
-    python tools/probe_ledger.py out.md probe10x.json [probe10x_b.json ...] \
-        --x100 probe100x.json [...]
+    SPARK_GRAFT_SF_DIR=/tmp/sf1 python bench.py        # 10x record
+    SPARK_GRAFT_SF_DIR=/tmp/sf10 python bench.py       # 100x record
+    python tools/probe_ledger.py out.md BENCH_FULL_c4.json \
+        BENCH_FULL_sf1.0_c4.json BENCH_FULL_sf10.0_c4.json
 
-Probe JSONs listed before --x100 fill the 10x column (later files win
-on collision); files after it fill the 100x column.
+Each probe record after the base fills one column, headed by its scale
+over the base (10x, 100x).
 """
 
 from __future__ import annotations
 
-import json
 import os
 import re
 import sys
@@ -77,6 +74,7 @@ def _source_tables(fn, qs: dict | None = None, _seen=None) -> list[str]:
 
 
 def classify(spark, qs, sf_dir: str) -> dict[str, dict]:
+    """Input tables and probe class of each row in `qs`."""
     out = {}
     for name, fn in qs.items():
         files = fn(spark, sf_dir).inputFiles()
@@ -85,105 +83,69 @@ def classify(spark, qs, sf_dir: str) -> dict[str, dict]:
         opaque = not tabs
         if opaque:
             tabs = _source_tables(fn, qs)
-        out[name] = {"tables": tabs, "opaque": opaque}
+        out[name] = {"tables": tabs, "opaque": opaque,
+                     "class": "scaled" if set(tabs) & SCALED_TABLES
+                     else "dim-bound"}
     return out
 
 
 def main(argv: list[str]) -> None:
     from __spark_entry__ import queries
 
-    from bench import record_path
-    from research_index_backend_spark.session import DEFAULT_CPUS, get_spark
-    from tools.probe_10x import SCALED, SCALED_TAIL
+    from research_index_backend_spark.session import get_spark
+    from tools.bench_compare import compare, load
 
-    if "--x100" in argv:
-        i = argv.index("--x100")
-        out_md, x10_files, x100_files = argv[0], argv[1:i], argv[i + 1:]
-    else:
-        out_md, x10_files, x100_files = argv[0], argv[1:], []
-
-    def load(paths):
-        acc = {}
-        for p in paths:
-            with open(p) as fh:
-                acc.update(json.load(fh)["queries"])
-        return acc
-
-    x10, x100 = load(x10_files), load(x100_files)
+    out_md, base_path, probe_paths = argv[0], argv[1], argv[2:]
+    base = load(base_path)
+    # one column per probe record: "{ratio}x ({seconds}s)" per timed row
+    probes = {f"{p['sf'] / base['sf']:g}x":
+              {n: f"{round(r, 1)}x ({t}s)" for n, _, t, r, _ in compare(base, p)}
+              for p in map(load, probe_paths)}
 
     spark = get_spark()
     qs = queries()
     info = classify(spark, qs, "/root/testdata/sf0.01")
 
-    s, tail = set(SCALED), set(SCALED_TAIL)
-    rows, problems = [], []
+    rows = []
     for name in sorted(qs):
-        tabs = info[name]["tables"]
-        if name in s:
-            cls = "scaled"
-        elif name in tail:
-            cls = "scaled-tail"
-        elif tabs and set(tabs) <= DIM_TABLES:
-            cls = "dim-bound"
-        else:
-            cls = "UNCLASSIFIED"
-            problems.append(f"{name}: not in any probe list, tables={tabs}")
-        if cls in ("scaled", "scaled-tail") and not set(tabs) & SCALED_TABLES:
-            problems.append(f"{name}: listed {cls} but reads only {tabs}")
-        if cls == "dim-bound" and set(tabs) & SCALED_TABLES:
-            problems.append(f"{name}: dim-bound but reads scaled {tabs}")
-
-        def fmt(d):
-            if name not in d or d[name].get("ratio") is None:
-                return "—"
-            e = d[name]
-            return f"{e['ratio']}x ({e['t']}s)"
-
+        cls, tabs = info[name]["class"], info[name]["tables"]
         note = "checkpoint-opaque; tables from source" \
             if info[name]["opaque"] else ""
         if cls == "dim-bound":
             note = "inputs unscaled by gen_10x; ratio flat by construction"
-        rows.append((name, cls, ",".join(tabs), fmt(x10), fmt(x100), note))
+        rows.append((name, cls, ",".join(tabs),
+                     *(col.get(name, "—") for col in probes.values()), note))
 
-    n = {c: sum(1 for r in rows if r[1] == c)
-         for c in ("scaled", "scaled-tail", "dim-bound", "UNCLASSIFIED")}
-    missing10 = [r[0] for r in rows
-                 if r[1] in ("scaled", "scaled-tail") and r[3] == "—"]
-    missing100 = [r[0] for r in rows
-                  if r[1] in ("scaled", "scaled-tail") and r[4] == "—"]
+    n = {c: sum(1 for r in rows if r[1] == c) for c in ("scaled", "dim-bound")}
+    missing = {col: [r[0] for r in rows if r[1] == "scaled" and r[3 + i] == "—"]
+               for i, col in enumerate(probes)}
 
     with open(out_md, "w") as f:
         f.write(
-            "# Scaling-probe ledger (r13, regenerable via "
-            "tools/probe_ledger.py)\n\n"
-            "Every catalog query, classified, with measured wall-clock "
-            "ratios vs the\ncommitted sf0.1 record "
-            f"({os.path.basename(record_path(0.1, DEFAULT_CPUS))}): "
-            "10x = /tmp/sf1 (6M lineitem /\n1M events / 50k docs), "
-            "100x = /tmp/sf10 (60M lineitem / 10M events /\n500k docs "
-            "/ 2M parts), both corpora from tools/gen_10x.py. "
-            "Ratios are\nmin-of-2 in a shared "
-            f"local[{DEFAULT_CPUS}] 16g session "
-            "(tools/probe_10x.py); the\nregression gate remains the "
-            "driver bench — this ledger is coverage, the\nclassification "
-            "is the contract.\n\n"
+            "# Scaling-probe ledger (regenerable via tools/probe_ledger.py)"
+            "\n\nEvery catalog query, classified from its own inputs, with "
+            "measured wall-clock\nratios against the sf0.1 bench record "
+            f"{os.path.basename(base_path)} (c{base.get('cpus')}). Each "
+            "ratio column is a\nbench.py record on a tools/gen_10x.py "
+            "corpus: "
+            + ", ".join(f"{col} = {os.path.basename(p)}"
+                        for col, p in zip(probes, probe_paths))
+            + ". Ratios are\nmin-of-2 per row; the regression gate "
+            "remains the driver bench — this ledger\nis coverage, the "
+            "classification is the contract.\n\n"
             f"Coverage: {len(rows)} queries = {n['scaled']} scaled + "
-            f"{n['scaled-tail']} scaled-tail +\n{n['dim-bound']} "
-            f"dim-bound; {len(missing10)} scaled rows without a 10x "
-            f"number, {len(missing100)} without 100x.\n\n"
-            "| query | class | inputs | 10x | 100x | note |\n"
-            "|---|---|---|---|---|---|\n")
+            f"{n['dim-bound']} dim-bound; scaled rows without a number: "
+            + (", ".join(f"{len(m)} at {col}" for col, m in missing.items())
+               or "no probe given")
+            + ".\n\n| query | class | inputs | "
+            + "".join(f"{col} | " for col in probes) + "note |\n|"
+            + "---|" * (4 + len(probes)) + "\n")
         for r in rows:
             f.write("| " + " | ".join(r) + " |\n")
     print(f"wrote {out_md}: {n}")
-    if missing10:
-        print("missing 10x:", ", ".join(missing10))
-    if missing100:
-        print("missing 100x:", ", ".join(missing100))
-    for p in problems:
-        print("PROBLEM:", p)
-    if problems:
-        sys.exit(1)
+    for col, m in missing.items():
+        if m:
+            print(f"missing {col}:", ", ".join(m))
 
 
 if __name__ == "__main__":
