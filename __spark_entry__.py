@@ -60,6 +60,12 @@ CHANGED = (
     "graph_components", "textrank_keywords",
     # build on graph_components, so their formatted plans changed too
     "dedup_survivors", "dedup_best_survivor",
+    # built on operators.textstats doc_terms / bm25, or tokenized by
+    # textstats.tokens where the inline form differed
+    "bm25_topk", "rerank_topk", "prf_expansion", "qlm_dirichlet_topk",
+    "hybrid_rrf_fusion", "tfidf_topk", "ctfidf_topterms",
+    "build_inverted_index", "token_entropy", "postings_compression_report",
+    "oov_rate", "text_quality",
 )
 
 

@@ -27,11 +27,12 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from .textstats import tokens
 
-def tokens_col(text: Column | str, pattern: str = r"\s+") -> Column:
-    c = F.col(text) if isinstance(text, str) else text
-    return F.array_distinct(F.filter(F.split(F.lower(c), pattern),
-                                     lambda t: t != ""))
+
+def tokens_col(text: Column | str) -> Column:
+    """Distinct :func:`textstats.tokens` of ``text``: the Jaccard set."""
+    return F.array_distinct(tokens(text))
 
 
 def shingles_col(text: Column | str, n: int = 5) -> Column:

@@ -1,16 +1,21 @@
-"""Text-analysis operators: language ID, quality scoring, token counting,
-document fingerprinting.
+"""Text-analysis operators: tokenization, per-document term statistics,
+BM25 scoring, language ID, quality scoring, document fingerprinting.
 
 These generalize the reference's abstract-processing surface (clean_html +
 notebook NLP, reference src/research_index_backend/utils.py:5-23 and
 notebooks/nlp.ipynb) into the operators a training-data pipeline runs over
-every document. All are pure column expressions — JVM codegen, zero Python
-in the hot path, embarrassingly parallel at 100 TB.
+every document. All are pure column expressions or DataFrame plans — JVM
+codegen, zero Python in the hot path, embarrassingly parallel at 100 TB.
+
+The document rows of the catalog share one tokenize-and-featurize stage:
+:func:`tokens` -> :func:`doc_terms` -> :func:`bm25` (or tf-idf, QLM, ...).
+Each sits next to its DuckDB twin (``*_sql``), the SQL the catalog oracles
+are written with, so a plan and its oracle cannot drift apart.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Row
 from pyspark.sql import functions as F
 
 # A tiny embedded English stopword list (public knowledge); real pipelines
@@ -18,10 +23,134 @@ from pyspark.sql import functions as F
 EN_STOPWORDS = ("the", "a", "an", "of", "to", "in", "and", "is", "it",
                 "that", "for", "on", "with", "as", "at", "by")
 
+# BM25 (Robertson/Zaragoza) term-frequency saturation and length
+# normalization: the standard Lucene/Anserini defaults.
+K1 = 1.2
+B = 0.75
 
-def whitespace_tokens(text: Column | str) -> Column:
+
+def tokens(text: Column | str) -> Column:
+    """The catalog's document tokenizer: lowercase, split on whitespace
+    runs, drop the empty tokens a leading or trailing run leaves."""
     c = F.col(text) if isinstance(text, str) else text
-    return F.filter(F.split(c, r"\s+"), lambda t: t != "")
+    return F.filter(F.split(F.lower(c), r"\s+"), lambda t: t != "")
+
+
+def tokens_sql(text: str = "text") -> str:
+    """DuckDB twin of :func:`tokens` over the SQL expression ``text``."""
+    return (rf"list_filter(string_split_regex(lower({text}), '\s+'),"
+            r" t -> t <> '')")
+
+
+def doc_terms(docs: DataFrame) -> DataFrame:
+    """(doc_id, term, tf, dl): one row per distinct term of each document
+    of ``docs`` (doc_id, toks — a :func:`tokens` array), with the term's
+    count in the document and the document's token count. Token-free
+    documents have no rows.
+
+    Lazy on purpose: a ``term`` filter above this frame (a query-term
+    ``isin``) sits below the tf aggregate in the optimized plan (term is
+    a grouping key), so only the query terms' postings reach the shuffle.
+    explode_outer, not explode: for an explode of a column Catalyst
+    infers ``size(toks) > 0`` and pushes it through the projection that
+    defines toks, running the tokenizer twice per document; the
+    token-free documents' null rows are dropped by ``term IS NOT NULL``
+    instead. Rows that share a doc_id count as one document (c-TF-IDF's
+    per-class document); dl is then the longest member's length.
+    """
+    return (docs.select("doc_id", F.size("toks").alias("dl"),
+                        F.explode_outer("toks").alias("term"))
+            .filter(F.col("term").isNotNull())
+            .groupBy("doc_id", "term")
+            .agg(F.count(F.lit(1)).alias("tf"), F.max("dl").alias("dl")))
+
+
+def doc_terms_sql(table: str = "documents") -> str:
+    """DuckDB twin of :func:`doc_terms` over ``table`` (doc_id, text): a
+    CTE or subquery body."""
+    return f"""
+SELECT doc_id, term, count(*) AS tf, max(dl) AS dl
+FROM (SELECT doc_id, len(toks) AS dl, unnest(toks) AS term
+      FROM (SELECT doc_id, {tokens_sql()} AS toks FROM {table}))
+GROUP BY doc_id, term
+"""
+
+
+def bm25_stats(docs: DataFrame) -> DataFrame:
+    """The 1-row corpus stats :func:`bm25` reads from ``docs`` (doc_id,
+    toks): n_docs counts only the documents with at least one token, and
+    avgdl is their mean token count."""
+    return docs.filter(F.size("toks") > 0).agg(
+        F.count(F.lit(1)).alias("n_docs"),
+        F.avg(F.size("toks")).alias("avgdl"))
+
+
+# DuckDB twin of bm25_stats over the doc_terms_sql CTE ``terms`` (which
+# has no rows for a token-free document): a CTE body.
+BM25_STATS_SQL = """
+SELECT count(*) AS n_docs, avg(dl) AS avgdl
+FROM (SELECT doc_id, any_value(dl) AS dl FROM terms GROUP BY doc_id)
+"""
+
+
+def bm25(terms_tf: DataFrame, stats: DataFrame | Row) -> DataFrame:
+    """(doc_id, score_e6): BM25 of each document over the query terms in
+    ``terms_tf`` (:func:`doc_terms` rows, already filtered to the query).
+
+    ``stats`` is :func:`bm25_stats`: as a 1-row DataFrame it is
+    broadcast-joined, as its already collected Row it is inlined as
+    literals. The per-document sum folds the term
+    contributions in sorted-term order (F.aggregate over sort_array), so
+    the double sum is order-deterministic in any engine; the score is
+    quantized to an e6 integer.
+    """
+    df_t = terms_tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
+    contrib = terms_tf.join(F.broadcast(df_t), "term")
+    if isinstance(stats, DataFrame):
+        contrib = contrib.crossJoin(F.broadcast(stats))
+        n_docs, avgdl = F.col("n_docs"), F.col("avgdl")
+    else:
+        n_docs, avgdl = F.lit(stats["n_docs"]), F.lit(stats["avgdl"])
+    idf = F.log(F.lit(1.0) + (n_docs - F.col("df") + F.lit(0.5))
+                / (F.col("df") + F.lit(0.5)))
+    c = (idf * (F.col("tf") * (1 + K1))
+         / (F.col("tf") + K1 * (1 - B + B * F.col("dl") / avgdl)))
+    return (contrib.select("doc_id", "term", c.alias("c"))
+            .groupBy("doc_id")
+            .agg(F.sort_array(F.collect_list(F.struct("term", "c")))
+                 .alias("cs"))
+            .select("doc_id",
+                    F.round(F.aggregate(
+                        F.col("cs"), F.lit(0.0),
+                        lambda acc, s: acc + s["c"]) * 1e6)
+                    .cast("bigint").alias("score_e6")))
+
+
+def bm25_sql(pfx: str, term_src: str) -> str:
+    """DuckDB twin of :func:`bm25`: the CTEs ``{pfx}tf``, ``{pfx}df``,
+    ``{pfx}contrib`` and ``{pfx}scored`` (doc_id, score_e6) over the
+    terms of the relation ``term_src``. The enclosing WITH must define
+    ``terms`` (:func:`doc_terms_sql`) and ``stats``
+    (:data:`BM25_STATS_SQL`)."""
+    return f"""
+{pfx}tf AS (
+  SELECT * FROM terms WHERE term IN (SELECT term FROM {term_src})
+),
+{pfx}df AS (SELECT term, count(*) AS df FROM {pfx}tf GROUP BY term),
+{pfx}contrib AS (
+  SELECT t.doc_id, t.term,
+         ln(1.0 + (s.n_docs - d.df + 0.5) / (d.df + 0.5))
+           * (t.tf * (1 + {K1}))
+           / (t.tf + {K1} * (1 - {B} + {B} * t.dl / s.avgdl)) AS c
+  FROM {pfx}tf t JOIN {pfx}df d USING (term) CROSS JOIN stats s
+),
+{pfx}scored AS (
+  SELECT doc_id,
+         CAST(round(list_reduce(
+             list_prepend(0.0, list(c ORDER BY term)),
+             (acc, v) -> acc + v) * 1e6) AS BIGINT) AS score_e6
+  FROM {pfx}contrib GROUP BY doc_id
+)"""
 
 
 def word_tokens(text: Column | str) -> Column:
@@ -29,6 +158,12 @@ def word_tokens(text: Column | str) -> Column:
     c = F.col(text) if isinstance(text, str) else text
     return F.filter(
         F.split(F.lower(c), r"[^a-z0-9']+"), lambda t: t != "")
+
+
+def word_tokens_sql() -> str:
+    """DuckDB twin of :func:`word_tokens` over the column ``text``."""
+    return ("list_filter(string_split_regex(lower(text), '[^a-z0-9'']+'),"
+            " t -> t <> '')")
 
 
 # GPT-2-style pre-tokenizer, simplified to the portable subset (letter runs,

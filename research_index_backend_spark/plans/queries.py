@@ -731,10 +731,8 @@ def _oracle_minhash_cte(k: int = 4) -> str:
         f"min(md5('{i}:' || tok)) AS mh{i}" for i in range(k))
     return rf"""
 WITH tok AS (
-  SELECT DISTINCT doc_id AS id, t AS tok FROM (
-    SELECT doc_id, unnest(string_split_regex(lower(text), '\s+')) AS t
-    FROM documents
-  ) WHERE t <> ''
+  SELECT DISTINCT id, tok FROM (
+    SELECT doc_id AS id, unnest({TS.tokens_sql()}) AS tok FROM documents)
 ),
 sig AS (
   SELECT id, {mins}
@@ -784,12 +782,10 @@ def q_dedup_jaccard(spark, sf_dir):
                          threshold=0.8, max_token_df=400)
 
 
-ORACLE_JACCARD = r"""
+ORACLE_JACCARD = rf"""
 WITH tok AS (
-  SELECT DISTINCT doc_id AS id, t AS tok FROM (
-    SELECT doc_id, unnest(string_split_regex(lower(text), '\s+')) AS t
-    FROM documents
-  ) WHERE t <> ''
+  SELECT DISTINCT id, tok FROM (
+    SELECT doc_id AS id, unnest({TS.tokens_sql()}) AS tok FROM documents)
 ),
 sizes AS (SELECT id, count(*) AS sz FROM tok GROUP BY id),
 rare AS (SELECT tok FROM tok GROUP BY tok HAVING count(*) <= 400),
@@ -1048,7 +1044,7 @@ FROM ranked WHERE rnk <= 5
 def q_text_quality(spark, sf_dir):
     d = _t(spark, sf_dir, "documents")
     c = F.col("text")
-    toks = TS.whitespace_tokens("text")
+    toks = TS.tokens("text")
     n_tok = F.size(toks)
     return d.select(
         "doc_id",
@@ -1060,10 +1056,10 @@ def q_text_quality(spark, sf_dir):
     )
 
 
-ORACLE_QUALITY = r"""
+ORACLE_QUALITY = rf"""
 WITH t AS (
   SELECT doc_id, text,
-         len(list_filter(string_split_regex(text, '\s+'), x -> x <> '')) AS n_tok
+         len({TS.tokens_sql()}) AS n_tok
   FROM documents
 )
 SELECT doc_id,
@@ -1103,7 +1099,7 @@ ORACLE_QUALITY_FILTER = rf"""
 WITH t AS (
   SELECT doc_id, text,
          len(list_filter(string_split_regex(text, '\s+'), x -> x <> '')) AS n_tok,
-         list_filter(string_split_regex(lower(text), '[^a-z0-9'']+'), x -> x <> '') AS wt
+         {TS.word_tokens_sql()} AS wt
   FROM documents
 ),
 sig AS (
@@ -1170,7 +1166,7 @@ ORACLE_TOKEN_STATS = rf"""
 WITH t AS (
   SELECT doc_id, text,
          len(list_filter(string_split_regex(text, '\s+'), x -> x <> '')) AS ws_tokens,
-         list_filter(string_split_regex(lower(text), '[^a-z0-9'']+'), x -> x <> '') AS wt
+         {TS.word_tokens_sql()} AS wt
   FROM documents
 ),
 s AS (

@@ -15,6 +15,7 @@ from ..ingest.pipeline import ingestion_metrics
 from ..operators.dedup import minhash_lsh_star_edges, simhash, tokens_col
 from ..operators.multimodal import attach_binary_metadata
 from ..operators.resolve import resolve_authors
+from ..operators.textstats import tokens_sql
 from .queries import _oracle_minhash_cte, _t
 
 
@@ -296,11 +297,10 @@ def q_guard_empty(spark, sf_dir):
     )
 
 
-ORACLE_GUARD = r"""
+ORACLE_GUARD = rf"""
 WITH t AS (
   SELECT doc_id,
-         length(list_distinct(list_filter(
-             string_split_regex(lower(text), '\s+'), x -> x <> ''))) AS n_tokens
+         length(list_distinct({tokens_sql()})) AS n_tokens
   FROM documents
 )
 SELECT CAST(doc_id AS BIGINT) AS doc_id,
@@ -524,10 +524,8 @@ def _oracle_simhash(bits: int = 16) -> str:
         for i in range(bits))
     return rf"""
 WITH tok AS (
-  SELECT DISTINCT doc_id AS id, t AS tok FROM (
-    SELECT doc_id, unnest(string_split_regex(lower(text), '\s+')) AS t
-    FROM documents
-  ) WHERE t <> ''
+  SELECT DISTINCT id, tok FROM (
+    SELECT doc_id AS id, unnest({tokens_sql()}) AS tok FROM documents)
 ),
 h AS (
   SELECT id,

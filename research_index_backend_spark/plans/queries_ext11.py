@@ -31,6 +31,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..operators.textstats import tokens, tokens_sql
 from .queries import _t
 
 QUERIES_EXT11: dict = {}
@@ -251,7 +252,7 @@ def q_source_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     exactly what the bounded-set plan avoids at 100 TB.
     """
     d = _t(spark, sf_dir, "documents")
-    toks = F.filter(F.split(F.lower("text"), r"\s+"), lambda t: t != "")
+    toks = tokens("text")
     grams = F.transform(
         F.sequence(F.lit(1), F.size("toks") - (_SO_N - 1)),
         lambda i: F.md5(F.array_join(F.slice("toks", i, _SO_N), " ")))
@@ -287,8 +288,7 @@ def q_source_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
 ORACLE_SOURCE_OVERLAP = rf"""
 WITH tok AS (
   SELECT source,
-         list_filter(string_split_regex(lower(text), '\s+'), t -> t <> '')
-           AS toks
+         {tokens_sql()} AS toks
   FROM documents
 ), sh AS (
   SELECT DISTINCT source, g FROM (

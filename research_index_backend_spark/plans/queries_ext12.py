@@ -46,6 +46,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..operators.textstats import tokens, tokens_sql
 from .queries import _t
 
 QUERIES_EXT12: dict = {}
@@ -80,7 +81,7 @@ def q_golden_record(spark: SparkSession, sf_dir: str) -> DataFrame:
     tie-break is an integer-padded string min_by, no window anywhere.
     """
     d = _t(spark, sf_dir, "documents")
-    toks = F.filter(F.split(F.lower("text"), r"\s+"), lambda t: t != "")
+    toks = tokens("text")
     base = (d.select("doc_id", "source", "lang", "n_chars",
                      toks.alias("toks"))
             .filter(F.size("toks") >= 1)
@@ -114,8 +115,7 @@ def q_golden_record(spark: SparkSession, sf_dir: str) -> DataFrame:
 ORACLE_GOLDEN_RECORD = rf"""
 WITH tok AS (
   SELECT doc_id, source, lang, n_chars,
-         list_filter(string_split_regex(lower(text), '\s+'), t -> t <> '')
-           AS toks
+         {tokens_sql()} AS toks
   FROM documents
 ), base AS (
   SELECT doc_id, source, lang, n_chars,
@@ -235,7 +235,7 @@ def q_boolean_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
     global window.
     """
     d = _t(spark, sf_dir, "documents")
-    toks = F.filter(F.split(F.lower("text"), r"\s+"), lambda t: t != "")
+    toks = tokens("text")
     hits = (d.select("doc_id", F.explode(toks.alias("toks")).alias("term"))
             .filter(F.col("term").isin(*_BR_TERMS)))
     return (hits.groupBy("doc_id")
@@ -251,8 +251,7 @@ ORACLE_BOOLEAN_RETRIEVAL = rf"""
 WITH hits AS (
   SELECT doc_id, t.term
   FROM (SELECT doc_id,
-               unnest(list_filter(string_split_regex(lower(text), '\s+'),
-                                  t -> t <> '')) AS term
+               unnest({tokens_sql()}) AS term
         FROM documents) t
   WHERE t.term IN {_BR_TERMS!r}
 )
@@ -287,7 +286,7 @@ def q_phrase_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     map-side-combinable; output ordering is total (n desc, doc_id).
     """
     d = _t(spark, sf_dir, "documents")
-    toks = F.filter(F.split(F.lower("text"), r"\s+"), lambda t: t != "")
+    toks = tokens("text")
     pos = (d.select("doc_id", F.posexplode(toks.alias("toks"))
                     .alias("pos0", "term"))
            .filter(F.col("term").isin(_PS_FIRST, _PS_SECOND)))
@@ -307,8 +306,7 @@ def q_phrase_search(spark: SparkSession, sf_dir: str) -> DataFrame:
 ORACLE_PHRASE_SEARCH = rf"""
 WITH tok AS (
   SELECT doc_id,
-         list_filter(string_split_regex(lower(text), '\s+'), t -> t <> '')
-           AS toks
+         {tokens_sql()} AS toks
   FROM documents
 ), pos AS (
   SELECT doc_id, pos, toks[pos] AS term

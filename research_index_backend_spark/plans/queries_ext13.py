@@ -44,6 +44,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..operators.textstats import tokens, tokens_sql
 from .queries import _t
 
 QUERIES_EXT13: dict = {}
@@ -343,7 +344,7 @@ def q_length_bucket_batching(spark: SparkSession, sf_dir: str) -> DataFrame:
     partials per partition.
     """
     d = _t(spark, sf_dir, "documents")
-    toks = F.filter(F.split(F.lower("text"), r"\s+"), lambda t: t != "")
+    toks = tokens("text")
     base = d.select(F.size(toks).cast("bigint").alias("n_tok"))
     base = base.select("n_tok",
                        F.expr(_lb_cap_sql("n_tok")).cast("bigint")
@@ -369,8 +370,7 @@ def q_length_bucket_batching(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 ORACLE_LENGTH_BUCKET = rf"""
 WITH base AS (
-  SELECT CAST(len(list_filter(string_split_regex(lower(text), '\s+'),
-                              t -> t <> '')) AS BIGINT) AS n_tok
+  SELECT CAST(len({tokens_sql()}) AS BIGINT) AS n_tok
   FROM documents
 ), b AS (
   SELECT n_tok, CAST({_lb_cap_sql('n_tok')} AS BIGINT) AS bucket_cap
@@ -487,7 +487,7 @@ def q_domain_affinity_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     combinable groupBy and a TakeOrdered top-K. No windows.
     """
     d = _t(spark, sf_dir, "documents")
-    toks = F.filter(F.split(F.lower("text"), r"\s+"), lambda t: t != "")
+    toks = tokens("text")
     postings = d.select("doc_id", "source",
                         F.explode(toks).alias("term"))
     freq = (postings.groupBy("term")
@@ -516,8 +516,7 @@ def q_domain_affinity_score(spark: SparkSession, sf_dir: str) -> DataFrame:
 ORACLE_DOMAIN_AFFINITY = rf"""
 WITH postings AS (
   SELECT doc_id, source,
-         unnest(list_filter(string_split_regex(lower(text), '\s+'),
-                            t -> t <> '')) AS term
+         unnest({tokens_sql()}) AS term
   FROM documents
 ), freq AS (
   SELECT term,

@@ -36,7 +36,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..operators.textstats import BPE_PRETOKEN_PATTERN
+from ..operators.textstats import (
+    BPE_PRETOKEN_PATTERN,
+    doc_terms,
+    doc_terms_sql,
+    tokens,
+    tokens_sql,
+)
 from .queries import _t
 from .queries_ext14 import _lg_ladder_sql
 
@@ -64,8 +70,7 @@ def q_tokenizer_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
     |languages| partial rows.
     """
     d = _t(spark, sf_dir, "documents")
-    words = F.size(F.filter(F.split(F.lower("text"), r"\s+"),
-                            lambda t: t != ""))
+    words = F.size(tokens("text"))
     subtoks = F.size(F.regexp_extract_all(
         F.col("text"), F.lit(BPE_PRETOKEN_PATTERN), 0))
     chars = F.length("text") - F.regexp_count("text", F.lit(r"\s"))
@@ -92,8 +97,7 @@ def q_tokenizer_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
 ORACLE_TOKENIZER_FERTILITY = rf"""
 WITH per_doc AS (
   SELECT lang,
-         CAST(len(list_filter(string_split_regex(lower(text), '\s+'),
-                              t -> t <> '')) AS BIGINT) AS w,
+         CAST(len({tokens_sql()}) AS BIGINT) AS w,
          CAST(len(regexp_extract_all(text,
              '{BPE_PRETOKEN_PATTERN}')) AS BIGINT) AS s,
          CAST(length(text) - len(regexp_extract_all(text, '\s'))
@@ -137,9 +141,8 @@ def q_postings_compression_report(spark: SparkSession,
     global); band rollup is map-side combinable to <= 21 x few rows.
     """
     d = _t(spark, sf_dir, "documents")
-    toks = F.filter(F.split(F.lower("text"), r"\s+"), lambda t: t != "")
-    postings = (d.select("doc_id", F.explode(toks).alias("term"))
-                .distinct())
+    postings = (doc_terms(d.select("doc_id", tokens("text").alias("toks")))
+                .select("doc_id", "term"))
     wgap = Window.partitionBy("term").orderBy("doc_id")
     gaps = (postings
             .withColumn("gap",
@@ -166,12 +169,7 @@ def q_postings_compression_report(spark: SparkSession,
 
 
 ORACLE_POSTINGS_COMPRESSION = rf"""
-WITH postings AS (
-  SELECT DISTINCT doc_id, term
-  FROM (SELECT doc_id,
-               unnest(list_filter(string_split_regex(lower(text), '\s+'),
-                                  t -> t <> '')) AS term
-        FROM documents)
+WITH postings AS (SELECT doc_id, term FROM ({doc_terms_sql()})
 ), gaps AS (
   SELECT term,
          doc_id - lag(doc_id, 1, -1) OVER (PARTITION BY term

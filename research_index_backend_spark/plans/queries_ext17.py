@@ -35,6 +35,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..operators.textstats import tokens, tokens_sql
 from .queries import _t
 from .queries_ext14 import _daily, _DAILY_SQL
 
@@ -276,7 +277,7 @@ def q_dedup_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate over the pair table — 1 row out.
     """
     d = _t(spark, sf_dir, "documents")
-    toks = F.filter(F.split(F.lower("text"), r"\s+"), lambda t: t != "")
+    toks = tokens("text")
     sh = F.transform(
         F.sequence(F.lit(1), F.size("toks") - (_DTS_SHINGLE - 1)),
         lambda i: F.md5(F.array_join(F.slice("toks", i, _DTS_SHINGLE),
@@ -310,8 +311,7 @@ def q_dedup_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
 ORACLE_DEDUP_SWEEP = rf"""
 WITH tok AS (
   SELECT doc_id,
-         list_filter(string_split_regex(lower(text), '\s+'), t -> t <> '')
-           AS toks
+         {tokens_sql()} AS toks
   FROM documents
 ), inv AS (
   SELECT DISTINCT doc_id, s FROM (

@@ -23,6 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..operators.textstats import doc_terms, doc_terms_sql, tokens
 from .queries import _t
 
 QUERIES_EXT19: dict = {}
@@ -49,10 +50,10 @@ def q_ctfidf_topterms(spark: SparkSession, sf_dir: str) -> DataFrame:
     partitioned by source over vocab-bounded rows.
     """
     d = _t(spark, sf_dir, "documents")
-    toks = F.filter(F.split(F.lower("text"), r"\s+"), lambda t: t != "")
-    st = (d.select("source", F.explode(toks).alias("term"))
-          .groupBy("source", "term")
-          .agg(F.count(F.lit(1)).alias("tf")))
+    # each source is one class document: doc_terms keyed by source
+    st = (doc_terms(d.select(F.col("source").alias("doc_id"),
+                             tokens("text").alias("toks")))
+          .select(F.col("doc_id").alias("source"), "term", "tf"))
     sdf = st.groupBy("term").agg(
         F.count(F.lit(1)).alias("source_df"))
     ns = st.select("source").distinct().agg(
@@ -71,12 +72,8 @@ def q_ctfidf_topterms(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 ORACLE_CTFIDF = rf"""
 WITH st AS (
-  SELECT source, term, CAST(count(*) AS BIGINT) AS tf
-  FROM (SELECT source,
-               unnest(list_filter(string_split_regex(lower(text), '\s+'),
-                                  t -> t <> '')) AS term
-        FROM documents)
-  GROUP BY 1, 2
+  SELECT doc_id AS source, term, CAST(tf AS BIGINT) AS tf
+  FROM ({doc_terms_sql("(SELECT source AS doc_id, text FROM documents)")})
 ), sdf AS (
   SELECT term, CAST(count(*) AS BIGINT) AS source_df FROM st GROUP BY 1
 ), ns AS (

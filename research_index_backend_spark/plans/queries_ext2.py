@@ -47,6 +47,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..operators.dedup import simhash
+from ..operators.textstats import doc_terms, doc_terms_sql, tokens, tokens_sql
 from .queries import _t
 
 # ---------------------------------------------------------------------------
@@ -255,13 +256,10 @@ def q_tfidf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     ln() difference between engines cannot flip the result row set.
     """
     d = _t(spark, sf_dir, "documents")
-    tok = d.select(
-        "doc_id",
-        F.explode(F.filter(F.split(F.lower("text"), r"\s+"),
-                           lambda t: t != "")).alias("tok"))
-    tf = tok.groupBy("doc_id", "tok").agg(F.count(F.lit(1)).alias("tf"))
-    df_docs = (tok.distinct().groupBy("tok")
-               .agg(F.count(F.lit(1)).alias("df")))
+    tf = (doc_terms(d.select("doc_id", tokens("text").alias("toks")))
+          .select("doc_id", F.col("term").alias("tok"), "tf"))
+    # one doc_terms row per (doc, term): counting them per term is df
+    df_docs = tf.groupBy("tok").agg(F.count(F.lit(1)).alias("df"))
     n_docs = d.agg(F.count(F.lit(1)).alias("n_docs"))
     scored = (
         tf.join(F.broadcast(df_docs), "tok")
@@ -276,16 +274,9 @@ def q_tfidf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select("doc_id", "tok", "tf", "df", "rnk"))
 
 
-ORACLE_TFIDF = r"""
-WITH tok AS (
-  SELECT doc_id, t AS tok FROM (
-    SELECT doc_id, unnest(string_split_regex(lower(text), '\s+')) AS t
-    FROM documents)
-  WHERE t <> ''
-),
-tf AS (SELECT doc_id, tok, count(*) AS tf FROM tok GROUP BY 1, 2),
-dfd AS (SELECT tok, count(*) AS df
-        FROM (SELECT DISTINCT doc_id, tok FROM tok) GROUP BY 1),
+ORACLE_TFIDF = f"""
+WITH tf AS (SELECT doc_id, term AS tok, tf FROM ({doc_terms_sql()})),
+dfd AS (SELECT tok, count(*) AS df FROM tf GROUP BY 1),
 nd AS (SELECT count(*) AS n_docs FROM documents),
 scored AS (
   SELECT tf.doc_id, tf.tok, tf.tf, dfd.df,
@@ -318,7 +309,7 @@ def q_bigram_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     the cut is deterministic.
     """
     d = _t(spark, sf_dir, "documents")
-    toks = F.filter(F.split(F.lower("text"), r"\s+"), lambda t: t != "")
+    toks = tokens("text")
     # token array STAGED to a named column before the bigram HOF
     # references it per position (the novelty_curve_report
     # CollapseProject lesson; measured 0.69 -> 0.46s at sf0.1)
@@ -337,11 +328,10 @@ def q_bigram_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_BIGRAM = r"""
+ORACLE_BIGRAM = rf"""
 WITH t AS (
   SELECT doc_id,
-         list_filter(string_split_regex(lower(text), '\s+'),
-                     x -> x <> '') AS toks
+         {tokens_sql()} AS toks
   FROM documents
 ),
 b AS (
@@ -804,7 +794,7 @@ def q_doc_chunk(spark: SparkSession, sf_dir: str) -> DataFrame:
     md5 — the narrow-output discipline every text query here follows.
     """
     d = _t(spark, sf_dir, "documents")
-    toks = F.filter(F.split(F.lower("text"), r"\s+"), lambda t: t != "")
+    toks = tokens("text")
     with_toks = (d.select("doc_id", toks.alias("toks"))
                  .filter(F.size("toks") >= 1))
     starts = F.sequence(F.lit(1), F.size("toks"), F.lit(_CHUNK_STEP))
@@ -823,8 +813,7 @@ def q_doc_chunk(spark: SparkSession, sf_dir: str) -> DataFrame:
 ORACLE_DOC_CHUNK = rf"""
 WITH t AS (
   SELECT doc_id,
-         list_filter(string_split_regex(lower(text), '\s+'),
-                     x -> x <> '') AS toks
+         {tokens_sql()} AS toks
   FROM documents
 ),
 s AS (
@@ -864,8 +853,7 @@ def q_sequence_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
     division: exact in any engine.
     """
     d = _t(spark, sf_dir, "documents")
-    n_tok = F.size(F.filter(F.split(F.lower("text"), r"\s+"),
-                            lambda t: t != ""))
+    n_tok = F.size(tokens("text"))
     w = (Window.partitionBy("source").orderBy("doc_id")
          .rowsBetween(Window.unboundedPreceding, -1))
     return (d.select("doc_id", "source", n_tok.alias("n_tokens"))
@@ -879,8 +867,7 @@ def q_sequence_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
 ORACLE_SEQUENCE_PACK = rf"""
 WITH t AS (
   SELECT doc_id, source,
-         CAST(len(list_filter(string_split_regex(lower(text), '\s+'),
-                              x -> x <> '')) AS INT) AS n_tokens
+         CAST(len({tokens_sql()}) AS INT) AS n_tokens
   FROM documents
 )
 SELECT doc_id, source, n_tokens,
@@ -916,8 +903,7 @@ def q_sequence_pack_sharded(spark: SparkSession, sf_dir: str) -> DataFrame:
     distributed packer does at 100 TB.
     """
     d = _t(spark, sf_dir, "documents")
-    n_tok = F.size(F.filter(F.split(F.lower("text"), r"\s+"),
-                            lambda t: t != ""))
+    n_tok = F.size(tokens("text"))
     base = d.select(
         "doc_id", "source", n_tok.alias("n_tokens"),
         F.floor(F.col("doc_id") / _PACK_SHARD_ROWS).alias("shard"))
@@ -950,8 +936,7 @@ def q_sequence_pack_sharded(spark: SparkSession, sf_dir: str) -> DataFrame:
 ORACLE_SEQUENCE_PACK_SHARDED = rf"""
 WITH t AS (
   SELECT doc_id, source,
-         CAST(len(list_filter(string_split_regex(lower(text), '\s+'),
-                              x -> x <> '')) AS INT) AS n_tokens,
+         CAST(len({tokens_sql()}) AS INT) AS n_tokens,
          doc_id // {_PACK_SHARD_ROWS} AS shard
   FROM documents
 ), local AS (

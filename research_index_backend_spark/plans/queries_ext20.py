@@ -46,6 +46,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..operators.textstats import doc_terms, doc_terms_sql, tokens
 from .queries import _t
 
 QUERIES_EXT20: dict = {}
@@ -85,12 +86,9 @@ def q_hybrid_rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.ann import brute_force_topk
     d = _t(spark, sf_dir, "documents")
     emb = _t(spark, sf_dir, "embeddings")
-    toks = F.filter(F.split(F.lower("text"), r"\s+"), lambda t: t != "")
-    tf = (d.filter(F.col("doc_id") != _RRF_QVEC)
-          .select("doc_id", F.explode(toks).alias("term"))
-          .filter(F.col("term").isin(*_RRF_TERMS))
-          .groupBy("doc_id", "term")
-          .agg(F.count(F.lit(1)).alias("tf")))
+    tf = (doc_terms(d.filter(F.col("doc_id") != _RRF_QVEC)
+                    .select("doc_id", tokens("text").alias("toks")))
+          .filter(F.col("term").isin(*_RRF_TERMS)))
     dft = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
     nd = d.agg(F.count(F.lit(1)).alias("n_docs"))
     lex_pool = (tf.join(F.broadcast(dft), "term")
@@ -127,13 +125,9 @@ def q_hybrid_rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 ORACLE_RRF = rf"""
 WITH tf AS (
-  SELECT doc_id, term, CAST(count(*) AS BIGINT) AS tf
-  FROM (SELECT doc_id,
-               unnest(list_filter(string_split_regex(lower(text), '\s+'),
-                                  t -> t <> '')) AS term
-        FROM documents WHERE doc_id <> {_RRF_QVEC})
+  SELECT doc_id, term, tf FROM ({doc_terms_sql(
+      f"(SELECT * FROM documents WHERE doc_id <> {_RRF_QVEC})")})
   WHERE term IN ('vector', 'hash', 'window')
-  GROUP BY 1, 2
 ), dft AS (
   SELECT term, CAST(count(*) AS BIGINT) AS df FROM tf GROUP BY 1
 ), nd AS (

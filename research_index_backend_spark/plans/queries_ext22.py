@@ -38,6 +38,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..operators.textstats import tokens, tokens_sql
 from .queries import _t
 
 QUERIES_EXT22: dict = {}
@@ -430,8 +431,7 @@ def q_loo_source_impact(spark: SparkSession, sf_dir: str) -> DataFrame:
     filtered — division guard, documented.
     """
     d = _t(spark, sf_dir, "documents")
-    toks = F.size(F.filter(F.split(F.lower("text"), r"\s+"),
-                           lambda t: t != ""))
+    toks = F.size(tokens("text"))
     per = (d.select("source", toks.alias("tok"))
            .groupBy("source")
            .agg(F.count(F.lit(1)).cast("decimal(38,0)").alias("nk"),
@@ -451,11 +451,10 @@ def q_loo_source_impact(spark: SparkSession, sf_dir: str) -> DataFrame:
             .orderBy(F.desc("delta_e4"), "source"))
 
 
-ORACLE_LOO = r"""
+ORACLE_LOO = rf"""
 WITH per AS (
   SELECT source, CAST(count(*) AS HUGEINT) AS nk,
-         CAST(sum(len(list_filter(string_split_regex(lower(text), '\s+'),
-                                  t -> t <> ''))) AS HUGEINT) AS tk
+         CAST(sum(len({tokens_sql()})) AS HUGEINT) AS tk
   FROM documents GROUP BY 1
 ),
 g AS (SELECT sum(nk) AS n, sum(tk) AS t FROM per),

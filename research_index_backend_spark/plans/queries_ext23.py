@@ -35,6 +35,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..operators.textstats import doc_terms, doc_terms_sql, tokens
 from .queries import _t
 
 QUERIES_EXT23: dict = {}
@@ -79,22 +80,15 @@ def q_qlm_dirichlet_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     crosses it).
     """
     d = _t(spark, sf_dir, "documents")
-    toks = F.filter(F.split(F.lower("text"), r"\s+"), lambda t: t != "")
-    docs = (d.select("doc_id", toks.alias("toks"))
-            .select("doc_id", F.size("toks").alias("dl"),
-                    F.explode("toks").alias("term"))
+    docs = (d.select("doc_id", tokens("text").alias("toks"))
             .localCheckpoint())   # tokenize once for tf, dl, cf and C
-    c_tot = (docs.groupBy("doc_id").agg(F.first("dl").alias("dl"))
-             .agg(F.sum("dl").alias("c")))
-    cf = (docs.filter(F.col("term").isin(*_QL_TERMS))
-          .groupBy("term").agg(F.count(F.lit(1)).alias("cf")))
+    c_tot = docs.agg(F.sum(F.size("toks")).alias("c"))
+    tf = doc_terms(docs).filter(F.col("term").isin(*_QL_TERMS))
+    cf = tf.groupBy("term").agg(F.sum("tf").alias("cf"))
     pc = (cf.crossJoin(F.broadcast(c_tot))
           .select("term",
                   F.expr("(1000000000000 * CAST(cf AS DECIMAL(38,0)))"
                          " div c").alias("pc_e12")))
-    tf = (docs.filter(F.col("term").isin(*_QL_TERMS))
-          .groupBy("doc_id", "term")
-          .agg(F.count(F.lit(1)).alias("tf"), F.first("dl").alias("dl")))
     cand = tf.groupBy("doc_id").agg(F.first("dl").alias("dl"))
     full = (cand.crossJoin(F.broadcast(pc))
             .join(tf.select("doc_id", "term", "tf"),
@@ -123,29 +117,18 @@ def q_qlm_dirichlet_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 ORACLE_QLM = rf"""
-WITH docs AS (
-  SELECT doc_id, len(toks) AS dl, unnest(toks) AS term
-  FROM (SELECT doc_id,
-               list_filter(string_split_regex(lower(text), '\s+'),
-                           t -> t <> '') AS toks
-        FROM documents)
-),
+WITH dt AS ({doc_terms_sql()}),
 c_tot AS (
   SELECT CAST(sum(dl) AS HUGEINT) AS c
-  FROM (SELECT doc_id, any_value(dl) AS dl FROM docs GROUP BY doc_id)
-),
-cf AS (
-  SELECT term, CAST(count(*) AS HUGEINT) AS cf FROM docs
-  WHERE term IN ('vector', 'hash', 'window') GROUP BY 1
-),
-pc AS (
-  SELECT term, (1000000000000 * cf) // c AS pc_e12 FROM cf, c_tot
+  FROM (SELECT doc_id, any_value(dl) AS dl FROM dt GROUP BY doc_id)
 ),
 tf AS (
-  SELECT doc_id, term, CAST(count(*) AS HUGEINT) AS tf,
-         any_value(dl) AS dl
-  FROM docs WHERE term IN ('vector', 'hash', 'window')
-  GROUP BY 1, 2
+  SELECT doc_id, term, CAST(tf AS HUGEINT) AS tf, dl
+  FROM dt WHERE term IN ('vector', 'hash', 'window')
+),
+cf AS (SELECT term, sum(tf) AS cf FROM tf GROUP BY 1),
+pc AS (
+  SELECT term, (1000000000000 * cf) // c AS pc_e12 FROM cf, c_tot
 ),
 cand AS (SELECT doc_id, any_value(dl) AS dl FROM tf GROUP BY 1),
 fullx AS (

@@ -32,6 +32,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..operators.textstats import tokens, tokens_sql
 from .queries import _t
 
 QUERIES_EXT24: dict = {}
@@ -199,8 +200,7 @@ def q_packing_efficiency_sweep(spark: SparkSession,
     combinable aggregate per L.
     """
     d = _t(spark, sf_dir, "documents")
-    toks = F.size(F.filter(F.split(F.lower("text"), r"\s+"),
-                           lambda t: t != ""))
+    toks = F.size(tokens("text"))
     ladder = F.array(*[F.lit(k) for k in _PK_LADDER])
     x = (d.select(toks.alias("tok"))
          .select("tok", F.explode(ladder).alias("max_len")))
@@ -225,10 +225,9 @@ def q_packing_efficiency_sweep(spark: SparkSession,
 
 _PK_LADDER_SQL = ", ".join(str(k) for k in _PK_LADDER)
 
-ORACLE_PACKING_SWEEP = r"""
+ORACLE_PACKING_SWEEP = rf"""
 WITH x AS (
-  SELECT len(list_filter(string_split_regex(lower(text), '\s+'),
-                         t -> t <> '')) AS tok,
+  SELECT len({tokens_sql()}) AS tok,
          unnest([__LADDER__]) AS max_len
   FROM documents
 ),

@@ -35,6 +35,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..graph.analytics import pagerank, superstep
+from ..operators.textstats import tokens, tokens_sql
 from .queries import _t
 
 QUERIES_EXT28: dict = {}
@@ -173,8 +174,7 @@ def q_textrank_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the regex split per reference (the r7 token_stats/quality_filter
     # duplicated-expression-tree lesson, 7.9x -> 5.0x there).
     tok_d = d.select(
-        F.filter(F.split(F.lower("text"), r"\s+"),
-                 lambda t: t != "").alias("toks"))
+        tokens("text").alias("toks"))
     tk = F.col("toks")
     bigrams = F.when(F.size(tk) < 2, F.array().cast("array<string>")) \
         .otherwise(F.transform(
@@ -206,10 +206,9 @@ def q_textrank_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _oracle_textrank(n_iter: int = _TR_ITER) -> str:
-    parts = [r"""
+    parts = [rf"""
 WITH t AS (
-  SELECT list_filter(string_split_regex(lower(text), '\s+'),
-                     x -> x <> '') AS toks
+  SELECT {tokens_sql()} AS toks
   FROM documents
 ), bg AS (
   SELECT toks[i] AS w1, toks[i + 1] AS w2

@@ -26,6 +26,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..operators.textstats import tokens, tokens_sql
 from .queries import _t
 
 QUERIES_EXT29: dict = {}
@@ -113,8 +114,7 @@ def q_chao_distinct_estimate(spark: SparkSession,
     rides DECIMAL, the kruskal overflow rule).
     """
     d = _t(spark, sf_dir, "documents")
-    toks = F.filter(F.split(F.lower("text"), r"\s+"),
-                    lambda t: t != "")
+    toks = tokens("text")
     # token array STAGED to a named column before the shingle HOF
     # references it per position (the novelty_curve_report
     # CollapseProject lesson: unstaged, the regex split re-evaluates
@@ -152,8 +152,7 @@ def q_chao_distinct_estimate(spark: SparkSession,
 ORACLE_CHAO = rf"""
 WITH t AS (
   SELECT source,
-         list_filter(string_split_regex(lower(text), '\s+'),
-                     x -> x <> '') AS toks
+         {tokens_sql()} AS toks
   FROM documents
 ), sh AS (
   SELECT source,

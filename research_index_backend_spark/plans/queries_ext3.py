@@ -32,6 +32,16 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..operators.textstats import (
+    BM25_STATS_SQL,
+    bm25,
+    bm25_sql,
+    bm25_stats,
+    doc_terms,
+    doc_terms_sql,
+    tokens,
+    tokens_sql,
+)
 from .queries import _t
 
 QUERIES_EXT3: dict = {}
@@ -39,12 +49,10 @@ ORACLE_EXT3: dict = {}
 
 
 # ---------------------------------------------------------------------------
-# bm25_topk — BM25 ranked retrieval (k1=1.2, b=0.75)
+# bm25_topk — BM25 ranked retrieval (operators.textstats.bm25)
 # ---------------------------------------------------------------------------
 
 _BM25_TERMS = ("spark", "window", "table")
-_BM25_K1 = 1.2
-_BM25_B = 0.75
 _BM25_K = 10
 
 
@@ -52,93 +60,29 @@ def q_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-10 documents by BM25 for a fixed 3-term query.
 
     Plan shape (the 100 TB story):
-      - one tokenize pass computes doc length AND the per-(doc, term)
-        tf for query terms only (the isin filter prunes the explode
-        before the shuffle — candidate rows, not the whole posting list);
-      - corpus stats (N, avgdl) and per-term df are 1-row / n-term
-        aggregates, broadcast into the scoring join;
-      - per-doc score folds term contributions in sorted-term order
-        (F.aggregate over sort_array) so the double sum is
-        order-deterministic in any engine;
+      - one tokenize pass (checkpointed token arrays) feeds the corpus
+        stats AND the per-(doc, term) tf; the query-term isin filter
+        sits below doc_terms' tf aggregate, so only candidate postings
+        reach the shuffle, not the whole posting list;
+      - corpus stats (N, avgdl) are a 1-row aggregate and per-term df an
+        n-term one, both broadcast into the scoring join;
       - top-k is orderBy+limit -> TakeOrderedAndProject (per-partition
         partial top-k, no global sort shuffle).
     """
     d = _t(spark, sf_dir, "documents")
-    toks = F.filter(F.split(F.lower("text"), r"\s+"), lambda t: t != "")
-    docs = d.select("doc_id", toks.alias("toks")) \
-            .select("doc_id", F.size("toks").alias("dl"),
-                    F.explode("toks").alias("term")) \
+    docs = d.select("doc_id", tokens("text").alias("toks")) \
             .localCheckpoint()  # tokenize once for tf, dl, and stats
-
-    stats = docs.groupBy("doc_id").agg(F.first("dl").alias("dl")) \
-                .agg(F.count(F.lit(1)).alias("n_docs"),
-                     F.avg("dl").alias("avgdl"))
-
-    tf = (docs.filter(F.col("term").isin(*_BM25_TERMS))
-          .groupBy("doc_id", "term")
-          .agg(F.count(F.lit(1)).alias("tf"), F.first("dl").alias("dl")))
-    df_t = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
-
-    contrib = (
-        tf.join(F.broadcast(df_t), "term")
-        .crossJoin(F.broadcast(stats))
-        .withColumn(
-            "idf",
-            F.log(F.lit(1.0)
-                  + (F.col("n_docs") - F.col("df") + F.lit(0.5))
-                  / (F.col("df") + F.lit(0.5))))
-        .withColumn(
-            "c",
-            F.col("idf") * (F.col("tf") * (1 + _BM25_K1))
-            / (F.col("tf") + _BM25_K1 * (1 - _BM25_B
-                                         + _BM25_B * F.col("dl")
-                                         / F.col("avgdl")))))
-    scored = (
-        contrib.groupBy("doc_id")
-        .agg(F.sort_array(F.collect_list(F.struct("term", "c")))
-             .alias("cs"))
-        .select(
-            "doc_id",
-            F.round(F.aggregate(
-                F.col("cs"), F.lit(0.0),
-                lambda acc, s: acc + s["c"]) * 1e6).cast("bigint")
-            .alias("score_e6")))
-    return (scored
+    tf = doc_terms(docs).filter(F.col("term").isin(*_BM25_TERMS))
+    return (bm25(tf, bm25_stats(docs))
             .orderBy(F.col("score_e6").desc(), "doc_id")
             .limit(_BM25_K))
 
 
-ORACLE_BM25 = rf"""
-WITH tok AS (
-  SELECT doc_id,
-         list_filter(string_split_regex(lower(text), '\s+'), t -> t <> '')
-           AS toks
-  FROM documents
-), docs AS (
-  SELECT doc_id, len(toks) AS dl, unnest(toks) AS term FROM tok
-), stats AS (
-  SELECT count(*) AS n_docs, avg(dl) AS avgdl
-  FROM (SELECT doc_id, any_value(dl) AS dl FROM docs GROUP BY doc_id)
-), tf AS (
-  SELECT doc_id, term, count(*) AS tf, any_value(dl) AS dl
-  FROM docs WHERE term IN {tuple(_BM25_TERMS)}
-  GROUP BY doc_id, term
-), df_t AS (
-  SELECT term, count(*) AS df FROM tf GROUP BY term
-), contrib AS (
-  SELECT tf.doc_id, tf.term,
-         ln(1.0 + (s.n_docs - d.df + 0.5) / (d.df + 0.5))
-           * (tf.tf * (1 + {_BM25_K1}))
-           / (tf.tf + {_BM25_K1} * (1 - {_BM25_B}
-                                    + {_BM25_B} * tf.dl / s.avgdl)) AS c
-  FROM tf JOIN df_t d USING (term) CROSS JOIN stats s
-), scored AS (
-  SELECT doc_id,
-         CAST(round(list_reduce(
-             list_prepend(0.0, list(c ORDER BY term)),
-             (acc, v) -> acc + v) * 1e6) AS BIGINT) AS score_e6
-  FROM contrib GROUP BY doc_id
-)
+ORACLE_BM25 = f"""
+WITH terms AS ({doc_terms_sql()}),
+stats AS ({BM25_STATS_SQL}),
+seed AS (SELECT unnest({list(_BM25_TERMS)}) AS term),
+{bm25_sql('', 'seed')}
 SELECT doc_id, score_e6 FROM scored
 ORDER BY score_e6 DESC, doc_id LIMIT {_BM25_K}
 """
@@ -168,7 +112,7 @@ def q_decontaminate_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     the corpus: one scan, map-side join, partial-agg count.
     """
     d = _t(spark, sf_dir, "documents")
-    toks = F.filter(F.split(F.lower("text"), r"\s+"), lambda t: t != "")
+    toks = tokens("text")
     grams = F.transform(
         F.sequence(F.lit(1), F.size("toks") - (_DECON_N - 1)),
         lambda i: F.md5(F.array_join(F.slice("toks", i, _DECON_N), " ")))
@@ -187,8 +131,7 @@ def q_decontaminate_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
 ORACLE_DECON = rf"""
 WITH tok AS (
   SELECT doc_id,
-         list_filter(string_split_regex(lower(text), '\s+'), t -> t <> '')
-           AS toks
+         {tokens_sql()} AS toks
   FROM documents
 ), sh AS (
   SELECT doc_id,
@@ -225,7 +168,7 @@ def q_text_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
     quantized e6.
     """
     d = _t(spark, sf_dir, "documents")
-    toks = F.filter(F.split(F.lower("text"), r"\s+"), lambda t: t != "")
+    toks = tokens("text")
     grams5 = F.transform(
         F.sequence(F.lit(1), F.size("toks") - 4),
         lambda i: F.array_join(F.slice("toks", i, 5), " "))
@@ -260,11 +203,10 @@ def q_text_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select("doc_id", "top_bigram_frac_e6", "dup_5gram_frac_e6"))
 
 
-ORACLE_REPETITION = r"""
+ORACLE_REPETITION = rf"""
 WITH tok AS (
   SELECT doc_id,
-         list_filter(string_split_regex(lower(text), '\s+'), t -> t <> '')
-           AS toks
+         {tokens_sql()} AS toks
   FROM documents
 ), base AS (
   SELECT doc_id,
@@ -454,8 +396,7 @@ def q_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     TakeOrderedAndProject. Comparing ln(u)/w (monotone in u^(1/w))
     avoids pow() library differences across engines."""
     d = _t(spark, sf_dir, "documents")
-    n_tok = F.size(F.filter(F.split(F.lower("text"), r"\s+"),
-                            lambda t: t != ""))
+    n_tok = F.size(tokens("text"))
     u = ((F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 13),
                  16, 10).cast("double") + F.lit(1.0))
          / F.lit(float(16 ** 13)))
@@ -471,8 +412,7 @@ def q_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 ORACLE_WEIGHTED_SAMPLE = rf"""
 WITH base AS (
   SELECT doc_id,
-         len(list_filter(string_split_regex(lower(text), '\s+'),
-                         t -> t <> '')) AS n_tokens,
+         len({tokens_sql()}) AS n_tokens,
          (CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 13))
                AS UBIGINT) + 1.0) / {float(16 ** 13)} AS u
   FROM documents
@@ -658,8 +598,7 @@ def q_rerank_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     cand = q_bm25_topk(spark, sf_dir)
     d = _t(spark, sf_dir, "documents")
-    toks = F.array_distinct(
-        F.filter(F.split(F.lower("text"), r"\s+"), lambda t: t != ""))
+    toks = F.array_distinct(tokens("text"))
     qarr = F.array(*[F.lit(t) for t in _BM25_TERMS])
     scored = (d.join(F.broadcast(cand), "doc_id")
               .select(
@@ -680,8 +619,7 @@ def _oracle_rerank() -> str:
 WITH bm AS ({ORACLE_BM25}),
 tok AS (
   SELECT doc_id,
-         list_distinct(list_filter(
-             string_split_regex(lower(text), '\s+'), t -> t <> '')) AS toks
+         list_distinct({tokens_sql()}) AS toks
   FROM documents
 ), q AS (SELECT {list(_BM25_TERMS)!r}::VARCHAR[] AS qt)
 SELECT bm.doc_id,

@@ -34,6 +34,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..operators.textstats import tokens, tokens_sql
 from .queries import _t
 
 QUERIES_EXT30: dict = {}
@@ -273,8 +274,7 @@ def q_mmr_diversify(spark: SparkSession, sf_dir: str) -> DataFrame:
     is POOL^2 * K, corpus-independent.
     """
     d = _t(spark, sf_dir, "documents")
-    toks = F.filter(F.split(F.lower("text"), r"\s+"),
-                    lambda t: t != "")
+    toks = tokens("text")
     tf = (d.select("doc_id", F.explode(toks).alias("term"))
           .filter(F.col("term").isin(*_MMR_TERMS))
           .groupBy("doc_id")
@@ -349,9 +349,7 @@ def _oracle_mmr() -> str:
     return rf"""
 WITH tf AS MATERIALIZED (
   SELECT doc_id, count(*) AS rel_tf
-  FROM (SELECT doc_id, unnest(list_filter(
-          string_split_regex(lower(text), '\s+'), x -> x <> ''))
-          AS term FROM documents)
+  FROM (SELECT doc_id, unnest({tokens_sql()}) AS term FROM documents)
   WHERE term IN ({terms})
   GROUP BY doc_id
 ), ranked AS MATERIALIZED (
@@ -360,9 +358,7 @@ WITH tf AS MATERIALIZED (
   FROM tf ORDER BY rel_tf DESC, doc_id LIMIT {_MMR_POOL}
 ), ptoks AS MATERIALIZED (
   SELECT r.doc_id, r.rank,
-         list_distinct(list_filter(
-           string_split_regex(lower(d.text), '\s+'), x -> x <> ''))
-           AS ts
+         list_distinct({tokens_sql('d.text')}) AS ts
   FROM ranked r JOIN documents d ON r.doc_id = d.doc_id
 ), sims AS MATERIALIZED (
   SELECT a.rank AS ra, b.rank AS rb,

@@ -25,6 +25,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..operators.textstats import tokens, tokens_sql
 from .queries import _t
 
 QUERIES_EXT36: dict = {}
@@ -72,8 +73,7 @@ def q_curation_funnel_report(spark: SparkSession,
     and drops the text; shingles are computed AT the s2 checkpoint —
     only for quality+dedup survivors — and toks dropped there."""
     d = _t(spark, sf_dir, "documents")
-    toks = F.filter(F.split(F.lower("text"), r"\s+"),
-                    lambda t: t != "")
+    toks = tokens("text")
     base = d.select(
         "doc_id",
         F.md5("text").alias("h"),
@@ -128,13 +128,9 @@ def q_curation_funnel_report(spark: SparkSession,
 ORACLE_CURATION_FUNNEL = rf"""
 WITH base AS (
   SELECT doc_id, text,
-         list_filter(string_split_regex(lower(text), '\s+'),
-                     x -> x <> '') AS toks,
-         len(list_filter(string_split_regex(lower(text), '\s+'),
-                     x -> x <> '')) AS nw,
-         len(list_distinct(list_filter(
-             string_split_regex(lower(text), '\s+'),
-             x -> x <> ''))) AS nd
+         {tokens_sql()} AS toks,
+         len({tokens_sql()}) AS nw,
+         len(list_distinct({tokens_sql()})) AS nd
   FROM documents
 ), s1 AS (
   SELECT * FROM base

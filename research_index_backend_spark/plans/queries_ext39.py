@@ -21,6 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..operators.textstats import tokens, tokens_sql
 from .queries import _t
 
 QUERIES_EXT39: dict = {}
@@ -63,8 +64,7 @@ def q_novelty_curve_report(spark: SparkSession,
     anchor = d.agg(F.max("doc_id").alias("mx"))
     tranche = F.expr(f"least(doc_id * {_NC_TRANCHES}"
                      f" div (mx + 1), {_NC_TRANCHES - 1})")
-    toks = F.filter(F.split(F.lower("text"), r"\s+"),
-                    lambda t: t != "")
+    toks = tokens("text")
     sh = F.when(F.size("tk") < _NC_SHINGLE,
                 F.array().cast("array<string>")) \
         .otherwise(F.transform(
@@ -117,15 +117,12 @@ base AS (
   SELECT least(doc_id * {_NC_TRANCHES} // (anchor.mx + 1),
                {_NC_TRANCHES - 1}) AS tranche,
          doc_id,
-         CASE WHEN len(list_filter(string_split_regex(lower(text),
-                '\s+'), x -> x <> '')) < {_NC_SHINGLE} THEN []
+         CASE WHEN len({tokens_sql()}) < {_NC_SHINGLE} THEN []
          ELSE [array_to_string(
-                 list_filter(string_split_regex(lower(text), '\s+'),
-                             x -> x <> '')[i : i + {_NC_SHINGLE} - 1],
+                 {tokens_sql()}[i : i + {_NC_SHINGLE} - 1],
                  ' ')
                for i in range(1,
-                 len(list_filter(string_split_regex(lower(text),
-                     '\s+'), x -> x <> '')) - {_NC_SHINGLE} + 2)]
+                 len({tokens_sql()}) - {_NC_SHINGLE} + 2)]
          END AS shs
   FROM documents, anchor
 ), docs AS (

@@ -32,6 +32,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..graph.queries import PropertyGraph
+from ..operators.textstats import tokens, tokens_sql
 from .queries import _t
 
 QUERIES_EXT4: dict = {}
@@ -272,7 +273,7 @@ def q_vocab_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     on the QUANTIZED score so the cut is engine-stable."""
     d = _t(spark, sf_dir, "documents")
     side = (F.regexp_extract("source", r"(\d+)", 1).cast("int") < 10)
-    toks = F.filter(F.split(F.lower("text"), r"\s+"), lambda t: t != "")
+    toks = tokens("text")
     tf = (d.select(side.alias("in_a"), F.explode(toks).alias("tok"))
           .groupBy("tok")
           .agg(F.count_if(F.col("in_a")).alias("a"),
@@ -290,8 +291,7 @@ def q_vocab_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
 ORACLE_VOCAB_DRIFT = rf"""
 WITH tok AS (
   SELECT CAST(regexp_extract(source, '(\d+)', 1) AS INT) < 10 AS in_a,
-         unnest(list_filter(string_split_regex(lower(text), '\s+'),
-                            t -> t <> '')) AS tok
+         unnest({tokens_sql()}) AS tok
   FROM documents
 ), tf AS (
   SELECT tok,
@@ -448,8 +448,7 @@ def q_mix_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     normalization window is a deliberate single-partition step over a
     dim-sized frame, never over documents."""
     d = _t(spark, sf_dir, "documents")
-    toks = F.size(F.filter(F.split(F.lower("text"), r"\s+"),
-                           lambda t: t != ""))
+    toks = F.size(tokens("text"))
     per_src = (d.select("source", toks.alias("n_toks"))
                .groupBy("source")
                .agg(F.count(F.lit(1)).alias("n_docs"),
@@ -469,8 +468,7 @@ def q_mix_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
 ORACLE_MIX_PLAN = rf"""
 WITH per_src AS (
   SELECT source, count(*) AS n_docs,
-         CAST(sum(len(list_filter(string_split_regex(lower(text), '\s+'),
-                                  t -> t <> ''))) AS BIGINT) AS n_tokens
+         CAST(sum(len({tokens_sql()})) AS BIGINT) AS n_tokens
   FROM documents GROUP BY 1
 ), shared AS (
   SELECT *, n_tokens / CAST(sum(n_tokens) OVER () AS DOUBLE) AS share
@@ -499,8 +497,7 @@ def q_token_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     one tiny aggregate; floor(log2(n)) is exact on engine-identical
     IEEE doubles for the only boundary cases (powers of two)."""
     d = _t(spark, sf_dir, "documents")
-    n = F.size(F.filter(F.split(F.lower("text"), r"\s+"),
-                        lambda t: t != ""))
+    n = F.size(tokens("text"))
     b = F.floor(F.log2(F.greatest(n, F.lit(1)))).cast("int")
     return (d.select(b.alias("bucket"), n.alias("n_toks"))
             .groupBy("bucket")
@@ -513,10 +510,9 @@ def q_token_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
                     "n_docs", "sum_tokens", "min_tokens", "max_tokens"))
 
 
-ORACLE_TOKEN_HIST = r"""
+ORACLE_TOKEN_HIST = rf"""
 WITH n AS (
-  SELECT len(list_filter(string_split_regex(lower(text), '\s+'),
-             t -> t <> '')) AS n_toks
+  SELECT len({tokens_sql()}) AS n_toks
   FROM documents
 ), b AS (
   SELECT CAST(floor(log2(greatest(n_toks, 1))) AS INT) AS bucket, n_toks
@@ -559,7 +555,7 @@ def q_quality_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from pyspark.sql import Window
     d = _t(spark, sf_dir, "documents")
-    toks = F.filter(F.split(F.lower("text"), r"\s+"), lambda t: t != "")
+    toks = tokens("text")
     base = (d.select("doc_id", toks.alias("toks"))
             .select("doc_id",
                     F.size("toks").alias("n_toks"),
@@ -591,7 +587,7 @@ def q_quality_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
                  F.sum("toks").alias("sum_tokens")))
 
 
-ORACLE_QUALITY_CAL = r"""
+ORACLE_QUALITY_CAL = rf"""
 WITH base AS (
   SELECT doc_id,
          len(toks) AS n_toks,
@@ -599,8 +595,7 @@ WITH base AS (
                     / CAST(greatest(len(toks), 1) AS DOUBLE) * 1e6)
               AS BIGINT) AS ttr_e6
   FROM (SELECT doc_id,
-               list_filter(string_split_regex(lower(text), '\s+'),
-                           t -> t <> '') AS toks
+               {tokens_sql()} AS toks
         FROM documents)
 ), vals AS (
   SELECT ttr_e6, count(*) AS cnt, sum(n_toks) AS toks

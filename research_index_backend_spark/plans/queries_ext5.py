@@ -53,6 +53,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..operators.textstats import doc_terms, doc_terms_sql, tokens, tokens_sql
 from .queries import _t
 
 QUERIES_EXT5: dict = {}
@@ -525,10 +526,8 @@ def q_token_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     columns.
     """
     d = _t(spark, sf_dir, "documents")
-    toks = F.filter(F.split(F.lower("text"), r"\s+"), lambda t: t != "")
-    counts = (d.select("doc_id", F.explode(toks).alias("term"))
-              .groupBy("doc_id", "term")
-              .agg(F.count(F.lit(1)).alias("c")))
+    counts = (doc_terms(d.select("doc_id", tokens("text").alias("toks")))
+              .select("doc_id", "term", F.col("tf").alias("c")))
     return (counts.groupBy("doc_id")
             .agg(F.sum("c").alias("n_tokens"),
                  F.sort_array(F.collect_list(F.struct("term", "c")))
@@ -543,14 +542,8 @@ def q_token_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .cast("bigint").alias("entropy_e6")))
 
 
-ORACLE_TOKEN_ENTROPY = r"""
-WITH tok AS (
-  SELECT doc_id, unnest(list_filter(
-             string_split_regex(lower(text), '\s+'), t -> t <> '')) AS term
-  FROM documents
-), counts AS (
-  SELECT doc_id, term, count(*) AS c FROM tok GROUP BY doc_id, term
-)
+ORACLE_TOKEN_ENTROPY = rf"""
+WITH counts AS (SELECT doc_id, term, tf AS c FROM ({doc_terms_sql()}))
 SELECT doc_id, CAST(sum(c) AS BIGINT) AS n_tokens,
        CAST(round((log2(sum(c))
                    - list_reduce(
@@ -912,7 +905,7 @@ def q_pmi_cooccur(spark: SparkSession, sf_dir: str) -> DataFrame:
     support-filtered) bigram side twice; top-k is TakeOrdered.
     """
     d = _t(spark, sf_dir, "documents")
-    toks = F.filter(F.split(F.lower("text"), r"\s+"), lambda t: t != "")
+    toks = tokens("text")
     uni = (d.select(F.explode(toks).alias("t"))
            .groupBy("t").agg(F.count(F.lit(1)).alias("c")))
     total = uni.agg(F.sum("c").alias("n_total"))
@@ -945,8 +938,7 @@ def q_pmi_cooccur(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 ORACLE_PMI = rf"""
 WITH tok AS (
-  SELECT doc_id, list_filter(string_split_regex(lower(text), '\s+'),
-                             t -> t <> '') AS toks
+  SELECT doc_id, {tokens_sql()} AS toks
   FROM documents
 ), uni AS (
   SELECT t, count(*) AS c FROM (SELECT unnest(toks) AS t FROM tok)
@@ -1346,13 +1338,10 @@ def q_build_inverted_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     the hapax tail early.
     """
     d = _t(spark, sf_dir, "documents")
-    toks = F.filter(F.split(F.lower("text"), r"\s+"), lambda t: t != "")
-    td = (d.select("doc_id", F.explode(toks).alias("term"))
-          .groupBy("term", "doc_id")
-          .agg(F.count(F.lit(1)).alias("c")))
+    td = doc_terms(d.select("doc_id", tokens("text").alias("toks")))
     return (td.groupBy("term")
             .agg(F.count(F.lit(1)).alias("df"),
-                 F.sum("c").alias("cf"),
+                 F.sum("tf").alias("cf"),
                  F.array_join(
                      F.slice(F.sort_array(F.collect_list("doc_id")),
                              1, _IDX_POSTINGS_CAP),
@@ -1361,14 +1350,8 @@ def q_build_inverted_index(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 ORACLE_INVERTED = rf"""
-WITH td AS (
-  SELECT term, doc_id, count(*) AS c FROM (
-    SELECT doc_id, unnest(list_filter(
-        string_split_regex(lower(text), '\s+'), t -> t <> '')) AS term
-    FROM documents)
-  GROUP BY term, doc_id
-)
-SELECT term, count(*) AS df, CAST(sum(c) AS BIGINT) AS cf,
+WITH td AS ({doc_terms_sql()})
+SELECT term, count(*) AS df, CAST(sum(tf) AS BIGINT) AS cf,
        array_to_string(list_sort(list(doc_id))[1:{_IDX_POSTINGS_CAP}], ',')
          AS postings_head
 FROM td GROUP BY term HAVING count(*) >= {_IDX_MIN_DF}

@@ -35,6 +35,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..operators.textstats import tokens, tokens_sql
 from .queries import _t, NGRAM_DF_CAP
 
 QUERIES_EXT6: dict = {}
@@ -182,7 +183,7 @@ def q_cms_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     deterministic, so the sketch itself is oracle-checkable.
     """
     d = _t(spark, sf_dir, "documents")
-    toks = F.filter(F.split(F.lower("text"), r"\s+"), lambda t: t != "")
+    toks = tokens("text")
     counts = (d.select(F.explode(toks).alias("tok"))
               .groupBy("tok").agg(F.count(F.lit(1)).alias("n")))
     seeds = F.sequence(F.lit(0), F.lit(_CMS_D - 1))
@@ -210,8 +211,7 @@ def q_cms_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 ORACLE_CMS = f"""
 WITH tok AS (
-  SELECT unnest(list_filter(string_split_regex(lower(text), '\\s+'),
-                            t -> t <> '')) AS tok
+  SELECT unnest({tokens_sql()}) AS tok
   FROM documents
 ),
 counts AS (SELECT tok, count(*) AS n FROM tok GROUP BY tok),
@@ -475,7 +475,7 @@ def q_span_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_docs on both engines identically.
     """
     d = _t(spark, sf_dir, "documents")
-    toks = F.filter(F.split(F.lower("text"), r"\s+"), lambda t: t != "")
+    toks = tokens("text")
     n_spans = F.floor(F.size(F.col("toks")) / _SPAN_LEN).cast("int")
     spans = F.when(F.size("toks") >= _SPAN_LEN,
                    F.transform(F.sequence(F.lit(0), n_spans - 1),
@@ -505,8 +505,7 @@ def q_span_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 ORACLE_SPAN_DEDUP = f"""
 WITH t AS (
   SELECT doc_id, source,
-         list_filter(string_split_regex(lower(text), '\\s+'),
-                     x -> x <> '') AS toks
+         {tokens_sql()} AS toks
   FROM documents
 ),
 sp AS (
@@ -714,7 +713,7 @@ def q_train_split_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = _t(spark, sf_dir, "documents")
     h = F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 8),
                16, 10).cast("bigint") % 100
-    toks = F.filter(F.split(F.lower("text"), r"\s+"), lambda t: t != "")
+    toks = tokens("text")
     split = (F.when(h < 80, "train").when(h < 90, "valid")
              .otherwise("test"))
     return (d.select(split.alias("split"), "lang",
@@ -726,7 +725,7 @@ def q_train_split_report(spark: SparkSession, sf_dir: str) -> DataFrame:
                  F.sum("n_chars").alias("n_chars")))
 
 
-ORACLE_TRAIN_SPLIT = r"""
+ORACLE_TRAIN_SPLIT = rf"""
 WITH d AS (
   SELECT CASE
            WHEN CAST(concat('0x', substr(md5(CAST(doc_id AS VARCHAR)), 1, 8))
@@ -735,8 +734,7 @@ WITH d AS (
                      AS BIGINT) % 100 < 90 THEN 'valid'
            ELSE 'test' END AS split,
          lang,
-         len(list_filter(string_split_regex(lower(text), '\s+'),
-                         t -> t <> '')) AS n_toks,
+         len({tokens_sql()}) AS n_toks,
          length(text) AS n_chars
   FROM documents
 )

@@ -52,6 +52,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..operators.textstats import tokens, tokens_sql
 from .queries import _t
 from .queries_ext6 import _HLL_M, _HLL_RHO_SPACE
 
@@ -1558,8 +1559,7 @@ def q_oov_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
                     16, 10).cast("bigint") % _OOV_SPLIT_MOD)
     toks = d.select(
         "doc_id", "source", split.alias("s"),
-        F.explode(F.split(F.lower("text"), r"\s+")).alias("tok")) \
-        .filter(F.col("tok") != "")
+        F.explode(tokens("text")).alias("tok"))
     vocab = (toks.filter(F.col("s") < 80)
              .groupBy("tok").agg(F.count(F.lit(1)).alias("c"))
              .orderBy(F.col("c").desc(), "tok").limit(_OOV_VOCAB)
@@ -1581,11 +1581,8 @@ WITH toks AS (
   SELECT doc_id, source,
          CAST(concat('0x', substr(md5(CAST(doc_id AS VARCHAR)), 1, 8))
               AS BIGINT) % {_OOV_SPLIT_MOD} AS s,
-         t AS tok
-  FROM (SELECT doc_id, source,
-               unnest(string_split_regex(lower(text), '\\s+')) AS t
-        FROM documents)
-  WHERE t <> ''
+         unnest({tokens_sql()}) AS tok
+  FROM documents
 ),
 vocab AS (
   SELECT tok FROM (

@@ -33,6 +33,16 @@ import math
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..operators.textstats import (
+    BM25_STATS_SQL,
+    bm25,
+    bm25_sql,
+    bm25_stats,
+    doc_terms,
+    doc_terms_sql,
+    tokens,
+    tokens_sql,
+)
 from .queries import _t, LSH_BUCKET_CAP, _oracle_minhash_cte
 
 QUERIES_EXT8: dict = {}
@@ -696,129 +706,54 @@ def q_prf_expansion(spark: SparkSession, sf_dir: str) -> DataFrame:
     0.70x at sf0.1 (5.3 -> 3.7s), 0.58x at the 10x corpus, noisy-but-
     favorable at 100x; parity exact at all probed SFs.
     """
-    from .queries_ext3 import _BM25_B, _BM25_K1, _BM25_TERMS
+    from .queries_ext3 import _BM25_TERMS
     d = _t(spark, sf_dir, "documents")
-    toks = F.filter(F.split(F.lower("text"), r"\s+"), lambda t: t != "")
-    docs = d.select("doc_id", toks.alias("toks")) \
-            .select("doc_id", F.size("toks").alias("dl"),
-                    F.explode("toks").alias("term")) \
-            .localCheckpoint()
-    srow = (docs.groupBy("doc_id").agg(F.first("dl").alias("dl"))
-            .agg(F.count(F.lit(1)).alias("n_docs"),
-                 F.avg("dl").alias("avgdl")).collect()[0])
-    n_docs, avgdl = srow["n_docs"], srow["avgdl"]
+    docs = d.select("doc_id", tokens("text").alias("toks")).localCheckpoint()
+    stats = bm25_stats(docs).collect()[0]
+    terms = doc_terms(docs)
 
-    def bm25(term_list: list) -> DataFrame:
-        tf = (docs.filter(F.col("term").isin(*term_list))
-              .groupBy("doc_id", "term")
-              .agg(F.count(F.lit(1)).alias("tf"),
-                   F.first("dl").alias("dl")))
-        df_t = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
-        contrib = (
-            tf.join(F.broadcast(df_t), "term")
-            .withColumn(
-                "idf",
-                F.log(F.lit(1.0)
-                      + (F.lit(n_docs) - F.col("df") + F.lit(0.5))
-                      / (F.col("df") + F.lit(0.5))))
-            .withColumn(
-                "c",
-                F.col("idf") * (F.col("tf") * (1 + _BM25_K1))
-                / (F.col("tf") + _BM25_K1 * (1 - _BM25_B
-                                             + _BM25_B * F.col("dl")
-                                             / F.lit(avgdl)))))
-        return (contrib.groupBy("doc_id")
-                .agg(F.sort_array(F.collect_list(F.struct("term", "c")))
-                     .alias("cs"))
-                .select("doc_id",
-                        F.round(F.aggregate(
-                            F.col("cs"), F.lit(0.0),
-                            lambda acc, s: acc + s["c"]) * 1e6)
-                        .cast("bigint").alias("score_e6")))
+    def ranked(term_list: list) -> DataFrame:
+        return (bm25(terms.filter(F.col("term").isin(*term_list)), stats)
+                .orderBy(F.col("score_e6").desc(), "doc_id"))
 
     fb_ids = [int(r["doc_id"]) for r in
-              bm25(list(_BM25_TERMS))
-              .orderBy(F.col("score_e6").desc(), "doc_id")
-              .limit(_PRF_FB_DOCS).collect()]
-    fdf = (docs.filter(F.col("doc_id").isin(*fb_ids) if fb_ids
-                       else F.lit(False))
-           .select("doc_id", "term").distinct()
+              ranked(list(_BM25_TERMS)).limit(_PRF_FB_DOCS).collect()]
+    # doc_terms rows are distinct (doc, term) pairs: counting them per
+    # term IS the document frequency
+    fdf = (terms.filter(F.col("doc_id").isin(*fb_ids) if fb_ids
+                        else F.lit(False))
            .groupBy("term").agg(F.count(F.lit(1)).alias("fdf")))
     # global df ONLY for the feedback-candidate terms — a full-
     # vocabulary df agg would scan every (doc, term) pair for a gate
     # that touches ~|feedback| terms
-    gdf = (docs.join(F.broadcast(fdf.select("term")), "term", "left_semi")
-           .select("doc_id", "term").distinct()
+    gdf = (terms.join(F.broadcast(fdf.select("term")), "term", "left_semi")
            .groupBy("term").agg(F.count(F.lit(1)).alias("gdf")))
     exp_rows = (fdf.join(gdf, "term")
                 .filter(~F.col("term").isin(*_BM25_TERMS))
                 .filter(F.length("term") >= _PRF_MIN_LEN)
-                .filter(F.col("gdf") * _PRF_DF_FRAC <= F.lit(n_docs))
+                .filter(F.col("gdf") * _PRF_DF_FRAC <= F.lit(stats["n_docs"]))
                 .orderBy(F.col("fdf").desc(), "term")
                 .limit(_PRF_EXP_TERMS).select("term").collect())
     expanded = list(_BM25_TERMS) + [r["term"] for r in exp_rows]
-    return (bm25(expanded).orderBy(F.col("score_e6").desc(), "doc_id")
-            .limit(_PRF_FB_DOCS))
+    return ranked(expanded).limit(_PRF_FB_DOCS)
 
 
 def _oracle_prf() -> str:
-    from .queries_ext3 import _BM25_B, _BM25_K1, _BM25_TERMS
-
-    def bm25_ctes(pfx: str, term_src: str) -> str:
-        return f"""
-{pfx}tf AS (
-  SELECT doc_id, term, count(*) AS tf, any_value(dl) AS dl
-  FROM docs WHERE term IN (SELECT term FROM {term_src})
-  GROUP BY doc_id, term
-),
-{pfx}df AS (SELECT term, count(*) AS df FROM {pfx}tf GROUP BY term),
-{pfx}contrib AS (
-  SELECT t.doc_id, t.term,
-         ln(1.0 + (s.n_docs - d.df + 0.5) / (d.df + 0.5))
-           * (t.tf * (1 + {_BM25_K1}))
-           / (t.tf + {_BM25_K1} * (1 - {_BM25_B}
-                                   + {_BM25_B} * t.dl / s.avgdl)) AS c
-  FROM {pfx}tf t JOIN {pfx}df d USING (term) CROSS JOIN stats s
-),
-{pfx}scored AS (
-  SELECT doc_id,
-         CAST(round(list_reduce(
-             list_prepend(0.0, list(c ORDER BY term)),
-             (acc, v) -> acc + v) * 1e6) AS BIGINT) AS score_e6
-  FROM {pfx}contrib GROUP BY doc_id
-)"""
-
-    return rf"""
-WITH tok AS (
-  SELECT doc_id,
-         list_filter(string_split_regex(lower(text), '\s+'), t -> t <> '')
-           AS toks
-  FROM documents
-),
-docs AS (
-  SELECT doc_id, len(toks) AS dl, unnest(toks) AS term FROM tok
-),
-stats AS (
-  SELECT count(*) AS n_docs, avg(dl) AS avgdl
-  FROM (SELECT doc_id, any_value(dl) AS dl FROM docs GROUP BY doc_id)
-),
+    from .queries_ext3 import _BM25_TERMS
+    return f"""
+WITH terms AS ({doc_terms_sql()}),
+stats AS ({BM25_STATS_SQL}),
 seed AS (SELECT unnest({list(_BM25_TERMS)}) AS term),
-{bm25_ctes('r1', 'seed')},
+{bm25_sql('r1', 'seed')},
 fb AS (
   SELECT doc_id FROM r1scored
   ORDER BY score_e6 DESC, doc_id LIMIT {_PRF_FB_DOCS}
 ),
 fdf AS (
-  SELECT term, count(*) AS fdf FROM (
-    SELECT DISTINCT d.doc_id, d.term
-    FROM docs d JOIN fb USING (doc_id))
+  SELECT term, count(*) AS fdf FROM terms JOIN fb USING (doc_id)
   GROUP BY term
 ),
-gdf AS (
-  SELECT term, count(*) AS gdf FROM (
-    SELECT DISTINCT doc_id, term FROM docs)
-  GROUP BY term
-),
+gdf AS (SELECT term, count(*) AS gdf FROM terms GROUP BY term),
 exp AS (
   SELECT term FROM fdf JOIN gdf USING (term) CROSS JOIN stats
   WHERE term NOT IN {tuple(_BM25_TERMS)}
@@ -827,7 +762,7 @@ exp AS (
   ORDER BY fdf DESC, term LIMIT {_PRF_EXP_TERMS}
 ),
 expanded AS (SELECT term FROM seed UNION ALL SELECT term FROM exp),
-{bm25_ctes('r2', 'expanded')}
+{bm25_sql('r2', 'expanded')}
 SELECT doc_id, score_e6 FROM r2scored
 ORDER BY score_e6 DESC, doc_id LIMIT {_PRF_FB_DOCS}
 """
@@ -1538,7 +1473,7 @@ def q_crossref_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from ..sources.crossref import titles_licenses
     d = _t(spark, sf_dir, "documents")
-    toks = F.filter(F.split(F.lower("text"), r"\s+"), lambda t: t != "")
+    toks = tokens("text")
     title = F.concat_ws(" ", F.slice(toks, 1, 4))
     did = F.col("doc_id").cast("string")
     vor_s = F.struct(
@@ -1562,12 +1497,11 @@ def q_crossref_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
                  F.min("license").alias("first_vor")))
 
 
-ORACLE_CROSSREF = r"""
+ORACLE_CROSSREF = rf"""
 WITH base AS (
   SELECT source,
          array_to_string(list_slice(
-             list_filter(string_split_regex(lower(text), '\s+'),
-                         t -> t <> ''), 1, 4), ' ') AS title,
+             {tokens_sql()}, 1, 4), ' ') AS title,
          CASE WHEN doc_id % 3 = 0
               THEN 'https://vor.example/' || CAST(doc_id AS VARCHAR)
               ELSE NULL END AS license
@@ -1927,8 +1861,7 @@ def q_shuffle_shard_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     story.
     """
     d = _t(spark, sf_dir, "documents")
-    n_tok = F.size(F.filter(F.split(F.lower("text"), r"\s+"),
-                            lambda t: t != ""))
+    n_tok = F.size(tokens("text"))
     shard = F.pmod(
         F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 13),
                16, 10).cast("bigint"), F.lit(_SH_N))
@@ -1957,8 +1890,7 @@ WITH base AS (
   SELECT CAST(CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 13))
               AS UBIGINT) % {_SH_N} AS BIGINT) AS shard,
          source,
-         len(list_filter(string_split_regex(lower(text), '\s+'),
-                         t -> t <> '')) AS n_toks
+         len({tokens_sql()}) AS n_toks
   FROM documents
 ), per_src AS (
   SELECT shard, source, count(*) AS c, sum(n_toks) AS tk
@@ -2310,9 +2242,9 @@ cand AS (
   WHERE a.id < {_DR_EVAL} AND b.id < {_DR_EVAL}
 ),
 stok AS (
-  SELECT DISTINCT doc_id AS id, t AS tok FROM (
-    SELECT doc_id, unnest(string_split_regex(lower(text), '\s+')) AS t
-    FROM documents WHERE doc_id < {_DR_EVAL}) WHERE t <> ''
+  SELECT DISTINCT id, tok FROM (
+    SELECT doc_id AS id, unnest({tokens_sql()}) AS tok
+    FROM documents WHERE doc_id < {_DR_EVAL})
 ),
 sizes AS (SELECT id, count(*) AS sz FROM stok GROUP BY id),
 co AS (
@@ -2830,8 +2762,7 @@ def q_jaccard_prefix_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = (_t(spark, sf_dir, "documents")
          .filter(F.col("doc_id") < _PJ_N))
     toks = (d.select("doc_id", F.explode(F.array_distinct(
-        F.filter(F.split(F.lower("text"), r"\s+"),
-                 lambda t: t != ""))).alias("tok")))
+        tokens("text"))).alias("tok")))
     dfreq = toks.groupBy("tok").agg(F.count(F.lit(1)).alias("df"))
     ordered = (toks.join(dfreq, "tok")
                .groupBy("doc_id")
@@ -2869,10 +2800,9 @@ def q_jaccard_prefix_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 ORACLE_JACCARD_PREFIX = rf"""
 WITH tok AS (
-  SELECT DISTINCT doc_id AS id, t AS tok FROM (
-    SELECT doc_id, unnest(string_split_regex(lower(text), '\s+')) AS t
-    FROM documents WHERE doc_id < {_PJ_N}
-  ) WHERE t <> ''
+  SELECT DISTINCT id, tok FROM (
+    SELECT doc_id AS id, unnest({tokens_sql()}) AS tok
+    FROM documents WHERE doc_id < {_PJ_N})
 ),
 sizes AS (SELECT id, count(*) AS sz FROM tok GROUP BY id),
 co AS (

@@ -555,3 +555,87 @@ class TestBucketedJoin:
             spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old_thr)
             spark.sql("DROP TABLE IF EXISTS t_bkt_orders")
             spark.sql("DROP TABLE IF EXISTS t_bkt_lines")
+
+
+class TestTextStatsTwins:
+    """tokens/doc_terms/bm25 against their DuckDB twins on a hand corpus
+    built to break the tokenizer: mixed case, tab/newline runs, leading
+    and trailing whitespace, an empty and an all-whitespace document,
+    and a term repeated within a document."""
+
+    CORPUS = [
+        (1, "Spark  SPARK spark\twindow"),
+        (2, "  \n Table\n\nspark "),
+        (3, ""),
+        (4, " \t\n "),
+        (5, "window table window"),
+    ]
+    # (doc_id, term, tf, dl); documents 3 and 4 have no tokens, so no rows
+    TERMS = [
+        (1, "spark", 3, 4), (1, "window", 1, 4),
+        (2, "spark", 1, 2), (2, "table", 1, 2),
+        (5, "table", 1, 3), (5, "window", 2, 3),
+    ]
+    QUERY = ("spark", "window")
+
+    @pytest.fixture()
+    def con(self):
+        import duckdb
+        import pandas as pd
+        con = duckdb.connect()
+        con.register("corpus", pd.DataFrame(self.CORPUS,
+                                            columns=["doc_id", "text"]))
+        yield con
+        con.close()
+
+    @pytest.fixture()
+    def toks(self, spark):
+        from research_index_backend_spark.operators.textstats import tokens
+        return (spark.createDataFrame(self.CORPUS, "doc_id long, text string")
+                .select("doc_id", tokens("text").alias("toks")))
+
+    def test_doc_terms_rows(self, toks, con):
+        from research_index_backend_spark.operators.textstats import (
+            doc_terms,
+            doc_terms_sql,
+        )
+        got = sorted(tuple(r) for r in doc_terms(toks).collect())
+        assert got == self.TERMS
+        assert sorted(con.sql(doc_terms_sql("corpus")).fetchall()) \
+            == self.TERMS
+
+    def test_term_prune_below_tf_aggregate_one_tokenize(self, toks):
+        from research_index_backend_spark.operators.textstats import doc_terms
+        q = doc_terms(toks).filter(F.col("term").isin(*self.QUERY))
+        plan = q._jdf.queryExecution().optimizedPlan().toString()
+        lines = plan.splitlines()
+        agg = next(i for i, ln in enumerate(lines) if "Aggregate" in ln)
+        flt = next(i for i, ln in enumerate(lines)
+                   if "Filter" in ln and "term" in ln)
+        assert flt > agg, plan  # lower in the tree = later in the dump
+        # one tokenize pass: no inferred size(toks) > 0 filter re-runs
+        # the tokenizer below the projection that defines toks
+        assert plan.count("split(") == 1, plan
+
+    def test_bm25_matches_its_sql_twin(self, toks, con):
+        from research_index_backend_spark.operators.textstats import (
+            BM25_STATS_SQL,
+            bm25,
+            bm25_sql,
+            bm25_stats,
+            doc_terms,
+            doc_terms_sql,
+        )
+        stats = bm25_stats(toks)
+        assert tuple(stats.first()) == (3, 3.0)
+        tf = doc_terms(toks).filter(F.col("term").isin(*self.QUERY))
+        joined = sorted(tuple(r) for r in bm25(tf, stats).collect())
+        inlined = sorted(tuple(r) for r in bm25(tf, stats.first()).collect())
+        oracle = sorted(con.sql(f"""
+WITH terms AS ({doc_terms_sql("corpus")}),
+stats AS ({BM25_STATS_SQL}),
+seed AS (SELECT unnest({list(self.QUERY)}) AS term),
+{bm25_sql('', 'seed')}
+SELECT doc_id, score_e6 FROM scored""").fetchall())
+        assert [d for d, _ in joined] == [1, 2, 5]
+        assert joined == inlined == oracle

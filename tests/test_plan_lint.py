@@ -427,6 +427,33 @@ def test_driver_side_collects_are_pinned():
         f"allowed {DRIVER_COLLECT_ALLOWED}")
 
 
+# The document tokenizer and its DuckDB twin live once, in
+# operators/textstats.py (tokens / tokens_sql). An inline copy in a plan
+# module is a second definition that can drift from the oracle's. A
+# split of lower(text) on anything but \s+ (lm_quality_score's character
+# split on "") is not the tokenizer and does not match.
+_INLINE_TOKENIZER = re.compile(
+    r"F\.split\(\s*F\.lower\((?:[^()]|\([^()]*\))*\)\s*,\s*r?([\"'])"
+    r"\\{1,2}s\+\1"
+    r"|string_split_regex\(lower\(")
+
+
+def test_no_inline_tokenizer_copies_in_plans():
+    import os
+
+    root = os.path.join(os.path.dirname(os.path.dirname(
+        os.path.abspath(__file__))), "research_index_backend_spark", "plans")
+    bad = []
+    for f in sorted(os.listdir(root)):
+        if f.endswith(".py"):
+            src = open(os.path.join(root, f)).read()
+            bad += [f"plans/{f}:{src.count(chr(10), 0, m.start()) + 1}"
+                    for m in _INLINE_TOKENIZER.finditer(src)]
+    assert not bad, (
+        "inline tokenizer copy (use operators.textstats.tokens / "
+        f"tokens_sql): {bad}")
+
+
 # Fact-table scan fan-out. A frame consumed by N downstream branches
 # re-evaluates its whole subtree once per consumer unless an exchange is
 # reused — at 100 TB that is N full passes over a fact table. The r10
@@ -533,15 +560,24 @@ def test_no_split_expression_referenced_inside_hof_lambdas():
     # AST call graph — a Call whose func is `split` or `<alias>.split`
     # where the name binds pyspark.sql.functions — instead of a source
     # substring, so aliased imports can't slip past.
+    # A call to operators.textstats.tokens (the catalog tokenizer, an
+    # F.split behind a name; under any alias, or as <textstats>.tokens)
+    # counts as a split call too.
     import ast
     import os
 
-    def _split_call_in(expr: ast.AST, f_aliases: set, split_names: set):
+    def _split_call_in(expr: ast.AST, f_aliases: set, split_names: set,
+                       ts_aliases: set):
         for node in ast.walk(expr):
             if not isinstance(node, ast.Call):
                 continue
             fn = node.func
             if isinstance(fn, ast.Name) and fn.id in split_names:
+                return True
+            # textstats.tokens is F.split behind a name: <ts>.tokens(...)
+            if (isinstance(fn, ast.Attribute) and fn.attr == "tokens"
+                    and isinstance(fn.value, ast.Name)
+                    and fn.value.id in ts_aliases):
                 return True
             if isinstance(fn, ast.Attribute) and fn.attr == "split":
                 # <alias>.split(...) where alias binds the functions
@@ -585,23 +621,39 @@ def test_no_split_expression_referenced_inside_hof_lambdas():
             if not f.endswith(".py"):
                 continue
             tree = ast.parse(open(os.path.join(root, f)).read())
-            # module-level aliases of pyspark.sql.functions / its split
-            f_aliases, split_names = set(), set()
+            # module-level aliases of pyspark.sql.functions / its split,
+            # and of operators.textstats / its tokens (a split call
+            # behind a name; textstats.py itself calls it bare)
+            f_aliases, split_names, ts_aliases = set(), set(), set()
+            if (sub, f) == ("operators", "textstats.py"):
+                split_names.add("tokens")
             for node in ast.walk(tree):
                 if isinstance(node, ast.Import):
                     for a in node.names:
                         if a.name == "pyspark.sql.functions":
                             f_aliases.add(a.asname or "pyspark")
+                        elif (a.name.endswith(".textstats")
+                              and a.asname):
+                            ts_aliases.add(a.asname)
                 elif isinstance(node, ast.ImportFrom):
-                    if node.module == "pyspark.sql":
+                    mod = node.module or ""
+                    if mod == "pyspark.sql":
                         for a in node.names:
                             if a.name == "functions":
                                 f_aliases.add(a.asname or "functions")
-                    elif node.module == "pyspark.sql.functions":
+                    elif mod == "pyspark.sql.functions":
                         for a in node.names:
                             if a.name == "split":
                                 split_names.add(a.asname or "split")
-            if not f_aliases and not split_names:
+                    elif mod == "textstats" or mod.endswith(".textstats"):
+                        for a in node.names:
+                            if a.name == "tokens":
+                                split_names.add(a.asname or "tokens")
+                    elif mod == "operators" or mod.endswith(".operators"):
+                        for a in node.names:
+                            if a.name == "textstats":
+                                ts_aliases.add(a.asname or "textstats")
+            if not f_aliases and not split_names and not ts_aliases:
                 continue
             # scopes to scan: every (async) function body + the module
             scopes = [n for n in ast.walk(tree) if isinstance(
@@ -621,7 +673,7 @@ def test_no_split_expression_referenced_inside_hof_lambdas():
                     elif isinstance(node, ast.NamedExpr):
                         val, tgts = node.value, [node.target]
                     if val is not None and _split_call_in(
-                            val, f_aliases, split_names):
+                            val, f_aliases, split_names, ts_aliases):
                         for t in tgts:
                             split_vars.update(_target_names(t))
                 if not split_vars:

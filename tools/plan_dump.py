@@ -10,8 +10,9 @@ HEAD (suffix "after") and once from a checkout of the pre-change commit
 (suffix "before") to produce the plan-diff evidence pair.
 
 Plans are written normalized: expression ids (#n), plan_id= counters,
-RDD ids and localCheckpoint call sites are session-local counters, not
-plan shape, so they are masked and a before/after pair diffs clean with
+RDD ids, localCheckpoint call sites and PySpark's lambda-variable
+suffixes (x_<n>) are session-local counters, not plan shape, so they
+are masked and a before/after pair diffs clean with
 plain `diff` unless the physical plan really changed.
 """
 from __future__ import annotations
@@ -25,6 +26,7 @@ _VOLATILE = [
     (re.compile(r"plan_id=\d+"), "plan_id=n"),
     (re.compile(r"RDD\[\d+\]"), "RDD[n]"),
     (re.compile(r"(localCheckpoint) at [^,\]\s]+"), r"\1"),
+    (re.compile(r"(lambda [xyz])_\d+"), r"\1_n"),
 ]
 
 
