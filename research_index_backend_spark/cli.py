@@ -30,7 +30,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .ingest.fetch import Transport, fetch_metadata
-from .ingest.pipeline import build_graph_from_envelopes, ingestion_metrics
+from .ingest.pipeline import (
+    build_graph_from_envelopes,
+    ingestion_metrics,
+    processed,
+)
 from .schemas import (
     AUTHOR_NODE,
     AUTHOR_OF_EDGE,
@@ -53,6 +57,13 @@ TABLE_SCHEMAS = {
     "member_of": MEMBER_OF_EDGE,
     "unit_of": UNIT_OF_EDGE,
     "refers_to": REFERS_TO_EDGE,
+}
+# the merge key of each table run_ingest upserts
+TABLE_KEYS = {
+    "outputs": ["doi"],
+    "authors": ["uuid"],
+    "author_of": ["author_uuid", "output_uuid"],
+    "refers_to": ["output_uuid", "country_id"],
 }
 
 
@@ -100,8 +111,6 @@ def run_ingest(spark: SparkSession, doi_file: str, data_dir: str,
     outputs0 = _read_table(spark, data_dir, "outputs")
     authors0 = _read_table(spark, data_dir, "authors")
     countries = _read_table(spark, data_dir, "countries")
-    refers0 = _read_table(spark, data_dir, "refers_to")
-    author_of0 = _read_table(spark, data_dir, "author_of")
 
     # J1 existence probe against the outputs table
     tracker = (
@@ -112,11 +121,9 @@ def run_ingest(spark: SparkSession, doi_file: str, data_dir: str,
         .withColumn("already_exists", F.coalesce("already_exists",
                                                  F.lit(False)))
     )
-    processed_pred = (F.col("valid_pattern") if update_metadata
-                      else F.col("valid_pattern") & ~F.col("already_exists"))
     # partition count is the fetch-concurrency knob (ingest/fetch.py): one
     # HTTP call per row inside each task, tasks run in parallel
-    work = (tracker.filter(processed_pred).select("doi")
+    work = (tracker.filter(processed(update_metadata)).select("doi")
             .repartition(spark.sparkContext.defaultParallelism))
 
     # the HTTP boundary (S3/S4) — both sources fetched set-at-a-time
@@ -146,12 +153,8 @@ def run_ingest(spark: SparkSession, doi_file: str, data_dir: str,
                 F.col("e.results").alias("results"),
                 F.col("query_doi"))
     )
-    mode = "update" if update_metadata else "insert"
-    graph = build_graph_from_envelopes(
-        envelopes, authors0, outputs0,
-        countries=countries if not _empty(countries) else None,
-        existing_refers_to=refers0 if not _empty(refers0) else None,
-        openalex_landed=landed_alex, upsert_mode=mode)
+    graph = build_graph_from_envelopes(envelopes, authors0, countries,
+                                       landed_alex)
 
     # the 14-metric tracker state (A3)
     ok_aire = landed_aire.filter(F.col("error").isNull()) \
@@ -183,22 +186,13 @@ def run_ingest(spark: SparkSession, doi_file: str, data_dir: str,
     graph = {k: v.localCheckpoint() for k, v in graph.items()}
     full = full.localCheckpoint()
 
+    # the one merge of this batch's rows with the stored ones; -u replaces
+    # re-ingested outputs, every other table keeps its stored rows
     from .operators.upsert import upsert_parquet
-    # graph tables already merge existing + new; the disk upsert re-merges
-    # against the same on-disk state, which is an idempotent no-op
-    upsert_parquet(spark, graph["outputs"], str(Path(data_dir) / "outputs"),
-                   ["doi"], mode=mode)
-    upsert_parquet(spark, graph["authors"], str(Path(data_dir) / "authors"),
-                   ["uuid"])
-    upsert_parquet(spark, graph["author_of"],
-                   str(Path(data_dir) / "author_of"),
-                   ["author_uuid", "output_uuid"])
-    if "refers_to" in graph:
-        upsert_parquet(spark, graph["refers_to"],
-                       str(Path(data_dir) / "refers_to"),
-                       ["output_uuid", "country_id"])
-    # author_of0 merged on disk by upsert_parquet (existing side read there)
-    _ = author_of0
+    for name, df in graph.items():
+        upsert_parquet(spark, df, str(Path(data_dir) / name), TABLE_KEYS[name],
+                       mode="update" if update_metadata and name == "outputs"
+                       else "insert")
 
     metrics = ingestion_metrics(full, update_metadata=update_metadata,
                                 start_time=start, end_time=time.time())
@@ -214,14 +208,13 @@ def processing_details(full: DataFrame,
     (create_graph_from_doi.py:365-376): failed metadata, invalid pattern,
     duplicated submissions.
 
-    The 'processed' predicate must match ingestion_metrics exactly: with
-    -u the reference re-processes existing DOIs (doi.py:219-224), so the
-    metadata_failure LIST must include them too, or the printed count and
-    the per-DOI list below it disagree (round-3 ADVICE item)."""
-    proc = (F.col("valid_pattern") if update_metadata
-            else F.col("valid_pattern") & ~F.col("already_exists"))
+    The metadata_failure LIST uses ingestion_metrics' own `processed`
+    predicate: with -u the reference re-processes existing DOIs
+    (doi.py:219-224), so the list must include them too, or the printed
+    count and the per-DOI list below it disagree (round-3 ADVICE item)."""
     cats = {
-        "metadata_failure": proc & ~F.col("ingestion_success"),
+        "metadata_failure": processed(update_metadata)
+        & ~F.col("ingestion_success"),
         "invalid_pattern_dois": ~F.col("valid_pattern"),
         "duplicated_submissions": F.col("n_submitted") > 1,
     }
@@ -231,10 +224,6 @@ def processing_details(full: DataFrame,
                                         F.col("doi").cast("string"))
         out = part if out is None else out.unionByName(part)
     return out
-
-
-def _empty(df: DataFrame) -> bool:
-    return df.isEmpty()
 
 
 def argument_parser() -> argparse.ArgumentParser:

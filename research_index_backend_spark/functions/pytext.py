@@ -31,3 +31,11 @@ def clean_html_udf(s: pd.Series) -> pd.Series:
     used where the regexp-chain twin (functions.text.clean_html_col) isn't
     exact enough (NFC + full entity unescape)."""
     return s.map(clean_html_py)
+
+
+# Pure, but marked nondeterministic: the ingest parse (ingest/parse.py),
+# their only caller, relies on the flag in its staged author cascade to
+# keep Catalyst from re-evaluating a call in a pushed-down filter or a
+# collapsed projection.
+py_title_udf = py_title_udf.asNondeterministic()
+clean_html_udf = clean_html_udf.asNondeterministic()

@@ -19,7 +19,7 @@ dozen fields actually parsed.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.pytext import clean_html_udf, py_title_udf
@@ -35,82 +35,118 @@ def read_openaire_json(spark: SparkSession, path: str,
             .json(path, schema=OPENAIRE_SCHEMA))
 
 
-def _author_cols(a: Column) -> Column:
-    """parse_author (parser.py:11-70) as a single struct expression.
+def _parse_author_rows(rows: DataFrame, keys: list[str]) -> DataFrame:
+    """parse_author (parser.py:11-70) over `rows`: the `keys` columns plus
+    an AUTHOR_SCHEMA struct `a`.
 
-    Returns struct(first_name, last_name, orcid, rank) or NULL when the
-    reference would return None (unparseable name).
+    Returns keys + (first_name, last_name, orcid, rank), one row per author
+    the reference's parse_author returns non-None for (unparseable names
+    dropped).
+
+    The cascade is staged: each step is projected as a column the next
+    step reads, so every expression appears once in the plan. The two
+    Python UDFs are nondeterministic (functions/pytext.py), which stops
+    Catalyst from collapsing the stages back into one nested tree and from
+    pushing the final filter below them; either would evaluate each UDF a
+    second time per row.
     """
-    # F7: pid→orcid coalesce (parser.py:18-22). NOTE the reference checks
-    # `if not orcid` (falsy: None or ""), mirrored via nullif('').
-    orcid_raw = F.coalesce(
-        F.nullif(a["orcid"], F.lit("")),
-        F.when(a["pid"]["id"]["scheme"].isin("orcid", "orcid_pending"),
-               a["pid"]["id"]["value"]),
+    a = F.col("a")
+    first0, last0 = F.col("first0"), F.col("last0")
+    first1, last1 = F.col("first1"), F.col("last1")
+    first2, last2 = F.col("first2"), F.col("last2")
+    first3, last3 = F.col("first3"), F.col("last3")
+    toks, dollar_toks = F.col("toks"), F.col("dollar_toks")
+    staged = rows.select(
+        *keys,
+        # F7: pid→orcid coalesce (parser.py:18-22). NOTE the reference
+        # checks `if not orcid` (falsy: None or ""), mirrored via nullif('').
+        F.coalesce(
+            F.nullif(a["orcid"], F.lit("")),
+            F.when(a["pid"]["id"]["scheme"].isin("orcid", "orcid_pending"),
+                   a["pid"]["id"]["value"]),
+        ).alias("orcid_raw"),
+        F.coalesce(a["rank"].cast("int"), F.lit(1)).alias("rank"),
+        # F5a input: the legacy `$` full name as non-empty tokens
+        F.filter(F.split(F.coalesce(a["$"], F.lit("")), r"\s+"),
+                 lambda t: t != "").alias("dollar_toks"),
+        # F3: .title() on name/surname, None treated as "" (parser.py:24-25)
+        py_title_udf(F.coalesce(a["name"], F.lit(""))).alias("first0"),
+        py_title_udf(F.coalesce(a["surname"], F.lit(""))).alias("last0"),
     )
-
-    # F3: .title() on name/surname, None treated as "" (parser.py:24-25)
-    first0 = py_title_udf(F.coalesce(a["name"], F.lit("")))
-    last0 = py_title_udf(F.coalesce(a["surname"], F.lit("")))
-
     # F4: mutual-substring repair (parser.py:26-29). Python's `x in y` is
     # True for x == "", where replace(y, "", "") is a no-op but the
     # trailing .strip() still runs — so the empty-substring branch must
     # trim too (round-2 ADVICE: ' Ab Cd ' with an empty twin is stripped
     # by the reference). A non-empty non-contained twin takes NO strip.
-    last1 = (F.when((first0 != "") & F.contains(last0, first0),
-                    F.trim(F.replace(last0, first0, F.lit(""))))
-             .when(first0 == "", F.trim(last0))
-             .otherwise(last0))
-    first1 = (F.when((last1 != "") & F.contains(first0, last1),
-                     F.trim(F.replace(first0, last1, F.lit(""))))
-              .when(last1 == "", F.trim(first0))
-              .otherwise(first0))
-
+    staged = staged.withColumn(
+        "last1", F.when((first0 != "") & F.contains(last0, first0),
+                        F.trim(F.replace(last0, first0, F.lit(""))))
+        .when(first0 == "", F.trim(last0))
+        .otherwise(last0))
+    staged = staged.withColumn(
+        "first1", F.when((last1 != "") & F.contains(first0, last1),
+                         F.trim(F.replace(first0, last1, F.lit(""))))
+        .when(last1 == "", F.trim(first0))
+        .otherwise(first0))
     # F5a: legacy `$` full-name split — only when both names empty
     # (parser.py:31-39); exactly-2-token split, else unparseable.
-    dollar_toks = F.split(F.coalesce(a["$"], F.lit("")), r"\s+")
-    dollar_toks = F.filter(dollar_toks, lambda t: t != "")
     use_dollar = (first1 == "") & (last1 == "") & (F.size(dollar_toks) > 0)
-    first2 = F.when(use_dollar,
-                    F.when(F.size(dollar_toks) == 2, F.element_at(dollar_toks, 1))
-                    .otherwise(F.lit(None))).otherwise(first1)
-    last2 = F.when(use_dollar,
-                   F.when(F.size(dollar_toks) == 2, F.element_at(dollar_toks, 2))
-                   .otherwise(F.lit(None))).otherwise(last1)
-
+    two = F.size(dollar_toks) == 2
+    staged = staged.withColumns({
+        "first2": F.when(use_dollar, F.when(two, F.element_at(dollar_toks, 1)))
+        .otherwise(first1),
+        "last2": F.when(use_dollar, F.when(two, F.element_at(dollar_toks, 2)))
+        .otherwise(last1),
+    })
     # F5b: surname-only fallback (parser.py:40-56): clean_html, split on
     # narrow-NBSP U+202F, else on single space; 2 toks → (first, last),
     # >2 → (first, rest joined), 1 → unparseable.
+    staged = staged.withColumn("cleaned", clean_html_udf(last2))
+    nbsp_toks = F.split(F.col("cleaned"), "\u202f")
+    staged = staged.withColumn(
+        "toks", F.when(F.size(nbsp_toks) == 1, F.split(F.col("cleaned"), " "))
+        .otherwise(nbsp_toks))
     need_split = last2.isNotNull() & (last2 != "") & \
         (first2.isNull() | (first2 == ""))
-    cleaned = clean_html_udf(last2)
-    nbsp_toks = F.split(cleaned, " ")
-    sp_toks = F.split(cleaned, " ")
-    toks = F.when(F.size(nbsp_toks) == 1, sp_toks).otherwise(nbsp_toks)
-    first3 = F.when(
-        need_split,
-        F.when(F.size(toks) >= 2, F.element_at(toks, 1)).otherwise(F.lit(None)),
-    ).otherwise(first2)
-    last3 = F.when(
-        need_split,
-        F.when(F.size(toks) == 2, F.element_at(toks, 2))
-        .when(F.size(toks) > 2, F.array_join(F.slice(toks, 2, 100000), " "))
-        .otherwise(F.lit(None)),
-    ).otherwise(last2)
-
-    rank = F.coalesce(a["rank"].cast("int"), F.lit(1))
-    # F6: ORCID URL format (parser.py:66)
-    orcid = F.when(orcid_raw.isNotNull(),
-                   F.concat(F.lit("https://orcid.org/"), orcid_raw))
-
+    staged = staged.withColumns({
+        "first3": F.when(need_split, F.when(F.size(toks) >= 2,
+                                            F.element_at(toks, 1)))
+        .otherwise(first2),
+        "last3": F.when(need_split,
+                        F.when(F.size(toks) == 2, F.element_at(toks, 2))
+                        .when(F.size(toks) > 2,
+                              F.array_join(F.slice(toks, 2, 100000), " ")))
+        .otherwise(last2),
+    })
     ok = first3.isNotNull() & (first3 != "") & last3.isNotNull() & (last3 != "")
-    return F.when(ok, F.struct(
+    orcid_raw = F.col("orcid_raw")
+    return staged.filter(ok).select(
+        *keys,
         first3.alias("first_name"),
         last3.alias("last_name"),
-        orcid.alias("orcid"),
-        rank.alias("rank"),
-    ))
+        # F6: ORCID URL format (parser.py:66)
+        F.when(orcid_raw.isNotNull(),
+               F.concat(F.lit("https://orcid.org/"), orcid_raw)).alias("orcid"),
+        "rank",
+    )
+
+
+def _nest_authors(arts: DataFrame, authors: DataFrame,
+                  keys: list[str]) -> DataFrame:
+    """Attach each article's parsed authors as an `authors` array in the
+    original array order; an article with none gets []."""
+    grouped = (
+        authors.groupBy(*keys)
+        .agg(F.sort_array(F.collect_list(F.struct(
+            F.col("author_pos"),
+            F.struct("first_name", "last_name", "orcid", "rank").alias("p"),
+        ))).alias("ordered"))
+        .select(*keys, F.transform("ordered", lambda s: s["p"]).alias("authors"))
+    )
+    return arts.join(grouped, keys, "left").withColumn(
+        "authors", F.coalesce("authors", F.array().cast(
+            "array<struct<first_name:string,last_name:string,"
+            "orcid:string,rank:int>>")))
 
 
 def _explode_results(envelopes: DataFrame) -> DataFrame:
@@ -133,17 +169,7 @@ def parse_authors(envelopes: DataFrame) -> DataFrame:
         "doi", "result_idx",
         F.posexplode_outer(F.col("r")["authors"]).alias("author_pos", "a"),
     )
-    parsed = rows.select(
-        "doi", "result_idx", "author_pos",
-        _author_cols(F.col("a")).alias("p"),
-    ).filter(F.col("p").isNotNull())
-    return parsed.select(
-        "doi", "result_idx", "author_pos",
-        F.col("p.first_name").alias("first_name"),
-        F.col("p.last_name").alias("last_name"),
-        F.col("p.orcid").alias("orcid"),
-        F.col("p.rank").alias("rank"),
-    )
+    return _parse_author_rows(rows, ["doi", "result_idx", "author_pos"])
 
 
 def read_zenodo_v1_json(spark: SparkSession, path: str,
@@ -162,7 +188,7 @@ def parse_zenodo_v1(envelopes: DataFrame) -> DataFrame:
     attributes as @keys, text as $) predates the Graph API the reference's
     parser.py consumes; the reference exercises it via its zenodo fixture.
     Creators are adapted onto the v2 author struct so the full parse_author
-    cascade (_author_cols: pid/orcid coalesce, .title(), mutual-substring
+    cascade (_parse_author_rows: pid/orcid coalesce, .title(), mutual-substring
     repair, $-fallback split) applies unchanged — one behavior, two
     envelope dialects.
     """
@@ -213,17 +239,16 @@ def parse_zenodo_v1(envelopes: DataFrame) -> DataFrame:
         r["creator"].alias("creators"),
     )
     # Adapt v1 creator attrs onto the v2 author struct (@orcid wins over
-    # @orcid_pending, matching the pid-scheme precedence in _author_cols).
+    # @orcid_pending, matching the pid-scheme precedence in _parse_author_rows).
     pid_t = ("struct<id:struct<scheme:string,value:string>,"
              "provenance:string>")
-    exploded = arts.select(
+    c = F.col("c")
+    adapted = arts.select(
         "env_id", "result_idx",
         F.posexplode_outer("creators").alias("author_pos", "c"),
-    )
-    c = F.col("c")
-    adapted = exploded.select(
+    ).select(
         "env_id", "result_idx", "author_pos",
-        _author_cols(F.struct(
+        F.struct(
             c["@name"].alias("name"),
             c["@surname"].alias("surname"),
             F.coalesce(F.nullif(c["@orcid"], F.lit("")),
@@ -232,29 +257,11 @@ def parse_zenodo_v1(envelopes: DataFrame) -> DataFrame:
             c["@rank"].alias("rank"),
             F.lit(None).cast(pid_t).alias("pid"),
             c["$"].alias("$"),
-        )).alias("p"),
-    ).filter(F.col("p").isNotNull())
-    grouped = (
-        adapted.groupBy("env_id", "result_idx")
-        .agg(F.sort_array(F.collect_list(F.struct(
-            F.col("author_pos"), F.col("p"),
-        ))).alias("ordered"))
-        .select("env_id", "result_idx",
-                F.transform("ordered", lambda s: s["p"]).alias("authors"))
+        ).alias("a"),
     )
-    return (
-        arts.drop("creators")
-        .join(grouped, ["env_id", "result_idx"], "left")
-        .withColumn(
-            "authors",
-            F.coalesce(
-                "authors",
-                F.array().cast(
-                    "array<struct<first_name:string,last_name:string,"
-                    "orcid:string,rank:int>>"),
-            ))
-        .drop("env_id")
-    )
+    authors = _parse_author_rows(adapted, ["env_id", "result_idx", "author_pos"])
+    return _nest_authors(arts.drop("creators"), authors,
+                         ["env_id", "result_idx"]).drop("env_id")
 
 
 def parse_openalex(landed: DataFrame) -> DataFrame:
@@ -328,24 +335,4 @@ def parse_articles(envelopes: DataFrame) -> DataFrame:
         # F9: cited_by_count_date = current year (parser.py:187)
         F.year(F.current_date()).cast("int").alias("cited_by_count_date"),
     )
-    authors = parse_authors(envelopes)
-    grouped = (
-        authors.groupBy("doi", "result_idx")
-        .agg(F.sort_array(F.collect_list(F.struct(
-            F.col("author_pos"),
-            F.struct("first_name", "last_name", "orcid", "rank").alias("p"),
-        ))).alias("ordered"))
-        .select("doi", "result_idx",
-                F.transform("ordered", lambda s: s["p"]).alias("authors"))
-    )
-    return (
-        arts.join(grouped, ["doi", "result_idx"], "left")
-        .withColumn(
-            "authors",
-            F.coalesce(
-                "authors",
-                F.array().cast(
-                    "array<struct<first_name:string,last_name:string,"
-                    "orcid:string,rank:int>>"),
-            ))
-    )
+    return _nest_authors(arts, parse_authors(envelopes), ["doi", "result_idx"])

@@ -23,7 +23,7 @@ from __future__ import annotations
 
 import time
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.names import full_name_col, split_names_cols
@@ -128,108 +128,104 @@ def load_initial_data(spark: SparkSession, init_dir: str) -> dict[str, DataFrame
     }
 
 
+def output_uuid() -> Column:
+    """The output id mint rule: sha2(doi). Deterministic, so re-ingesting
+    a DOI yields the same id (the reference's match_doi-before-CREATE,
+    models.py:165-249); `outputs.uuid` and `author_of.output_uuid` both
+    use it, so the edges need no join to the outputs."""
+    return F.sha2(F.col("doi"), 256)
+
+
 def build_graph_from_envelopes(envelopes: DataFrame,
                                existing_authors: DataFrame,
-                               existing_outputs: DataFrame,
-                               countries: DataFrame | None = None,
-                               existing_refers_to: DataFrame | None = None,
-                               exact_names: bool = True,
-                               openalex_landed: DataFrame | None = None,
-                               upsert_mode: str = "insert",
+                               countries: DataFrame,
+                               openalex_landed: DataFrame,
                                ) -> dict[str, DataFrame]:
     """Entry point 1's per-DOI loop (reference create_graph_from_doi.py:195-256)
     as ONE composed plan: parse -> OpenAlex enrich -> resolve authors ->
-    upsert nodes -> author_of edges -> refers_to country tagging.
+    author_of edges -> refers_to country tagging.
+
+    Returns only this batch's rows, keyed by table: `outputs` (the parsed
+    outputs), `authors` (the authors resolved as created), `author_of` and
+    `refers_to`. Merging them with the stored tables is the caller's one
+    keyed upsert (cli.run_ingest -> operators.upsert.upsert_parquet), which
+    also drops the rows already stored.
 
     envelopes: OPENAIRE_SCHEMA frames with query_doi set (landed JSONL).
-    existing_authors/_outputs: current graph node tables (may be empty).
-    countries: country nodes for the J6/J7 tagging pass (optional).
-    openalex_landed: FETCH_SCHEMA rows from the openalex source; every
-    article is enriched with `openalex` id + `cited_by_count`
+    existing_authors: the current author node table (may be empty).
+    countries: country nodes for the J6/J7 tagging pass (may be empty).
+    Only this batch's outputs are tagged. That gives the same edges as
+    tagging every stored output whenever the stored outputs were tagged
+    against the same countries, which holds for every table state the CLI
+    produces: countries changes only under -i, and -i also wipes outputs.
+    openalex_landed: FETCH_SCHEMA rows from the openalex source (may be
+    empty); every article is enriched with `openalex` id + `cited_by_count`
     (reference parser.py:183-186) via a doi left join — a missing/errored
     response leaves nulls, the reference's `{"id": None}` except-branch.
     counts_by_year stays null for reference parity (parser.py:188 passes
     None; parse.parse_openalex exposes the parsed map for users who want
-    the real thing).
-
-    Output uuids are minted as sha2(doi) — deterministic, so re-ingesting
-    the same DOI is a no-op through the doi-keyed upsert (the reference's
-    match_doi-before-CREATE, models.py:165-249). exact_names=True scores
-    author verification with the reference difflib algorithm.
+    the real thing). Authors are verified with the reference difflib
+    algorithm.
     """
     from ..operators.resolve import resolve_authors
     from ..operators.theta import contains_tag
-    from ..operators.upsert import upsert
     from .parse import parse_articles, parse_authors, parse_openalex
 
-    articles = parse_articles(envelopes).withColumn(
-        "uuid", F.sha2(F.col("doi"), 256))
-    if openalex_landed is not None:
-        oa = parse_openalex(openalex_landed).drop("counts_by_year")
-        articles = articles.join(oa, "doi", "left")
-    else:
-        articles = (articles
-                    .withColumn("openalex", F.lit(None).cast("string"))
-                    .withColumn("cited_by_count", F.lit(None).cast("int")))
+    oa = parse_openalex(openalex_landed).drop("counts_by_year")
     # full OUTPUT_NODE column set, in schema order — no drift between the
     # declared node schema and what the pipeline materializes
-    outputs_new = articles.select(
-        "uuid", "doi", "title", "abstract", "journal", "issue", "volume",
-        "publication_year", "publication_month", "publication_day",
-        "publisher", "result_type", "resource_type",
+    outputs = parse_articles(envelopes).join(oa, "doi", "left").select(
+        output_uuid().alias("uuid"), "doi", "title", "abstract", "journal",
+        "issue", "volume", "publication_year", "publication_month",
+        "publication_day", "publisher", "result_type", "resource_type",
         "openalex", "cited_by_count", "cited_by_count_date",
         F.lit(None).cast("map<int,int>").alias("counts_by_year"))
-    # upsert_mode="update" is the -u flag: re-ingested DOIs REPLACE their
-    # existing rows instead of being dropped by the match-before-create
-    outputs = upsert(existing_outputs, outputs_new, ["doi"], mode=upsert_mode)
 
     # key includes result_idx: an envelope with multiple results has
     # independent author lists, and (doi, author_pos) alone would collide
-    # them (round-2 ADVICE; the reference loops per result, parser.py:111)
+    # them (round-2 ADVICE; the reference loops per result, parser.py:111).
+    # Both steps are materialized: the resolver reads its input in three
+    # branches, and `authors` and `author_of` both read its result, so
+    # each would otherwise re-run the parse and the resolution.
     flat = parse_authors(envelopes).withColumn(
         "in_id", F.concat_ws("#", "doi",
                              F.col("result_idx").cast("string"),
                              F.col("author_pos").cast("string")))
-    resolved = resolve_authors(flat, existing_authors, exact=exact_names)
-    created = (
+    resolved = resolve_authors(flat.localCheckpoint(), existing_authors,
+                               exact=True).localCheckpoint()
+    authors = (
         resolved.filter(F.col("resolution") == "created")
         .select(F.col("resolved_uuid").alias("uuid"),
                 "first_name", "last_name", "orcid",
                 F.lit(None).cast("string").alias("openalex"),
                 F.lit(None).cast("int").alias("rank"))
     )
-    authors = upsert(existing_authors, created, ["uuid"])
+    author_of = resolved.select(
+        F.col("resolved_uuid").alias("author_uuid"),
+        output_uuid().alias("output_uuid"), "rank").distinct()
 
-    author_of = (
-        resolved
-        .join(outputs.select("doi", F.col("uuid").alias("output_uuid")), "doi")
-        .select(F.col("resolved_uuid").alias("author_uuid"),
-                "output_uuid", "rank")
-        .distinct()
-    )
+    # J6+J7: case-sensitive CONTAINS, as the Cypher original — TWO passes,
+    # abstract and title (the reference runs two statements,
+    # create_graph_from_doi.py:294-329); union + distinct. Both passes are
+    # one broadcast nested-loop join each over the same outputs scan.
+    dim = countries.select(F.col("id").alias("country_id"), "name")
+    tagged = [
+        contains_tag(outputs.select(F.col("uuid").alias("output_uuid"), col),
+                     dim, col, "name", case_insensitive=False)
+        .select("output_uuid", "country_id")
+        for col in ("abstract", "title")]
+    refers_to = tagged[0].unionByName(tagged[1]).distinct()
+    return {"outputs": outputs, "authors": authors, "author_of": author_of,
+            "refers_to": refers_to}
 
-    tables = {"authors": authors, "outputs": outputs, "author_of": author_of}
-    if countries is not None:
-        # J6+J7: case-sensitive CONTAINS, as the Cypher original — TWO
-        # passes, abstract and title (the reference runs two statements,
-        # create_graph_from_doi.py:294-329); union + distinct, then the
-        # guard drops already-linked pairs. Both passes are one broadcast
-        # nested-loop join each over the same outputs scan.
-        dim = countries.select(F.col("id").alias("country_id"), "name")
-        tagged = None
-        for text_col in ("abstract", "title"):
-            t = contains_tag(
-                outputs.select(F.col("uuid").alias("output_uuid"), text_col),
-                dim, text_col, "name", case_insensitive=False)
-            t = t.select("output_uuid", "country_id")
-            tagged = t if tagged is None else tagged.unionByName(t)
-        refers_to = tagged.distinct()
-        if existing_refers_to is not None:
-            refers_to = refers_to.join(existing_refers_to,
-                                       ["output_uuid", "country_id"],
-                                       "left_anti")
-        tables["refers_to"] = refers_to
-    return tables
+
+def processed(update_metadata: bool) -> Column:
+    """The DOIs a run processes: every valid one under -u (the reference
+    re-processes existing DOIs, doi.py:219-224), else the valid ones not
+    yet stored. The work list, the scorecard and the per-DOI report all
+    use this one predicate."""
+    valid = F.col("valid_pattern")
+    return valid if update_metadata else valid & ~F.col("already_exists")
 
 
 def ingestion_metrics(tracker: DataFrame, update_metadata: bool = False,
@@ -244,22 +240,21 @@ def ingestion_metrics(tracker: DataFrame, update_metadata: bool = False,
     Returns a 1-row frame; total_time_seconds is driver-side wall clock
     (the only non-distributed metric, as in the reference).
     """
-    processed = (F.col("valid_pattern") if update_metadata
-                 else F.col("valid_pattern") & ~F.col("already_exists"))
+    proc = processed(update_metadata)
     conds = {
         "duplicated_submissions": F.col("n_submitted") > 1,
-        "processed_dois": processed,
+        "processed_dois": proc,
         "new_dois": F.col("valid_pattern") & ~F.col("already_exists"),
         "existing_dois": F.col("valid_pattern") & F.col("already_exists"),
-        "updated_existing_dois": processed & F.col("ingestion_success")
+        "updated_existing_dois": proc & F.col("ingestion_success")
         & F.col("already_exists"),
         "ingested_dois": F.col("ingestion_success"),
-        "metadata_pass": processed & F.col("ingestion_success"),
-        "metadata_failure": processed & ~F.col("ingestion_success"),
+        "metadata_pass": proc & F.col("ingestion_success"),
+        "metadata_failure": proc & ~F.col("ingestion_success"),
         "valid_pattern_dois": F.col("valid_pattern"),
         "invalid_pattern_dois": ~F.col("valid_pattern"),
-        "openalex_success": processed & F.col("openalex_metadata"),
-        "openaire_success": processed & F.col("openaire_metadata"),
+        "openalex_success": proc & F.col("openalex_metadata"),
+        "openaire_success": proc & F.col("openaire_metadata"),
     }
     aggs = [F.sum("n_submitted").cast("long").alias("submitted_dois")] + [
         F.sum(F.when(c, F.lit(1)).otherwise(F.lit(0))).cast("long").alias(n)

@@ -5,18 +5,25 @@ console main() (create_graph_from_doi.py:195-256) set-at-a-time."""
 from __future__ import annotations
 
 import json
+from pathlib import Path
 
 from research_index_backend_spark.cli import run_ingest
 from research_index_backend_spark.schemas import COUNTRY_NODE
 
-FIXTURE = "/root/reference/tests/fixtures/openaire_v2_simple.json"
+FIXTURE = str(Path(__file__).parent / "fixtures" /
+              "openaire_v2_simple.json")
 DOI = "10.5281/zenodo.4650794"
 
 
-def make_transport():
+def make_transport(title: str | None = None):
     """Closure factory: cloudpickle ships closures by value, so the fake
-    transport travels to executors without needing tests/ on their path."""
+    transport travels to executors without needing tests/ on their path.
+    `title` replaces the served record's mainTitle."""
     fixture_text = open(FIXTURE).read()
+    if title is not None:
+        record = json.loads(fixture_text)
+        record["results"][0]["mainTitle"] = title
+        fixture_text = json.dumps(record)
     doi = DOI
 
     def _transport(url: str, headers: dict) -> tuple[int, str]:
@@ -84,6 +91,42 @@ class TestCliIngest:
                             initialise=True, transport=make_transport()).collect()[0]
         assert report["processed_dois"] == 1  # not 'existing' post-wipe
         assert spark.read.parquet(str(data_dir / "outputs")).count() == 1
+
+
+    def test_update_mode_replaces_output_and_adds_tags(self, spark,
+                                                       tmp_path):
+        """-u (reference create_graph_from_doi.py:282, doi.py:219-224)
+        re-processes a stored DOI: its output row is replaced, its author
+        resolves to the stored one, and refers_to gains the new title's
+        country while keeping the stored edge."""
+        doi_file = tmp_path / "dois.txt"
+        doi_file.write_text(f"{DOI}\n")
+        data_dir = tmp_path / "graph"
+        data_dir.mkdir()
+        spark.createDataFrame(
+            [("LBR", "Liberia", "Republic of Liberia", "Republic_of_Liberia",
+              6.5, -9.5),
+             ("KEN", "Kenya", "Republic of Kenya", "Republic_of_Kenya",
+              0.0, 38.0)], COUNTRY_NODE) \
+            .write.parquet(str(data_dir / "countries"))
+
+        def table(name):
+            return spark.read.parquet(str(data_dir / name))
+
+        run_ingest(spark, str(doi_file), str(data_dir),
+                   transport=make_transport()).collect()
+        edges = {t: table(t).count() for t in ("authors", "author_of")}
+        title = "CCG Starter Data Kit: Kenya"
+        report = run_ingest(spark, str(doi_file), str(data_dir),
+                            update_metadata=True,
+                            transport=make_transport(title)).collect()[0]
+        assert report["updated_existing_dois"] == 1
+        outputs = table("outputs").collect()
+        assert len(outputs) == 1
+        assert outputs[0]["title"] == title
+        assert {t: table(t).count() for t in edges} == edges
+        assert {r["country_id"] for r in table("refers_to").collect()} == {
+            "LBR", "KEN"}
 
 
 class TestInitialiseReload:

@@ -1,21 +1,28 @@
 """End-to-end ingest: fixture envelope -> property-graph tables
 (the reference's entry point 1, create_graph_from_doi.py:195-256, as one
-composed plan) including author resolution, doi-keyed output upsert,
-author_of edges, and refers_to country tagging. Re-ingest must be a no-op
-(idempotence — the reference's match-before-create)."""
+composed plan) including author resolution, author_of edges, and
+refers_to country tagging. The pipeline returns only the batch's rows;
+upsert_parquet merges them with the stored tables, so re-ingest must be a
+no-op there (idempotence — the reference's match-before-create)."""
 
 from __future__ import annotations
+
+from pathlib import Path
 
 import pytest
 from pyspark.sql import functions as F
 
+from research_index_backend_spark.cli import TABLE_KEYS
+from research_index_backend_spark.ingest.fetch import FETCH_SCHEMA
 from research_index_backend_spark.ingest.parse import read_openaire_json
 from research_index_backend_spark.ingest.pipeline import (
     build_graph_from_envelopes,
 )
-from research_index_backend_spark.schemas import AUTHOR_NODE, OUTPUT_NODE
+from research_index_backend_spark.operators.upsert import upsert_parquet
+from research_index_backend_spark.schemas import AUTHOR_NODE, COUNTRY_NODE
 
-FIXTURE = "/root/reference/tests/fixtures/openaire_v2_simple.json"
+FIXTURE = str(Path(__file__).parent / "fixtures" /
+              "openaire_v2_simple.json")
 DOI = "10.5281/zenodo.4650794"
 
 
@@ -30,19 +37,20 @@ def empty_authors(spark):
     return spark.createDataFrame([], AUTHOR_NODE)
 
 
-def _empty_outputs(spark):
-    # the pipeline now materializes the full OUTPUT_NODE column set —
-    # the existing-table side must carry the same schema
-    return spark.createDataFrame([], OUTPUT_NODE)
+def _countries(spark, rows=()):
+    return spark.createDataFrame(list(rows), ["id", "name"]) if rows \
+        else spark.createDataFrame([], COUNTRY_NODE)
+
+
+def _no_openalex(spark):
+    return spark.createDataFrame([], FETCH_SCHEMA)
 
 
 class TestGraphBuild:
     def test_nodes_and_edges(self, spark, envelopes, empty_authors):
-        countries = spark.createDataFrame(
-            [("LBR", "Liberia"), ("KEN", "Kenya")], ["id", "name"])
-        g = build_graph_from_envelopes(
-            envelopes, empty_authors, _empty_outputs(spark),
-            countries=countries)
+        countries = _countries(spark, [("LBR", "Liberia"), ("KEN", "Kenya")])
+        g = build_graph_from_envelopes(envelopes, empty_authors, countries,
+                                       _no_openalex(spark))
         outputs = g["outputs"].collect()
         assert len(outputs) == 1
         assert outputs[0]["doi"] == DOI
@@ -63,19 +71,29 @@ class TestGraphBuild:
         refers = g["refers_to"].collect()
         assert [(r["country_id"]) for r in refers] == ["LBR"]
 
-    def test_reingest_idempotent(self, spark, envelopes, empty_authors):
-        g1 = build_graph_from_envelopes(envelopes, empty_authors,
-                                        _empty_outputs(spark))
-        # second ingest against the tables produced by the first
-        g2 = build_graph_from_envelopes(envelopes, g1["authors"],
-                                        g1["outputs"])
-        assert g2["outputs"].count() == 1
-        assert g2["authors"].count() == 1
+    def test_reingest_idempotent(self, spark, envelopes, empty_authors,
+                                 tmp_path):
+        """Batch 1's deltas, then batch 2's deltas from the same envelopes,
+        both merged through upsert_parquet: the second merge leaves every
+        table unchanged — same uuids, no second author or edge."""
+        countries = _countries(spark, [("LBR", "Liberia")])
+
+        def ingest(authors):
+            g = build_graph_from_envelopes(envelopes, authors, countries,
+                                           _no_openalex(spark))
+            for name, df in g.items():
+                upsert_parquet(spark, df, str(tmp_path / name), TABLE_KEYS[name])
+            return {name: sorted(map(tuple, spark.read.parquet(
+                str(tmp_path / name)).drop("counts_by_year").collect()))
+                for name in g}
+
+        first = ingest(empty_authors)
+        second = ingest(spark.read.parquet(str(tmp_path / "authors")))
+        assert {k: len(v) for k, v in first.items()} == {
+            "outputs": 1, "authors": 1, "author_of": 1, "refers_to": 1}
         # the known author resolves (matched, not re-created) and the edge
         # set stays identical
-        assert g2["author_of"].count() == 1
-        assert (g1["outputs"].select("uuid").collect()
-                == g2["outputs"].select("uuid").collect())
+        assert second == first
 
 
 class TestOpenAlexMerge:
@@ -87,8 +105,6 @@ class TestOpenAlexMerge:
                                             empty_authors):
         import json
 
-        from research_index_backend_spark.ingest.fetch import FETCH_SCHEMA
-
         body = json.dumps({"id": "https://openalex.org/W1",
                            "cited_by_count": 7,
                            "counts_by_year": [{"year": 2024,
@@ -96,8 +112,7 @@ class TestOpenAlexMerge:
         landed = spark.createDataFrame(
             [(DOI, "openalex", 200, None, body)], FETCH_SCHEMA)
         g = build_graph_from_envelopes(envelopes, empty_authors,
-                                       _empty_outputs(spark),
-                                       openalex_landed=landed)
+                                       _countries(spark), landed)
         out = g["outputs"].collect()[0]
         assert out["openalex"] == "https://openalex.org/W1"
         assert out["cited_by_count"] == 7
@@ -105,12 +120,8 @@ class TestOpenAlexMerge:
 
     def test_missing_openalex_leaves_nulls(self, spark, envelopes,
                                            empty_authors):
-        from research_index_backend_spark.ingest.fetch import FETCH_SCHEMA
-
-        landed = spark.createDataFrame([], FETCH_SCHEMA)
         g = build_graph_from_envelopes(envelopes, empty_authors,
-                                      _empty_outputs(spark),
-                                      openalex_landed=landed)
+                                       _countries(spark), _no_openalex(spark))
         out = g["outputs"].collect()[0]
         assert out["openalex"] is None and out["cited_by_count"] is None
 
@@ -121,11 +132,10 @@ class TestTitlePass:
         """reference create_graph_from_doi.py:294-329 runs TWO tagging
         statements — abstract and title. 'Starter Data Kit' appears (case
         sensitively) only in the title, not the lowercase abstract."""
-        countries = spark.createDataFrame(
-            [("XKT", "Starter Data Kit"), ("KEN", "Kenya")], ["id", "name"])
-        g = build_graph_from_envelopes(
-            envelopes, empty_authors, _empty_outputs(spark),
-            countries=countries)
+        countries = _countries(spark, [("XKT", "Starter Data Kit"),
+                                       ("KEN", "Kenya")])
+        g = build_graph_from_envelopes(envelopes, empty_authors, countries,
+                                       _no_openalex(spark))
         refers = g["refers_to"].collect()
         assert [(r["country_id"]) for r in refers] == ["XKT"]
 
@@ -152,10 +162,10 @@ class TestMultiResultEnvelope:
                           result("T2", "Bob", "Badger")],
               "query_doi": "10.1234/multi"}],
             OPENAIRE_SCHEMA)
-        g = build_graph_from_envelopes(env, _empty := spark.createDataFrame(
+        g = build_graph_from_envelopes(env, spark.createDataFrame(
             [], "uuid string, first_name string, last_name string, "
                 "orcid string, openalex string, rank int"),
-            _empty_outputs(spark))
+            _countries(spark), _no_openalex(spark))
         authors = {(r["first_name"], r["last_name"])
                    for r in g["authors"].collect()}
         assert authors == {("Alice", "Aardvark"), ("Bob", "Badger")}

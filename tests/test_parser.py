@@ -6,29 +6,32 @@ become column expressions here; the goldens pin identical outputs."""
 from __future__ import annotations
 
 from datetime import datetime
+from pathlib import Path
 
 import pytest
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructField, StructType
 
 from research_index_backend_spark.ingest.parse import (
-    _author_cols,
+    _parse_author_rows,
     parse_articles,
     parse_authors,
     read_openaire_json,
 )
 from research_index_backend_spark.schemas import AUTHOR_SCHEMA
 
-FIXTURE = "/root/reference/tests/fixtures/openaire_v2_simple.json"
+FIXTURE = str(Path(__file__).parent / "fixtures" /
+              "openaire_v2_simple.json")
 
 
 def _parse_one(spark, author_dict):
-    """Run one author dict through the _author_cols expression; returns the
-    struct row or None (the reference's parse_author -> None contract)."""
+    """Run one author dict through the staged parse cascade; returns the
+    parsed row or None (the reference's parse_author -> None contract:
+    the cascade drops an unparseable author)."""
     schema = StructType([StructField("a", AUTHOR_SCHEMA)])
     df = spark.createDataFrame([(author_dict,)], schema)
-    row = df.select(_author_cols(F.col("a")).alias("p")).collect()[0]["p"]
-    return None if row is None else row.asDict()
+    rows = _parse_author_rows(df, []).collect()
+    return rows[0].asDict() if rows else None
 
 
 class TestAuthorGoldens:

@@ -705,3 +705,70 @@ def test_probe_class_is_derived_from_inputs(spark):
     assert {n: info[n]["class"] for n in info} == {
         **{n: "dim-bound" for n in dim_bound},
         "flagship_contains_tag": "scaled"}
+
+
+# Ingest plan shape, on an empty envelope frame: optimized-plan characters
+# with expression ids masked (they grow over a session's life). With the
+# staged author cascade (ingest/parse.py) these measured 5,397
+# (parse_authors), 7,126 (parse_articles), 1,896 (outputs), 251 (authors),
+# 296 (author_of) and 1,810 (refers_to); the nested Column cascade it
+# replaced measured 113,056 (parse_authors) and 114,773 (parse_articles).
+# Each bound is 2x the staged measurement.
+INGEST_PLAN_CHARS = {
+    "parse_authors": 10_794, "parse_articles": 14_252, "outputs": 3_792,
+    "authors": 502, "author_of": 592, "refers_to": 3_620,
+}
+
+
+def _ingest_plans(spark) -> dict:
+    from research_index_backend_spark.ingest.fetch import FETCH_SCHEMA
+    from research_index_backend_spark.ingest.parse import (
+        parse_articles,
+        parse_authors,
+    )
+    from research_index_backend_spark.ingest.pipeline import (
+        build_graph_from_envelopes,
+    )
+    from research_index_backend_spark.schemas import (
+        AUTHOR_NODE,
+        COUNTRY_NODE,
+        OPENAIRE_SCHEMA,
+    )
+
+    def empty(schema):
+        return spark.createDataFrame([], schema)
+
+    env = empty(OPENAIRE_SCHEMA)
+    graph = build_graph_from_envelopes(env, empty(AUTHOR_NODE),
+                                       empty(COUNTRY_NODE), empty(FETCH_SCHEMA))
+    return {"parse_authors": parse_authors(env),
+            "parse_articles": parse_articles(env), **graph}
+
+
+def test_ingest_plan_sizes_are_bounded(spark):
+    sizes = {n: len(re.sub(r"#\d+", "", df._jdf.queryExecution()
+                           .optimizedPlan().toString()))
+             for n, df in _ingest_plans(spark).items()}
+    over = {n: (s, INGEST_PLAN_CHARS[n]) for n, s in sizes.items()
+            if s > INGEST_PLAN_CHARS[n]}
+    assert not over, f"ingest plan over its size bound (chars, bound): {over}"
+
+
+def test_parse_authors_evaluates_each_udf_call_once(spark):
+    """parse_authors has three Python UDF call sites (py_title_udf on name
+    and surname, clean_html_udf on the repaired surname); each must run
+    once per row, not again in a pushed-down filter or a re-inlined
+    stage."""
+    from research_index_backend_spark.functions.pytext import (
+        clean_html_udf,
+        py_title_udf,
+    )
+    from research_index_backend_spark.ingest.parse import parse_authors
+    from research_index_backend_spark.schemas import OPENAIRE_SCHEMA
+
+    plan = parse_authors(spark.createDataFrame([], OPENAIRE_SCHEMA)) \
+        ._jdf.queryExecution().executedPlan().toString()
+    names = "|".join((py_title_udf.__name__, clean_html_udf.__name__))
+    calls = sum(len(re.findall(rf"\b({names})\(", line))
+                for line in plan.split("\n") if "ArrowEvalPython" in line)
+    assert calls == 3, f"{calls} Python UDF calls in parse_authors:\n{plan}"

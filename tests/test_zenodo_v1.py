@@ -5,6 +5,7 @@ response.results.result[] XML-to-JSON dialect)."""
 from __future__ import annotations
 
 from datetime import datetime
+from pathlib import Path
 
 from pyspark.sql import functions as F
 
@@ -13,7 +14,8 @@ from research_index_backend_spark.ingest.parse import (
     read_zenodo_v1_json,
 )
 
-FIXTURE = "/root/reference/tests/fixtures/zenodo.json"
+FIXTURE = str(Path(__file__).parent / "fixtures" /
+              "zenodo.json")
 
 
 def test_zenodo_v1_golden(spark):
