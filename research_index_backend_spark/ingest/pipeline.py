@@ -173,13 +173,16 @@ def build_graph_from_envelopes(envelopes: DataFrame,
 
     oa = parse_openalex(openalex_landed).drop("counts_by_year")
     # full OUTPUT_NODE column set, in schema order — no drift between the
-    # declared node schema and what the pipeline materializes
+    # declared node schema and what the pipeline materializes. Materialized
+    # because `refers_to` reads it too: a lazy plan would run
+    # parse_articles' Python UDFs again inside the tagging.
     outputs = parse_articles(envelopes).join(oa, "doi", "left").select(
         output_uuid().alias("uuid"), "doi", "title", "abstract", "journal",
         "issue", "volume", "publication_year", "publication_month",
         "publication_day", "publisher", "result_type", "resource_type",
         "openalex", "cited_by_count", "cited_by_count_date",
-        F.lit(None).cast("map<int,int>").alias("counts_by_year"))
+        F.lit(None).cast("map<int,int>").alias("counts_by_year")
+    ).localCheckpoint()
 
     # key includes result_idx: an envelope with multiple results has
     # independent author lists, and (doi, author_pos) alone would collide

@@ -178,7 +178,7 @@ def upsert_parquet_bucketed(spark, incoming: DataFrame, path: str,
     Mechanics: incoming rows get their key bucket; the existing side is
     read partition-pruned to just the touched buckets (Catalyst prunes
     __kb=N dirs from the scan); the merged frame is written with dynamic
-    partition overwrite (spark.sql.sources.partitionOverwriteMode=dynamic),
+    partition overwrite (the per-write partitionOverwriteMode option),
     which replaces exactly the partitions present in the written data and
     leaves every other bucket's files untouched on disk.
 
@@ -203,13 +203,10 @@ def upsert_parquet_bucketed(spark, incoming: DataFrame, path: str,
         .filter(F.col(BUCKET_COL).isin(touched))  # partition pruning
     )
     merged = upsert(existing, inc, keys, mode=mode)
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        (merged.write.mode("overwrite").partitionBy(BUCKET_COL)
-         .parquet(str(target)))
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+    # per-write option, not the session conf: two foreachBatch queries
+    # sharing a session must not see each other's overwrite mode
+    (merged.write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+     .partitionBy(BUCKET_COL).parquet(str(target)))
 
 
 def read_bucketed(spark, path: str) -> DataFrame:

@@ -1,4 +1,4 @@
-"""Streaming distribution-drift monitor via applyInPandasWithState.
+"""Streaming distribution-drift monitor on the keyed-state operator.
 
 The batch catalog's drift statistics (ks_test_drift, mannwhitney_auc,
 distribution_drift) answer "did the distribution move" over a static
@@ -31,18 +31,18 @@ stateful ops):
 
 from __future__ import annotations
 
-from typing import Iterator
-
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import (
     LongType,
+    MapType,
     StringType,
     StructField,
     StructType,
 )
+
+from .stateful import keyed_state
 
 REF_N = 200       # reference window size (values)
 BIN_W = 4096      # cents per bin — domain-bounded bin table
@@ -55,24 +55,13 @@ DRIFT_OUTPUT_SCHEMA = StructType([
     StructField("tv_e6", LongType()),
 ])
 
-# state: emission seq, packed "bin:count" reference histogram, packed
-# cumulative current histogram
+# state: emission seq, reference histogram, cumulative current histogram
+# (bin -> count)
 DRIFT_STATE_SCHEMA = StructType([
     StructField("seq", LongType()),
-    StructField("ref", StringType()),
-    StructField("cur", StringType()),
+    StructField("ref", MapType(LongType(), LongType())),
+    StructField("cur", MapType(LongType(), LongType())),
 ])
-
-
-def _unpack(s: str) -> dict[int, int]:
-    if not s:
-        return {}
-    return {int(b): int(c) for b, c in
-            (part.split(":") for part in s.split(","))}
-
-
-def _pack(h: dict[int, int]) -> str:
-    return ",".join(f"{b}:{c}" for b, c in sorted(h.items()))
 
 
 def _tv_e6(ref: dict[int, int], cur: dict[int, int]) -> tuple[int, int, int]:
@@ -85,29 +74,18 @@ def _tv_e6(ref: dict[int, int], cur: dict[int, int]) -> tuple[int, int, int]:
     return n_ref, n_cur, (1000000 * num) // (2 * n_ref * n_cur)
 
 
-def _drift_fn(key: tuple, pdfs: Iterator[pd.DataFrame],
-              state: GroupState) -> Iterator[pd.DataFrame]:
-    seq, ref_s, cur_s = (state.get if state.exists else (0, "", ""))
-    ref = _unpack(ref_s)
-    cur = _unpack(cur_s)
-    n_ref = sum(ref.values())
-
-    chunks = list(pdfs)
-    allpdf = (pd.concat(chunks, ignore_index=True) if chunks
-              else pd.DataFrame())
-    if len(allpdf):
-        # one sort per group-batch (the heavy_hitters chunk rule)
-        allpdf = allpdf.sort_values(["ts", "event_id"])
-        bins = (allpdf["v_e2"].astype(int) // BIN_W).to_numpy()
-        take = max(0, REF_N - n_ref)
-        for b in bins[:take]:
-            ref[int(b)] = ref.get(int(b), 0) + 1
-        for b in bins[take:]:
-            cur[int(b)] = cur.get(int(b), 0) + 1
+def _drift_step(key: tuple, state: tuple, pdf: pd.DataFrame):
+    seq, ref, cur = state
+    ref, cur = dict(ref), dict(cur)
+    bins = (pdf["v_e2"].astype(int) // BIN_W).to_numpy()
+    take = max(0, REF_N - sum(ref.values()))
+    for b in bins[:take]:
+        ref[int(b)] = ref.get(int(b), 0) + 1
+    for b in bins[take:]:
+        cur[int(b)] = cur.get(int(b), 0) + 1
     seq += 1
-    state.update((seq, _pack(ref), _pack(cur)))
     n_ref, n_cur, tv = _tv_e6(ref, cur)
-    yield pd.DataFrame({
+    return (seq, ref, cur), pd.DataFrame({
         "event_type": [key[0]],
         "seq": [seq],
         "n_ref": [n_ref],
@@ -124,16 +102,9 @@ def drift_monitor_stream(events: DataFrame) -> DataFrame:
 
     Expects columns event_type, v_e2 (value cents), ts, event_id.
     """
-    return (
-        events.groupBy("event_type")
-        .applyInPandasWithState(
-            _drift_fn,
-            outputStructType=DRIFT_OUTPUT_SCHEMA,
-            stateStructType=DRIFT_STATE_SCHEMA,
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
-    )
+    return keyed_state(events, "event_type", _drift_step,
+                       DRIFT_STATE_SCHEMA, DRIFT_OUTPUT_SCHEMA,
+                       (0, {}, {}), "update", order=["ts", "event_id"])
 
 
 def drift_monitor_batch(events: DataFrame) -> DataFrame:

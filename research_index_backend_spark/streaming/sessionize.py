@@ -1,4 +1,4 @@
-"""Streaming gap-based sessionization via applyInPandasWithState.
+"""Streaming gap-based sessionization on the keyed-state operator.
 
 The batch catalog sessionizes with lag + cumulative sum
 (sessionize_events); a live pipeline needs the same 30-minute-gap
@@ -25,17 +25,16 @@ Design (oracle-free operator — batch parity pins it):
 
 from __future__ import annotations
 
-from typing import Iterator
-
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import (
     LongType,
     StructField,
     StructType,
 )
+
+from .stateful import keyed_state
 
 GAP_NS = 1800 * 10**9   # 30 minutes
 
@@ -54,31 +53,22 @@ SESSION_STATE_SCHEMA = StructType([
 ])
 
 
-def _session_fn(key: tuple, pdfs: Iterator[pd.DataFrame],
-                state: GroupState) -> Iterator[pd.DataFrame]:
-    seq, last_ns, session_id, cur_n = (
-        state.get if state.exists else (0, -1, 0, 0))
-
-    chunks = list(pdfs)
-    allpdf = (pd.concat(chunks, ignore_index=True) if chunks
-              else pd.DataFrame())
+def _session_step(key: tuple, state: tuple, pdf: pd.DataFrame):
+    seq, last_ns, session_id, cur_n = state
     closed: list[tuple[int, int]] = []
-    if len(allpdf):
-        allpdf = allpdf.sort_values(["ts_ns", "event_id"])
-        for ts in allpdf["ts_ns"].astype(int):
-            if last_ns < 0:
-                session_id, cur_n = 1, 1
-            elif ts - last_ns > GAP_NS:
-                closed.append((session_id, cur_n))
-                session_id += 1
-                cur_n = 1
-            else:
-                cur_n += 1
-            last_ns = ts
+    for ts in pdf["ts_ns"].astype(int):
+        if last_ns < 0:
+            session_id, cur_n = 1, 1
+        elif ts - last_ns > GAP_NS:
+            closed.append((session_id, cur_n))
+            session_id += 1
+            cur_n = 1
+        else:
+            cur_n += 1
+        last_ns = ts
     seq += 1
-    state.update((seq, last_ns, session_id, cur_n))
     rows = closed + ([(session_id, cur_n)] if session_id > 0 else [])
-    yield pd.DataFrame({
+    return (seq, last_ns, session_id, cur_n), pd.DataFrame({
         "user_id": [key[0]] * len(rows),
         "seq": [seq] * len(rows),
         "session_id": [s for s, _ in rows],
@@ -89,16 +79,9 @@ def sessionize_stream(events: DataFrame) -> DataFrame:
     """Streaming 30-minute-gap sessionization. Expects columns
     user_id, ts_ns, event_id; emits closed sessions (final counts)
     plus the open session's running count each micro-batch."""
-    return (
-        events.groupBy("user_id")
-        .applyInPandasWithState(
-            _session_fn,
-            outputStructType=SESSION_OUTPUT_SCHEMA,
-            stateStructType=SESSION_STATE_SCHEMA,
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
-    )
+    return keyed_state(events, "user_id", _session_step,
+                       SESSION_STATE_SCHEMA, SESSION_OUTPUT_SCHEMA,
+                       (0, -1, 0, 0), "update", order=["ts_ns", "event_id"])
 
 
 def sessionize_batch(events: DataFrame) -> DataFrame:

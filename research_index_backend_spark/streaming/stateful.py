@@ -1,40 +1,87 @@
-"""Custom stateful streaming operator via applyInPandasWithState.
+"""Custom stateful streaming operators: one keyed-state operator and
+the per-key steps that run on it.
 
 The reference has no streaming machinery at all (SURVEY §2.9); the built-in
 windows in streaming/windows.py cover tumbling/sliding/session. This module
-demonstrates the remaining Structured Streaming capability a training-data
-pipeline needs: ARBITRARY keyed state the built-ins can't express —
-here a per-key running seen-set used for cross-micro-batch deduplication
-(emit a row only the FIRST time its id arrives, no matter which batch it
-lands in), the streaming twin of the keyed upsert's anti-join.
+holds the remaining Structured Streaming capability a training-data
+pipeline needs: ARBITRARY keyed state the built-ins can't express.
+
+`keyed_state` is the one applyInPandasWithState call in the package (the
+Pregelix shape the graph family's superstep follows: the operator owns the
+per-key state step, each algorithm supplies only its update function). It
+owns three decisions:
+- the call: groupBy(key) with GroupStateTimeout.NoTimeout — every key
+  domain here is bounded or sketch-bounded, so state never needs expiry;
+- reading state: the stored value, or `initial` for a key seen first;
+- row order within a group: a key's micro-batch rows can arrive as
+  several Arrow chunks in shuffle order, so they are concatenated into
+  one frame and, when `order` is given, sorted ONCE. Sorting per chunk
+  would interleave out of event-time order and break batch-split
+  determinism.
+
+Each operator is then a pure `step(key, state, pdf) -> (new_state, out)`:
+`state` is the state tuple, `pdf` the key's rows for the micro-batch, and
+`out` a frame of output rows or None. Only non-empty output is emitted.
+
+State values are pickled through the state store in their declared types
+(`valueSchema.toInternal`), so map and array fields hold native dicts and
+lists of Python ints.
 
 Scale notes:
 - State is per-key (hash-partitioned by the grouping key) and lives in the
-  state store; memory is bounded by (#keys in state) not stream length —
-  set a state timeout for unbounded key domains (GroupStateTimeout), here
-  ProcessingTimeTimeout is left NoTimeout because the dedup domain == node
-  key domain, which the batch engine already holds as a table.
-- For very large seen-sets per key, swap the in-state python set for a
+  state store; memory is bounded by (#keys in state) x (per-key state),
+  and every step below keeps per-key state fixed or domain-bounded except
+  the exact dedup seen-set.
+- For very large seen-sets per key, swap the in-state id list for a
   Bloom filter (bounded bytes, one-sided error = rare duplicate emitted —
   downstream keyed upsert absorbs it). Noted, not needed at test scale.
-- applyInPandasWithState feeds each key's rows as Arrow batches (U1 "no
-  row-wise python" applies to the per-batch loop, which is vectorized
-  pandas filtering).
 """
 
 from __future__ import annotations
 
-from typing import Any, Iterator
+from typing import Any, Callable, Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import (
+    ArrayType,
     LongType,
+    MapType,
     StringType,
     StructField,
     StructType,
 )
+
+Step = Callable[[tuple, tuple, pd.DataFrame], tuple]
+
+
+def keyed_state(events: DataFrame, key: str, step: Step,
+                state_schema: StructType, output_schema: StructType,
+                initial: tuple, mode: str,
+                order: list[str] | None = None) -> DataFrame:
+    """Run `step` once per key and micro-batch with that key's carried
+    state: groupBy(key).applyInPandasWithState with no state timeout.
+
+    `initial` is the state of a key seen for the first time (one object
+    shared by every new key, so a step copies it before mutating);
+    `mode` is the output mode ("update" or "append"); `order` sorts the
+    key's micro-batch rows once before `step` sees them."""
+    def fn(k: tuple, pdfs: Iterator[pd.DataFrame],
+           state: GroupState) -> Iterator[pd.DataFrame]:
+        pdf = pd.concat(list(pdfs), ignore_index=True)
+        if order:
+            pdf = pdf.sort_values(order)
+        new_state, out = step(k, state.get if state.exists else initial,
+                              pdf)
+        state.update(new_state)
+        if out is not None and len(out):
+            yield out
+
+    return events.groupBy(key).applyInPandasWithState(
+        fn, outputStructType=output_schema, stateStructType=state_schema,
+        outputMode=mode, timeoutConf=GroupStateTimeout.NoTimeout)
+
 
 DEDUP_OUTPUT_SCHEMA = StructType([
     StructField("user_id", LongType()),
@@ -42,46 +89,27 @@ DEDUP_OUTPUT_SCHEMA = StructType([
     StructField("event_type", StringType()),
 ])
 
-# state = the sorted tuple of already-seen event ids per user
+# state = the sorted already-seen event ids per user
 DEDUP_STATE_SCHEMA = StructType([
-    StructField("seen", StringType()),   # comma-joined ids (Arrow-stable)
+    StructField("seen", ArrayType(LongType())),
 ])
 
 
-def _dedup_fn(key: tuple, pdfs: Iterator[pd.DataFrame],
-              state: GroupState) -> Iterator[pd.DataFrame]:
-    seen: set[int] = set()
-    if state.exists:
-        (packed,) = state.get
-        if packed:
-            seen = {int(x) for x in packed.split(",")}
-    out: list[pd.DataFrame] = []
-    for pdf in pdfs:
-        # vectorized: drop already-seen and intra-batch repeats (keep first)
-        pdf = pdf[~pdf["event_id"].isin(list(seen))]
-        pdf = pdf.drop_duplicates(subset=["event_id"], keep="first")
-        seen.update(int(x) for x in pdf["event_id"])
-        out.append(pdf[["user_id", "event_id", "event_type"]])
-    state.update((",".join(str(x) for x in sorted(seen)),))
-    for pdf in out:
-        if len(pdf):
-            yield pdf
+def _dedup_step(key: tuple, state: tuple, pdf: pd.DataFrame):
+    (seen,) = state
+    # vectorized: drop already-seen and intra-batch repeats (keep first)
+    pdf = pdf[~pdf["event_id"].isin(seen)].drop_duplicates(
+        subset=["event_id"], keep="first")
+    seen = sorted(set(seen).union(int(x) for x in pdf["event_id"]))
+    return (seen,), pdf[["user_id", "event_id", "event_type"]]
 
 
 def stateful_dedup_stream(events: DataFrame) -> DataFrame:
     """First-arrival-wins dedup on event_id within each user_id, across
-    micro-batches — state the built-in dropDuplicates cannot scope per-key
-    with custom packing. Returns the deduped event rows."""
-    return (
-        events.groupBy("user_id")
-        .applyInPandasWithState(
-            _dedup_fn,
-            outputStructType=DEDUP_OUTPUT_SCHEMA,
-            stateStructType=DEDUP_STATE_SCHEMA,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
-    )
+    micro-batches — state the built-in dropDuplicates cannot scope
+    per-key. Returns the deduped event rows."""
+    return keyed_state(events, "user_id", _dedup_step, DEDUP_STATE_SCHEMA,
+                       DEDUP_OUTPUT_SCHEMA, ([],), "append")
 
 
 def watermark_dedup_stream(events: DataFrame,
@@ -91,8 +119,8 @@ def watermark_dedup_stream(events: DataFrame,
                            watermark: str = "1 hour") -> DataFrame:
     """Native bounded-state streaming dedup: dropDuplicatesWithinWatermark.
 
-    The applyInPandasWithState dedup above keeps state FOREVER (exact,
-    unbounded keys); this is the built-in complement for the common case
+    The keyed-state dedup above keeps state FOREVER (exact, unbounded
+    keys); this is the built-in complement for the common case
     where duplicates only ever arrive within a bounded lateness window
     (at-least-once sources, retried producers): state is evicted once an
     event's timestamp falls behind the watermark, so state size is
@@ -126,8 +154,7 @@ FUNNEL_STATE_SCHEMA = StructType([
 ])
 
 
-def _funnel_fn(key: tuple, pdfs: "Iterator[pd.DataFrame]",
-               state: GroupState) -> "Iterator[pd.DataFrame]":
+def _funnel_step(key: tuple, state: tuple, pdf: pd.DataFrame):
     """Advance the per-user funnel state with each micro-batch; emit the
     completion row the FIRST time signup < view < purchase holds.
 
@@ -140,26 +167,20 @@ def _funnel_fn(key: tuple, pdfs: "Iterator[pd.DataFrame]",
     finalization instead of emit-on-first-truth; that variant belongs in
     a window-closed foreachBatch, noted here deliberately.
     """
-    mins: list[Any] = [None, None, None, 0]
-    if state.exists:
-        mins = list(state.get)
-    for pdf in pdfs:
-        for i, step in enumerate(FUNNEL_STEPS):
-            vals = pdf.loc[pdf["event_type"] == step, "ts_us"]
-            if len(vals):
-                m = int(vals.min())
-                mins[i] = m if mins[i] is None else min(mins[i], m)
+    mins: list[Any] = list(state)
+    for i, step in enumerate(FUNNEL_STEPS):
+        vals = pdf.loc[pdf["event_type"] == step, "ts_us"]
+        if len(vals):
+            m = int(vals.min())
+            mins[i] = m if mins[i] is None else min(mins[i], m)
     done = (mins[0] is not None and mins[1] is not None
             and mins[2] is not None and mins[0] < mins[1] < mins[2])
-    if done and not mins[3]:
-        mins[3] = 1
-        state.update(tuple(mins))
-        yield pd.DataFrame([{
-            "user_id": key[0], "t_signup": mins[0],
-            "t_view": mins[1], "t_purchase": mins[2]}])
-    else:
-        state.update(tuple(mins))
-        return
+    if not done or mins[3]:
+        return tuple(mins), None
+    mins[3] = 1
+    return tuple(mins), pd.DataFrame([{
+        "user_id": key[0], "t_signup": mins[0],
+        "t_view": mins[1], "t_purchase": mins[2]}])
 
 
 def streaming_funnel(events: DataFrame) -> DataFrame:
@@ -167,16 +188,8 @@ def streaming_funnel(events: DataFrame) -> DataFrame:
     (user_id, t_signup, t_view, t_purchase) once per user, the first
     micro-batch in which the ordered completion holds. Expects columns
     user_id, event_type, ts_us (micros)."""
-    return (
-        events.groupBy("user_id")
-        .applyInPandasWithState(
-            _funnel_fn,
-            outputStructType=FUNNEL_OUTPUT_SCHEMA,
-            stateStructType=FUNNEL_STATE_SCHEMA,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
-    )
+    return keyed_state(events, "user_id", _funnel_step, FUNNEL_STATE_SCHEMA,
+                       FUNNEL_OUTPUT_SCHEMA, (None, None, None, 0), "append")
 
 
 # ---------------------------------------------------------------------------
@@ -192,33 +205,23 @@ KMV_OUTPUT_SCHEMA = StructType([
     StructField("kmv_est", LongType()),
 ])
 
-# state = comma-joined ascending k-min hashes (Arrow-stable packing, same
-# discipline as the dedup seen-set)
+# state = the ascending k-min hashes
 KMV_STATE_SCHEMA = StructType([
-    StructField("mins", StringType()),
+    StructField("mins", ArrayType(LongType())),
 ])
 
 
-def _kmv_fn(key: tuple, pdfs: Iterator[pd.DataFrame],
-            state: GroupState) -> Iterator[pd.DataFrame]:
-    mins: set[int] = set()
-    if state.exists:
-        (packed,) = state.get
-        if packed:
-            mins = {int(x) for x in packed.split(",")}
-    for pdf in pdfs:
-        mins.update(int(x) for x in pdf["h"].unique())
-        if len(mins) > KMV_STREAM_K:
-            mins = set(sorted(mins)[:KMV_STREAM_K])
-    ordered = sorted(mins)
-    state.update((",".join(str(x) for x in ordered),))
+def _kmv_step(key: tuple, state: tuple, pdf: pd.DataFrame):
+    (mins,) = state
+    ordered = sorted(set(mins).union(int(x) for x in pdf["h"].unique())
+                     )[:KMV_STREAM_K]
     if len(ordered) < KMV_STREAM_K:
         est = len(ordered)
     else:
         est = int((KMV_STREAM_K - 1) * _KMV_SPACE // ordered[-1])
-    yield pd.DataFrame({"event_type": [key[0]],
-                        "n_kept": [len(ordered)],
-                        "kmv_est": [est]})
+    return (ordered,), pd.DataFrame({"event_type": [key[0]],
+                                     "n_kept": [len(ordered)],
+                                     "kmv_est": [est]})
 
 
 def kmv_distinct_stream(events: DataFrame) -> DataFrame:
@@ -241,16 +244,8 @@ def kmv_distinct_stream(events: DataFrame) -> DataFrame:
     with_hash = events.withColumn(
         "h", F.conv(F.substring(F.md5(F.col("user_id").cast("string")),
                                 1, 8), 16, 10).cast("bigint"))
-    return (
-        with_hash.groupBy("event_type")
-        .applyInPandasWithState(
-            _kmv_fn,
-            outputStructType=KMV_OUTPUT_SCHEMA,
-            stateStructType=KMV_STATE_SCHEMA,
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
-    )
+    return keyed_state(with_hash, "event_type", _kmv_step, KMV_STATE_SCHEMA,
+                       KMV_OUTPUT_SCHEMA, ([],), "update")
 
 
 # ---------------------------------------------------------------------------
@@ -271,31 +266,18 @@ TRANSITIONS_STATE_SCHEMA = StructType([
 ])
 
 
-def _transitions_fn(key: tuple, pdfs: Iterator[pd.DataFrame],
-                    state: GroupState) -> Iterator[pd.DataFrame]:
-    last = None
-    if state.exists:
-        (last,) = state.get
+def _transitions_step(key: tuple, state: tuple, pdf: pd.DataFrame):
+    (last,) = state
     counts: dict[tuple[str, str], int] = {}
-    # concat-then-sort: multi-chunk groups must process in ONE event-time
-    # order (same fix as the heavy-hitters op)
-    chunks = list(pdfs)
-    allpdf = (pd.concat(chunks, ignore_index=True) if chunks
-              else pd.DataFrame())
-    if len(allpdf):
-        allpdf = allpdf.sort_values(["ts", "event_id"])
-        for t in allpdf["event_type"]:
-            if last is not None:
-                k = (last, t)
-                counts[k] = counts.get(k, 0) + 1
-            last = t
-    state.update((last,))
-    if counts:
-        yield pd.DataFrame(
-            {"user_id": [key[0]] * len(counts),
-             "from_type": [k[0] for k in counts],
-             "next_type": [k[1] for k in counts],
-             "n": list(counts.values())})
+    for t in pdf["event_type"]:
+        if last is not None:
+            counts[(last, t)] = counts.get((last, t), 0) + 1
+        last = t
+    return (last,), pd.DataFrame(
+        {"user_id": [key[0]] * len(counts),
+         "from_type": [k[0] for k in counts],
+         "next_type": [k[1] for k in counts],
+         "n": list(counts.values())})
 
 
 def transitions_stream(events: DataFrame) -> DataFrame:
@@ -313,16 +295,9 @@ def transitions_stream(events: DataFrame) -> DataFrame:
     is how count deltas compose with ivm_update-style view
     maintenance. Expects columns user_id, event_id, event_type, ts.
     """
-    return (
-        events.groupBy("user_id")
-        .applyInPandasWithState(
-            _transitions_fn,
-            outputStructType=TRANSITIONS_OUTPUT_SCHEMA,
-            stateStructType=TRANSITIONS_STATE_SCHEMA,
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
-    )
+    return keyed_state(events, "user_id", _transitions_step,
+                       TRANSITIONS_STATE_SCHEMA, TRANSITIONS_OUTPUT_SCHEMA,
+                       (None,), "update", order=["ts", "event_id"])
 
 
 # ---------------------------------------------------------------------------
@@ -342,51 +317,31 @@ HH_OUTPUT_SCHEMA = StructType([
     StructField("seq", LongType()),
 ])
 
-# state = emission counter + packed "item:count:err" triples
-# (Arrow-stable packing, same discipline as the KMV min-set)
+# state = emission counter + item -> [count, err] counters
 HH_STATE_SCHEMA = StructType([
     StructField("seq", LongType()),
-    StructField("counters", StringType()),
+    StructField("counters", MapType(LongType(), ArrayType(LongType()))),
 ])
 
 
-def _hh_fn(key: tuple, pdfs: Iterator[pd.DataFrame],
-           state: GroupState) -> Iterator[pd.DataFrame]:
-    counters: dict[int, list[int]] = {}
-    seq = 0
-    if state.exists:
-        (seq, packed) = state.get
-        if packed:
-            for part in packed.split(","):
-                i, c, e = part.split(":")
-                counters[int(i)] = [int(c), int(e)]
-    # a group's micro-batch rows may arrive as MULTIPLE Arrow chunks in
-    # shuffle order — sorting per chunk would interleave out of event-time
-    # order and break the batch-split determinism invariant; concat the
-    # whole group's batch, sort ONCE
-    chunks = list(pdfs)
-    allpdf = (pd.concat(chunks, ignore_index=True) if chunks
-              else pd.DataFrame())
-    if len(allpdf):
-        allpdf = allpdf.sort_values(["ts", "event_id"])
-        for item in allpdf["user_id"].astype(int):
-            if item in counters:
-                counters[item][0] += 1
-            elif len(counters) < HH_CAPACITY:
-                counters[item] = [1, 0]
-            else:
-                # evict the minimum counter; ties break on LARGEST item
-                # id so the rule is total and engine-independent
-                victim = min(counters, key=lambda i: (counters[i][0], -i))
-                c = counters.pop(victim)[0]
-                counters[item] = [c + 1, c]
-    packed = ",".join(f"{i}:{c}:{e}"
-                      for i, (c, e) in sorted(counters.items()))
+def _hh_step(key: tuple, state: tuple, pdf: pd.DataFrame):
+    seq, stored = state
+    counters = {int(i): list(ce) for i, ce in stored.items()}
+    for item in pdf["user_id"].astype(int):
+        if item in counters:
+            counters[item][0] += 1
+        elif len(counters) < HH_CAPACITY:
+            counters[item] = [1, 0]
+        else:
+            # evict the minimum counter; ties break on LARGEST item
+            # id so the rule is total and engine-independent
+            victim = min(counters, key=lambda i: (counters[i][0], -i))
+            c = counters.pop(victim)[0]
+            counters[item] = [c + 1, c]
     seq += 1
-    state.update((seq, packed))
     items = sorted(counters.items(),
                    key=lambda kv: (-kv[1][0], kv[0]))
-    yield pd.DataFrame({
+    return (seq, counters), pd.DataFrame({
         "event_type": [key[0]] * len(items),
         "item": [i for i, _ in items],
         "est_count": [c for _, (c, _) in items],
@@ -412,13 +367,6 @@ def heavy_hitters_stream(events: DataFrame) -> DataFrame:
 
     Expects columns event_type, user_id, ts, event_id.
     """
-    return (
-        events.groupBy("event_type")
-        .applyInPandasWithState(
-            _hh_fn,
-            outputStructType=HH_OUTPUT_SCHEMA,
-            stateStructType=HH_STATE_SCHEMA,
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
-    )
+    return keyed_state(events, "event_type", _hh_step, HH_STATE_SCHEMA,
+                       HH_OUTPUT_SCHEMA, (0, {}), "update",
+                       order=["ts", "event_id"])

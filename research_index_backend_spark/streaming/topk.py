@@ -1,4 +1,4 @@
-"""Streaming per-key top-K heavy hitters via applyInPandasWithState.
+"""Streaming per-key top-K heavy hitters on the keyed-state operator.
 
 cms_heavy_hitters answers "what dominated" approximately over a static
 corpus; a live pipeline wants the running EXACT top-K as data flows —
@@ -9,8 +9,8 @@ exactness costs nothing that a sketch would save.
 
 Design (oracle-free operator — batch parity pins it, like the other
 stateful ops):
-- Per event_type, state holds the cumulative bin histogram (packed
-  "bin:count" string, the drift-monitor state idiom).
+- Per event_type, state holds the cumulative bin histogram (a
+  bin -> count map, the drift-monitor state idiom).
 - Each micro-batch folds its rows in and emits the key's current
   top-{TOPK_K} bins by (count DESC, bin ASC) — the deterministic
   tie-break every catalog top-k uses — plus the running total.
@@ -21,18 +21,18 @@ stateful ops):
 
 from __future__ import annotations
 
-from typing import Iterator
-
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import (
     LongType,
+    MapType,
     StringType,
     StructField,
     StructType,
 )
+
+from .stateful import keyed_state
 
 TOPK_K = 3        # emitted heavy hitters per key
 BIN_W = 4096      # cents per bin — domain-bounded state vector
@@ -46,48 +46,30 @@ TOPK_OUTPUT_SCHEMA = StructType([
     StructField("n_total", LongType()),
 ])
 
+# state: emission seq, cumulative histogram (bin -> count)
 TOPK_STATE_SCHEMA = StructType([
     StructField("seq", LongType()),
-    StructField("hist", StringType()),
+    StructField("hist", MapType(LongType(), LongType())),
 ])
 
 
-def _unpack(s: str) -> dict[int, int]:
-    if not s:
-        return {}
-    return {int(b): int(c) for b, c in
-            (part.split(":") for part in s.split(","))}
-
-
-def _pack(h: dict[int, int]) -> str:
-    return ",".join(f"{b}:{c}" for b, c in sorted(h.items()))
-
-
-def _topk_fn(key: tuple, pdfs: Iterator[pd.DataFrame],
-             state: GroupState) -> Iterator[pd.DataFrame]:
-    seq, hist_s = (state.get if state.exists else (0, ""))
-    hist = _unpack(hist_s)
-
-    chunks = list(pdfs)
-    allpdf = (pd.concat(chunks, ignore_index=True) if chunks
-              else pd.DataFrame())
-    if len(allpdf):
-        # Match the batch twin's Spark `div` (truncation toward ZERO),
-        # not pandas floor division: start from floor, then bump the
-        # inexact negative quotients up by one. Integer-exact for any
-        # int64 v_e2, so stream/batch parity holds even if the value
-        # domain ever goes negative (generated data is >= 0 today).
-        v = allpdf["v_e2"].astype("int64")
-        q = v // BIN_W
-        q = q + ((v < 0) & (v % BIN_W != 0)).astype("int64")
-        bins = q.value_counts()
-        for b, c in bins.items():
-            hist[int(b)] = hist.get(int(b), 0) + int(c)
+def _topk_step(key: tuple, state: tuple, pdf: pd.DataFrame):
+    seq, hist = state
+    hist = dict(hist)
+    # Match the batch twin's Spark `div` (truncation toward ZERO),
+    # not pandas floor division: start from floor, then bump the
+    # inexact negative quotients up by one. Integer-exact for any
+    # int64 v_e2, so stream/batch parity holds even if the value
+    # domain ever goes negative (generated data is >= 0 today).
+    v = pdf["v_e2"].astype("int64")
+    q = v // BIN_W
+    q = q + ((v < 0) & (v % BIN_W != 0)).astype("int64")
+    for b, c in q.value_counts().items():
+        hist[int(b)] = hist.get(int(b), 0) + int(c)
     seq += 1
-    state.update((seq, _pack(hist)))
     n_total = sum(hist.values())
     top = sorted(hist.items(), key=lambda bc: (-bc[1], bc[0]))[:TOPK_K]
-    yield pd.DataFrame({
+    return (seq, hist), pd.DataFrame({
         "event_type": [key[0]] * len(top),
         "seq": [seq] * len(top),
         "rank": list(range(1, len(top) + 1)),
@@ -102,16 +84,8 @@ def topk_monitor_stream(events: DataFrame) -> DataFrame:
     cumulative top bins each micro-batch. State is one domain-bounded
     histogram per key.
     """
-    return (
-        events.groupBy("event_type")
-        .applyInPandasWithState(
-            _topk_fn,
-            outputStructType=TOPK_OUTPUT_SCHEMA,
-            stateStructType=TOPK_STATE_SCHEMA,
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
-    )
+    return keyed_state(events, "event_type", _topk_step, TOPK_STATE_SCHEMA,
+                       TOPK_OUTPUT_SCHEMA, (0, {}), "update")
 
 
 def topk_monitor_batch(events: DataFrame) -> DataFrame:

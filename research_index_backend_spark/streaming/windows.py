@@ -145,29 +145,25 @@ def sessionized_stream(events: DataFrame,
 
 def foreach_batch_upsert(stream: DataFrame, target_path: str,
                          keys: list[str], checkpoint: str,
-                         n_buckets: int | None = 64):
+                         n_buckets: int = 64):
     """The reference's idempotent ingest loop as Structured Streaming:
     every micro-batch MERGEs into the Parquet target by key.
 
-    n_buckets (default 64) uses the partition-pruned bucketed sink
+    The sink is partition-pruned and bucketed
     (operators.upsert.upsert_parquet_bucketed): the target is
-    hash-partitioned by key bucket and a micro-batch rewrites only the
-    buckets it touches — O(touched/total * table) I/O per batch instead of
-    the full-table rewrite a continuous sink can't afford. Pass
-    n_buckets=None for the legacy whole-table swap (upsert_parquet).
+    hash-partitioned into n_buckets key buckets and a micro-batch rewrites
+    only the buckets it touches — O(touched/total * table) I/O per batch
+    instead of the full-table rewrite a continuous sink can't afford.
 
     Returns the started StreamingQuery; callers own awaitTermination/stop.
     """
-    from ..operators.upsert import upsert_parquet, upsert_parquet_bucketed
+    from ..operators.upsert import upsert_parquet_bucketed
 
     def _sink(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
-        if n_buckets is None:
-            upsert_parquet(batch_df.sparkSession, batch_df, target_path, keys)
-        else:
-            upsert_parquet_bucketed(batch_df.sparkSession, batch_df,
-                                    target_path, keys, n_buckets=n_buckets)
+        upsert_parquet_bucketed(batch_df.sparkSession, batch_df,
+                                target_path, keys, n_buckets=n_buckets)
 
     return (
         stream.writeStream

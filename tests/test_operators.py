@@ -336,6 +336,32 @@ class TestBucketedUpsert:
         got = {r["k"]: r["v"] for r in read_bucketed(spark, str(path)).collect()}
         assert got == {1: "a", 2: "b"}  # insert mode: existing row 1 wins
 
+    def test_overwrite_mode_is_per_write(self, spark, tmp_path, monkeypatch):
+        """Two foreachBatch queries may share a session, so the sink must
+        not set the session-wide partitionOverwriteMode: one query
+        restoring `static` while the other writes would turn that write
+        into a static overwrite that deletes every untouched bucket."""
+        from pyspark.sql.conf import RuntimeConfig
+
+        key = "spark.sql.sources.partitionOverwriteMode"
+        real_set = RuntimeConfig.set
+
+        def guarded_set(self, k, v):
+            assert k != key, f"session-wide {k}={v} set by the sink"
+            return real_set(self, k, v)
+
+        monkeypatch.setattr(RuntimeConfig, "set", guarded_set)
+        path = tmp_path / "tbl"
+        upsert_parquet_bucketed(
+            spark, spark.createDataFrame([(i, "a") for i in range(16)],
+                                         ["k", "v"]),
+            str(path), ["k"], n_buckets=8)
+        upsert_parquet_bucketed(
+            spark, spark.createDataFrame([(3, "B"), (20, "c")], ["k", "v"]),
+            str(path), ["k"], n_buckets=8, mode="update")
+        got = {r["k"]: r["v"] for r in read_bucketed(spark, str(path)).collect()}
+        assert got == {**{i: "a" for i in range(16)}, 3: "B", 20: "c"}
+
 
 class TestWindowOps:
     def test_group_top1_deterministic(self, spark):

@@ -454,6 +454,30 @@ def test_no_inline_tokenizer_copies_in_plans():
         f"tokens_sql): {bad}")
 
 
+def test_one_keyed_state_operator_in_package():
+    """streaming.stateful.keyed_state is the package's one
+    applyInPandasWithState call and the one place a key's Arrow chunks
+    are concatenated; a streaming operator supplies only its step."""
+    import os
+
+    pkg = os.path.join(os.path.dirname(os.path.dirname(
+        os.path.abspath(__file__))), "research_index_backend_spark")
+    calls, concats = [], []
+    for d, _, files in os.walk(pkg):
+        for f in sorted(files):
+            if not f.endswith(".py"):
+                continue
+            path = os.path.join(d, f)
+            rel = os.path.relpath(path, pkg)
+            src = open(path).read()
+            calls += [rel] * src.count(".applyInPandasWithState(")
+            if rel.startswith("streaming" + os.sep):
+                concats += [rel] * src.count("pd.concat(")
+    one = [os.path.join("streaming", "stateful.py")]
+    assert calls == one, f".applyInPandasWithState( calls: {calls}"
+    assert concats == one, f"pd.concat( in streaming/: {concats}"
+
+
 # Fact-table scan fan-out. A frame consumed by N downstream branches
 # re-evaluates its whole subtree once per consumer unless an exchange is
 # reused — at 100 TB that is N full passes over a fact table. The r10
@@ -752,6 +776,15 @@ def test_ingest_plan_sizes_are_bounded(spark):
     over = {n: (s, INGEST_PLAN_CHARS[n]) for n, s in sizes.items()
             if s > INGEST_PLAN_CHARS[n]}
     assert not over, f"ingest plan over its size bound (chars, bound): {over}"
+
+
+def test_refers_to_does_not_rerun_parse_udfs(spark):
+    """refers_to tags the batch's outputs after they are materialized, so
+    parse_articles' Python UDFs run once per batch, in the outputs
+    checkpoint, and not again inside the tagging."""
+    plan = _ingest_plans(spark)["refers_to"] \
+        ._jdf.queryExecution().optimizedPlan().toString()
+    assert plan.count("ArrowEvalPython") == 0, plan
 
 
 def test_parse_authors_evaluates_each_udf_call_once(spark):

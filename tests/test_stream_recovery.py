@@ -1,6 +1,7 @@
 """Checkpoint-recovery parity (r12 VERDICT next-round item 2): each
 stateful operator whose replay bugs would change ANSWERS — sessionize,
-funnel, the stream-stream interval join — is killed mid-run, restarted
+funnel, the stream-stream interval join, heavy_hitters (native map
+state) — is killed mid-run, restarted
 from its checkpointLocation, and must produce byte-identical final
 output to an uninterrupted run of the same file-replayed input.
 
@@ -39,7 +40,8 @@ def src_dir(recovery_mod, spark, tmp_path_factory):
     return src
 
 
-@pytest.mark.parametrize("op", ["sessionize", "funnel", "interval_join"])
+@pytest.mark.parametrize("op", ["sessionize", "funnel", "interval_join",
+                                "heavy_hitters"])
 def test_kill_and_resume_parity(recovery_mod, spark, tmp_path, src_dir, op):
     r = recovery_mod.run_recovery(spark, op, str(tmp_path), src_dir,
                                   stop_after=2)

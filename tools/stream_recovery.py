@@ -4,20 +4,24 @@ operators (r12 VERDICT next-round item 2).
 The long-run harness (tools/stream_longrun.py) proves flat state in
 UNINTERRUPTED sessions; nothing there proves an operator resumes
 correctly from its checkpoint after a kill. This harness does, for the
-three operators where a replay bug changes ANSWERS (not just
+four operators where a replay bug changes ANSWERS (not just
 latency):
 
 - sessionize (applyInPandasWithState, update mode — open-session
   counters must be restored, not re-zeroed);
 - funnel (applyInPandasWithState, append/emit-once mode — replay must
   not re-emit a completion already committed, nor lose one in flight);
+- heavy_hitters (applyInPandasWithState, update mode — the native
+  item -> [count, err] map state must restore to the same counter
+  table, so evictions after the kill match the uninterrupted run);
 - interval join (symmetric hash join — both watermark buffers must be
   rebuilt so matches spanning the kill point still emit).
 
 Protocol, per operator, on a deterministic file-replayed input
-(N parquet files, maxFilesPerTrigger=1 -> one file per micro-batch,
-identical batch boundaries across runs — what the checkpoint's offset
-log guarantees on restart):
+(N parquet files, maxFilesPerTrigger=1 -> one file per micro-batch;
+the offset log fixes the boundaries of the batches a run planned, but a
+restart may plan the remaining files into fewer, larger batches, so
+the final answers compared below never depend on the batch split):
 
 1. CONTROL: run start-to-finish, collecting every micro-batch's output
    through an idempotent foreachBatch parquet sink (one overwritten
@@ -29,7 +33,8 @@ log guarantees on restart):
 3. PARITY: the recovery run's final output must equal the control
    run's — exact rows for the append operators, last-emission-per-key
    for update-mode sessionize (which is additionally compared against
-   the batch twin).
+   the batch twin), and the final counter table (max seq per key) for
+   update-mode heavy_hitters.
 
 Usage:  python tools/stream_recovery.py [out_json]
 Writes BENCH_STREAM_RECOVERY.json with per-operator batch counts and
@@ -61,7 +66,7 @@ EVENT_SCHEMA = StructType([
     StructField("ts_sec", LongType()),
 ])
 
-OPS = ("sessionize", "funnel", "interval_join")
+OPS = ("sessionize", "funnel", "interval_join", "heavy_hitters")
 
 
 def gen_events(spark, src: str, n_files: int = 10,
@@ -101,6 +106,7 @@ def build_stream(spark, op: str, src: str):
         sessionize_stream,
     )
     from research_index_backend_spark.streaming.stateful import (
+        heavy_hitters_stream,
         streaming_funnel,
     )
     raw = (spark.readStream.schema(EVENT_SCHEMA)
@@ -113,10 +119,12 @@ def build_stream(spark, op: str, src: str):
         ev = raw.select("user_id", "event_type",
                         (F.col("ts_sec") * F.lit(10**6)).alias("ts_us"))
         return streaming_funnel(ev), "append"
+    ev = raw.select("event_id", "user_id", "event_type",
+                    F.timestamp_seconds("ts_sec").alias("ts"))
     if op == "interval_join":
-        ev = raw.select("event_id", "user_id", "event_type",
-                        F.timestamp_seconds("ts_sec").alias("ts"))
         return views_to_purchases_stream(ev, interval="1 hour"), "append"
+    if op == "heavy_hitters":
+        return heavy_hitters_stream(ev), "update"
     raise SystemExit(f"unknown operator {op!r}; known: {OPS}")
 
 
@@ -172,15 +180,26 @@ def _read_all(spark, out: str):
 def final_rows(spark, op: str, out: str) -> list[tuple]:
     """The run's final answer. Append ops: the union of all batches.
     Update-mode sessionize: last emission per (user_id, session_id) —
-    max (__batch, seq) — the documented consumer contract."""
+    max (__batch, seq) — the documented consumer contract. Update-mode
+    heavy_hitters: each event_type's max-seq emission, the whole
+    counter table (earlier emissions may hold items since evicted),
+    without seq: a restart may re-plan the remaining files into other
+    micro-batches, which changes how many emissions a key made but not
+    its final counters."""
+    from pyspark.sql import Window
     df = _read_all(spark, out)
     if op == "sessionize":
-        from pyspark.sql import Window
         w = Window.partitionBy("user_id", "session_id").orderBy(
             F.col("__batch").desc(), F.col("seq").desc())
         df = (df.withColumn("__rn", F.row_number().over(w))
               .filter(F.col("__rn") == 1)
               .select("user_id", "session_id", "n_events"))
+        return sorted(tuple(r) for r in df.collect())
+    if op == "heavy_hitters":
+        df = (df.withColumn("__last", F.max("seq").over(
+                  Window.partitionBy("event_type")))
+              .filter(F.col("seq") == F.col("__last"))
+              .select("event_type", "item", "est_count", "max_err"))
         return sorted(tuple(r) for r in df.collect())
     return sorted(tuple(r) for r in df.drop("__batch").collect())
 
@@ -215,7 +234,7 @@ def run_recovery(spark, op: str, workdir: str, src: str,
         f"({len(recovered)} vs {len(control)} rows)")
     # append ops double as an exactly-once check: emit-once semantics
     # mean no duplicate rows may survive the replayed batch
-    if op != "sessionize":
+    if op in ("funnel", "interval_join"):
         assert len(recovered) == len(set(recovered)), \
             f"{op}: duplicate emissions after recovery"
     return {"op": op, "parity": parity, "rows": len(control),
